@@ -20,7 +20,7 @@ move as the reference's shard-hash batching.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 
@@ -69,29 +69,30 @@ def shingle_hashes(shingle_col: Column) -> Column:
     return F.transform(shingle_col, lambda s: F.xxhash64(s))
 
 
-def minhash_signature(shingle_col: Column, num_hashes: int = 32,
+def minhash_signature(shingle_col: str, num_hashes: int = 32,
                       prehashed: bool = False) -> Column:
-    """K minhashes over a shingle array. Family member i =
-    xxhash64(base_hash, i) where base_hash = xxhash64(shingle) — each
-    shingle string is traversed ONCE; the K-member family derives from
-    codegen-cheap 8-byte long mixes (Spark chains fields: the base
-    hash seeds the int literal's 4-byte hash). Array<long> of length
-    ``num_hashes``; built-ins only.
+    """K minhashes over the shingle array column named ``shingle_col``.
+    Family member i = xxhash64(base_hash, i) where base_hash =
+    xxhash64(shingle) — each shingle string is traversed ONCE; the
+    K-member family derives from codegen-cheap 8-byte long mixes (Spark
+    chains fields: the base hash seeds the int literal's 4-byte hash).
+    Array<long> of length ``num_hashes``; built-ins only.
 
-    ``prehashed=True``: ``shingle_col`` is already the array<long> from
+    ``prehashed=True``: the column is already the array<long> from
     :func:`shingle_hashes` (the zero-recompute path).
+
+    The K members are one SQL expression: one py4j call instead of
+    several per member (building the Catalyst tree Column by Column cost
+    ~0.4 s of py4j round trips per plan); the resolved tree is the
+    same, so the hashes are too.
     """
-    base = shingle_col if prehashed else shingle_hashes(shingle_col)
-
-    def _mixer(seed: int):
-        return lambda h: F.xxhash64(h, F.lit(seed))
-
-    return F.array(
-        *[
-            F.array_min(F.transform(base, _mixer(i)))
-            for i in range(num_hashes)
-        ]
+    col = "`" + shingle_col.replace("`", "``") + "`"
+    base = col if prehashed else f"transform({col}, s -> xxhash64(s))"
+    members = ", ".join(
+        f"array_min(transform({base}, h -> xxhash64(h, {i})))"
+        for i in range(num_hashes)
     )
+    return F.expr(f"array({members})")
 
 
 def jaccard(a: Column, b: Column) -> Column:
@@ -125,24 +126,18 @@ def minhash_lsh_stages(
     base = docs_sh.withColumn(
         "sh_h", shingle_hashes(F.col("sh"))
     ).withColumn(
-        "sig", minhash_signature(F.col("sh_h"), num_hashes, prehashed=True)
+        "sig", minhash_signature("sh_h", num_hashes, prehashed=True)
     )
-    band_arrays = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.xxhash64(
-                    F.array_join(
-                        F.transform(
-                            F.slice(F.col("sig"), b * rows_per_band + 1, rows_per_band),
-                            lambda x: x.cast("string"),
-                        ),
-                        "_",
-                    )
-                ).alias("bucket"),
-            )
+    # B band keys as one SQL expression (see minhash_signature)
+    band_arrays = F.expr(
+        "array("
+        + ", ".join(
+            f"named_struct('band', {b}, 'bucket', xxhash64(array_join("
+            f"transform(slice(sig, {b * rows_per_band + 1}, {rows_per_band}),"
+            " x -> CAST(x AS STRING)), '_')))"
             for b in range(bands)
-        ]
+        )
+        + ")"
     )
     banded = base.select("id", F.explode(band_arrays).alias("bk")).select(
         "id", F.col("bk.band").alias("band"), F.col("bk.bucket").alias("bucket")
@@ -161,8 +156,14 @@ def minhash_lsh_stages(
     right = banded.select(
         F.col("band"), F.col("bucket"), F.col("id").alias("id_b")
     )
+    # sort-merge self-join: both sides are the window's output, already
+    # partitioned and sorted on (band, bucket), so it adds no exchange or
+    # sort. Left to AQE, a small input is re-planned as a broadcast join
+    # whose build side depends on stage timing: a plan that varies run to
+    # run recompiles its generated code.
     pairs = (
-        left.join(right, ["band", "bucket"])
+        left.hint("merge")
+        .join(right, ["band", "bucket"])
         .filter(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b")
         .dropDuplicates(["id_a", "id_b"])
@@ -458,9 +459,12 @@ def dedup_clusters(
     Iterative min-label propagation — the classic non-SQL-expressible
     iterative algorithm: each round, every node adopts the smallest label
     among itself and its neighbors; converges in O(diameter) rounds
-    (near-dup clusters are shallow, so ~3-4 rounds in practice). Each
-    round is one shuffle; lineage is truncated via localCheckpoint to
-    keep plans bounded.
+    (near-dup clusters are shallow, so ~3-4 rounds in practice). The
+    symmetric edge list is checkpointed once; then each round is ONE
+    Spark action: the eager ``localCheckpoint`` that truncates the
+    lineage also counts the labels that moved (an ``Observation`` of
+    ``nbr_min < cluster_id``), and the loop stops at the first round
+    where none did.
 
     If the loop exhausts ``max_iterations`` while labels are still
     changing (a chain-shaped component deeper than the budget), the
@@ -469,11 +473,15 @@ def dedup_clusters(
     instead; ``strict=False`` returns the partial labels for callers that
     accept over-segmentation (never under-merging: labels only decrease).
     """
+    # materialized once: rounds reuse the edges instead of re-running the
+    # scan, union and distinct shuffle, and with both join sides' sizes
+    # known up front the join plan no longer depends on which shuffle stage
+    # finished first (a plan that varies run to run recompiles its code)
     edges = (
         pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
         .union(pairs.select(F.col(id_b).alias("a"), F.col(id_a).alias("b")))
         .distinct()
-    )
+    ).localCheckpoint(eager=True)
     labels = (
         edges.select(F.col("a").alias("id"))
         .distinct()
@@ -486,25 +494,22 @@ def dedup_clusters(
             .groupBy(F.col("a").alias("id"))
             .agg(F.min("cluster_id").alias("nbr_min"))
         )
-        # carry the old label through the join so the convergence probe is
-        # a shuffle-free filter over the checkpointed partitions instead of
-        # a second labels join + job per round
-        new_labels = (
+        # the round's changed-label count rides the checkpoint's own job
+        moved = Observation()
+        labels = (
             labels.join(neighbor_min, "id", "left")
+            .observe(
+                moved,
+                F.count(F.when(F.col("nbr_min") < F.col("cluster_id"), 1)).alias("n"),
+            )
             .select(
                 "id",
-                F.col("cluster_id").alias("__old__"),
                 F.least(
                     F.col("cluster_id"), F.coalesce(F.col("nbr_min"), F.col("cluster_id"))
                 ).alias("cluster_id"),
             )
         ).localCheckpoint(eager=True)
-        changed = (
-            new_labels.filter(F.col("cluster_id") != F.col("__old__"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels.select("id", "cluster_id")
+        changed = moved.get["n"]
         if changed == 0:
             break
     if changed != 0:

@@ -1,8 +1,9 @@
 """Similarity search over embedding columns (array<float>).
 
-* brute-force cosine top-k — the exact baseline: cross join against a
-  (broadcast) query set, `zip_with`+`aggregate` dot products, window
-  top-k. Built-ins only.
+* brute-force cosine top-k — the exact baseline: one numpy pass per
+  Arrow batch against the collected query matrix under the JVM fold
+  law, window top-k. int8 top-k (`quantized_topk`) is the same pass
+  with an int8 candidate law.
 * LSH-bucketed ANN — the scale path: random-hyperplane signatures
   (sign of dot with H seeded pseudo-random planes derived from
   xxhash64 — fully deterministic, no driver-side randomness), bucket
@@ -47,102 +48,214 @@ def _cos_hoisted(a_vec: str, a_norm: str, b_vec: str, b_norm: str) -> Column:
     ).otherwise(F.lit(0.0))
 
 
-def _cosine_scored_numpy(c: DataFrame, q_named: DataFrame, k: int):
-    """(nid, qid, cosine_sim) for :func:`brute_force_topk` via
-    numpy-batched scoring under the EXACT JVM fold law, pruned to the
-    per-batch top ``k`` per query (top-k merges exactly).
+# --- exact and int8 top-k: one scorer ------------------------------------
 
-    Bit-exactness by construction: the fold on ``array<float>`` columns
-    multiplies in float32 and accumulates the widened products in
-    float64 strictly left-to-right — reproduced here as a sequential
-    outer-product accumulation over dimensions (one vectorized add per
-    dim, NOT ``np.sum``/BLAS whose pairwise blocking reorders the sum),
-    then the identical sqrt/mul/div tree. Verified bit-identical over
-    every (corpus × query) pair score at sf0.1. Returns ``None`` when
-    the query set is empty or too large for the driver-side matrix, and
-    the caller keeps the fold path. Degenerate rows (NULL or
-    dimension-mismatched vector) score 0.0, like all-zero vectors."""
+# query matrices above this many bytes (rows × d × itemsize,
+# summed over the float matrix and, for quantized_topk, the int8 codes
+# held as int64) keep the fold path
+_MAX_QUERY_MATRIX_BYTES = 64 << 20
+# score cells (corpus rows × queries) per numpy block in a Python worker
+_BLOCK_CELLS = 1 << 22
+
+
+def _fold_dot(a, b):
+    """Σ a_i·b_i over the last axis under the JVM law of :func:`dot` on
+    numeric arrays: each product in the operands' own precision (float32
+    for ``array<float>``), widened to float64 and added strictly left to
+    right — one vectorized add per dimension, NOT ``np.sum``/BLAS, whose
+    pairwise blocking reorders the sum. Bit-identical to the fold."""
     import numpy as np
 
-    qrows = q_named.limit(_MAX_DRIVER_QUERY_ROWS + 1).collect()
-    if not qrows or len(qrows) > _MAX_DRIVER_QUERY_ROWS:
-        return None
-    dim = max(
-        (len(r["qvec"]) for r in qrows if r["qvec"] is not None), default=0
-    )
-    if dim == 0:
-        return None
-    qids = [r["qid"] for r in qrows]
-    q_ok = np.array(
-        [r["qvec"] is not None and len(r["qvec"]) == dim for r in qrows]
-    )
-    Q32 = np.stack(
-        [
-            np.asarray(r["qvec"], dtype=np.float32)
-            if ok
-            else np.zeros(dim, dtype=np.float32)
-            for r, ok in zip(qrows, q_ok)
-        ]
-    )
+    acc = np.zeros(np.broadcast_shapes(a.shape[:-1], b.shape[:-1]))
+    for i in range(a.shape[-1]):
+        acc += a[..., i] * b[..., i]
+    return acc
 
-    def _seq_norm(a32):
-        n = np.zeros(a32.shape[0], dtype=np.float64)
-        for di in range(dim):
-            n += (a32[:, di] * a32[:, di]).astype(np.float64)
-        return np.sqrt(n)
 
-    qn = np.where(q_ok, _seq_norm(Q32), 0.0)
+def _vectors(vecs, dim: int):
+    """(V, ok, norm) for an Arrow list array of vectors: V is the n × dim
+    matrix in the element type, ``norm`` the fold-law norm and ``ok`` the
+    rows that are not degenerate; degenerate rows of V are zeroed."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    lens = pc.list_value_length(vecs).fill_null(-1).to_numpy()
+    right = lens == dim
+    ok = right.copy()
+    V = np.zeros((len(vecs), dim), dtype=vecs.type.value_type.to_pandas_dtype())
+    if dim and right.any():
+        flat = pc.list_flatten(vecs.filter(pa.array(right)))
+        V[right] = flat.fill_null(0).to_numpy(zero_copy_only=False).reshape(-1, dim)
+        if flat.null_count:
+            nulls = pc.is_null(flat).to_numpy(zero_copy_only=False)
+            ok[right] = ~nulls.reshape(-1, dim).any(axis=1)
+    with np.errstate(invalid="ignore"):  # wrapped int squares: NaN, as in the JVM
+        nrm = np.sqrt(_fold_dot(V, V))
+    ok &= (nrm > 0) & (nrm < np.inf)
+    V[~ok] = 0
+    return V, ok, nrm
+
+
+def _int8_codes(V, ok):
+    """:func:`quantize_int8` codes of the rows of V (as int64) and their
+    norms, exactly: scale = max|v|/127, HALF_UP rounding of v/scale
+    (Spark's ``round``), integer dot in float64 (exact below 2^53).
+    Degenerate (zeroed) rows get all-zero codes."""
+    import numpy as np
+
+    x = V.astype(np.float64)
+    scale = np.abs(x).max(axis=1, initial=0.0, keepdims=True) / 127.0
+    y = np.abs(x / np.where(ok[:, None], scale, 1.0))
+    r = np.floor(y)
+    r += (y - r) >= 0.5
+    codes = np.copysign(r, x).astype(np.int64)
+    return codes, np.sqrt((codes * codes).sum(axis=1).astype(np.float64))
+
+
+def _cos(num, nn, qn, mask):
+    """num / (nn·qn) where ``mask`` holds, else 0.0."""
+    import numpy as np
+
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return np.where(mask, num / (nn * qn), 0.0)
+
+
+def _fold_scored(c: DataFrame, q: DataFrame, quantized: bool):
+    """The kernel's output computed per pair by JVM folds over a broadcast
+    cross join — the path for an empty or over-cap query side. The
+    dimension d (longest query vector) is an aggregate of the query side."""
+
+    def side(df: DataFrame, vec: str, p: str) -> DataFrame:
+        nrm = norm(F.col(vec))
+        df = df.withColumn(f"__{p}n__", F.when((nrm > 0) & (nrm < float("inf")), nrm))
+        if quantized:
+            df = quantize_int8(df, vec).withColumn(
+                f"__{p}i__", F.sqrt(_int_dot(F.col("q"), F.col("q")))
+            ).withColumnRenamed("q", f"__{p}q__")
+        return df
+
+    q = q.crossJoin(q.agg(F.max(F.size("qvec")).alias("__d__")))
+    pairs = side(c, "nvec", "n").crossJoin(F.broadcast(side(q, "qvec", "q")))
+    ok = (
+        F.col("__nn__").isNotNull()
+        & F.col("__qn__").isNotNull()
+        & (F.size("nvec") == F.col("__d__"))
+        & (F.size("qvec") == F.col("__d__"))
+    )
+    sim = F.when(
+        ok, dot(F.col("nvec"), F.col("qvec")) / (F.col("__nn__") * F.col("__qn__"))
+    ).otherwise(F.lit(0.0))
+    if not quantized:
+        return pairs.select("nid", "qid", sim.alias("cosine_sim"))
+    approx = F.when(
+        ok,
+        _int_dot(F.col("__nq__"), F.col("__qq__"))
+        / (F.col("__ni__") * F.col("__qi__")),
+    ).otherwise(F.lit(0.0))
+    return pairs.select("nid", "qid", approx.alias("approx"), sim.alias("sim"))
+
+
+def _scored(c: DataFrame, q: DataFrame, keep: int, quantized: bool) -> DataFrame:
+    """Score every (corpus ``nid``/``nvec``, query ``qid``/``qvec``) pair
+    in one numpy pass per Arrow batch (``mapInArrow``), pruned to the
+    per-batch top ``keep`` per query by the candidate law. Top-k merges
+    exactly, so a window over the survivors picks the same rows as over
+    all pairs.
+
+    * ``quantized=False``: the law is the float cosine; emits
+      ``(nid, qid, cosine_sim)``.
+    * ``quantized=True``: the law is the int8 cosine (:func:`quantize_int8`
+      codes, exact integer dot); emits ``(nid, qid, approx, sim)`` where
+      ``sim`` is the float cosine of the kept rows.
+
+    Both float cosines are the same :func:`_fold_dot` law as
+    :func:`cosine`, so scores equal the fold path's bit for bit.
+
+    Degenerate-vector rule, the same on both paths: the dimension d is
+    that of the longest query vector, and a vector that is NULL, holds a
+    NULL element, has a length other than d, or whose fold-law norm is
+    zero, NaN or infinite (all-zero, NaN-containing, overflowing) makes
+    every pair it is in score 0.0, for the int8 score and the float
+    cosine alike.
+
+    Runs one eager collect of the query side (one Spark job, as Arrow) to
+    build the query matrix. The job's single task sees the whole query
+    side and passes its rows on only when their matrices fit
+    ``_MAX_QUERY_MATRIX_BYTES``, so an over-cap query side never reaches
+    the driver; it, like an empty one, is scored by :func:`_fold_scored`
+    instead."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    elem = to_arrow_type(q.schema["qvec"].dataType.elementType)
+    itemsize = elem.bit_width // 8 + (8 if quantized else 0)
+    # after coalesce(1) the partition id is constant, so this window spans
+    # the whole query side in one task with no exchange
+    whole = Window.partitionBy(F.spark_partition_id())
+    t = (
+        q.coalesce(1)
+        .select(
+            "qid",
+            "qvec",
+            F.count(F.lit(1)).over(whole).alias("__n__"),
+            F.greatest(F.max(F.size("qvec")).over(whole), F.lit(0)).alias("__d__"),
+        )
+        .filter(F.col("__n__") * F.col("__d__") * itemsize <= _MAX_QUERY_MATRIX_BYTES)
+        .select("qid", "qvec")
+        .toArrow()
+    )
+    if t.num_rows == 0:
+        return _fold_scored(c, q, quantized)
+    qvecs = t.column("qvec").combine_chunks()
+    dim = pc.max(pc.list_value_length(qvecs)).as_py() or 0
+    qids = t.column("qid").combine_chunks()
+    Q, q_ok, qn = _vectors(qvecs, dim)
+    if quantized:
+        Qc, qi = _int8_codes(Q, q_ok)
+    nq = len(qids)
+    block = max(1, _BLOCK_CELLS // nq)
     nid_t = c.schema["nid"].dataType.simpleString()
-    qid_t = q_named.schema["qid"].dataType.simpleString()
+    qid_t = q.schema["qid"].dataType.simpleString()
 
-    def gen(it):
-        import pandas as pd
+    def score(rb):
+        V, ok, nn = _vectors(rb.column("nvec"), dim)
+        mask = ok[:, None] & q_ok[None, :]
+        if quantized:
+            Vc, ni = _int8_codes(V, ok)
+            law = _cos((Vc @ Qc.T).astype(np.float64), ni[:, None], qi[None, :], mask)
+        else:
+            dots = _fold_dot(V[:, None, :], Q[None, :, :])
+            law = _cos(dots, nn[:, None], qn[None, :], mask)
+        nids = rb.column("nid").to_numpy(zero_copy_only=False)
+        keys = (np.broadcast_to(nids[:, None], law.shape), -law)
+        top = np.lexsort(keys, axis=0)[: min(keep, rb.num_rows)]  # m × nq
+        cols = {
+            "nid": rb.column("nid").take(pa.array(top.T.ravel())),
+            "qid": qids.take(pa.array(np.repeat(np.arange(nq), len(top)))),
+        }
+        picked = np.take_along_axis(law, top, axis=0)
+        if quantized:
+            cols["approx"] = picked.T.ravel()
+            # the _fold_dot law, gathered one dimension at a time: peak m × nq
+            dots = np.zeros(top.shape)
+            for i in range(dim):
+                dots += V[:, i][top] * Q[:, i]
+            sim = _cos(dots, nn[top], qn[None, :], ok[top] & q_ok[None, :])
+            cols["sim"] = sim.T.ravel()
+        else:
+            cols["cosine_sim"] = picked.T.ravel()
+        return pa.RecordBatch.from_pydict(cols)
 
-        for pdf in it:
-            n = len(pdf)
-            if n == 0:
-                continue
-            nids = pdf["nid"].to_numpy()
-            rows_ok = np.array(
-                [v is not None and len(v) == dim for v in pdf["nvec"]]
-            )
-            sim = np.zeros((n, len(qids)), dtype=np.float64)
-            if rows_ok.any():
-                V32 = np.stack(
-                    [
-                        np.asarray(v, dtype=np.float32)
-                        for v in pdf["nvec"][rows_ok]
-                    ]
-                )
-                nn = _seq_norm(V32)
-                D = np.zeros((V32.shape[0], len(qids)), dtype=np.float64)
-                for di in range(dim):
-                    D += (
-                        V32[:, di][:, None] * Q32[:, di][None, :]
-                    ).astype(np.float64)
-                den = nn[:, None] * qn[None, :]
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    val = D / den
-                sim[rows_ok] = np.where(den > 0, val, 0.0)
-            m = min(k, n)
-            out_nid, out_qid, out_sim = [], [], []
-            for j, qid in enumerate(qids):
-                col = sim[:, j]
-                order = np.lexsort((nids, -col))[:m]
-                out_nid.append(nids[order])
-                out_qid.extend([qid] * m)
-                out_sim.append(col[order])
-            yield pd.DataFrame(
-                {
-                    "nid": np.concatenate(out_nid),
-                    "qid": out_qid,
-                    "cosine_sim": np.concatenate(out_sim),
-                }
-            )
+    def kernel(batches):
+        for rb in batches:
+            for lo in range(0, rb.num_rows, block):
+                yield score(rb.slice(lo, block))
 
-    return c.mapInPandas(
-        gen, f"nid {nid_t}, qid {qid_t}, cosine_sim double"
-    )
+    scores = "approx double, sim double" if quantized else "cosine_sim double"
+    return c.mapInArrow(kernel, f"nid {nid_t}, qid {qid_t}, {scores}")
 
 
 def brute_force_topk(
@@ -154,44 +267,26 @@ def brute_force_topk(
     query_id: str = "qid",
     query_vec: str = "qvec",
 ) -> DataFrame:
-    """Exact top-k neighbors per query. The query side is broadcast —
-    the corpus is scanned once, no shuffle of the big side; per-query
-    ranking is a bounded window on (query, score).
+    """Exact top-k neighbors per query by cosine: the corpus is scanned
+    once with no shuffle of the big side; per-query ranking is a bounded
+    window on (query, score). Output ``(qid, nid, cosine_sim, rank)``.
 
-    Norms are projected per VECTOR before the cross join (same doubles
-    as computing them per pair — ``norm(a)*norm(b)`` either way — but
-    |corpus|+|queries| evaluations instead of |corpus|×|queries|: the
-    higher-order-function fold is the hot path of this operator).
-
-    r6 (guide §4.1): the |corpus|×|queries| fold evaluation runs as a
-    numpy batch in ``mapInPandas`` under the exact JVM fold law (see
-    :func:`_cosine_scored_numpy` — bit-identical scores, verified over
-    every pair at sf0.1), locally pruned to the per-batch top-k before
-    the ranking Exchange. Measured 3.1× end-to-end; empty/oversized
-    query sets keep the fold path."""
+    Scoring is :func:`_scored`: a numpy pass per Arrow batch under the
+    exact JVM fold law, pruned to the per-batch top ``k`` before the
+    ranking exchange. Building the plan runs one eager collect of the
+    query side (the query matrix); an empty or over-cap query side is
+    scored by a broadcast cross join of JVM folds with the same scores.
+    Degenerate vectors score 0.0 (the rule in :func:`_scored`)."""
     c = corpus.select(
         F.col(corpus_id).alias("nid"), F.col(corpus_vec).alias("nvec")
     )
-    q_named = queries.select(
+    q = queries.select(
         F.col(query_id).alias("qid"), F.col(query_vec).alias("qvec")
     )
-    scored = _cosine_scored_numpy(c, q_named, k)
-    if scored is None:
-        q = F.broadcast(q_named.withColumn("__qn__", norm(F.col("qvec"))))
-        d = F.col("__nn__") * F.col("__qn__")
-        scored = c.withColumn("__nn__", norm(F.col("nvec"))).crossJoin(
-            q
-        ).withColumn(
-            "cosine_sim",
-            F.when(d > 0, dot(F.col("nvec"), F.col("qvec")) / d).otherwise(
-                F.lit(0.0)
-            ),
-        )
-    w = Window.partitionBy("qid").orderBy(
-        F.desc("cosine_sim"), F.asc("nid")
-    )
+    w = Window.partitionBy("qid").orderBy(F.desc("cosine_sim"), F.asc("nid"))
     return (
-        scored.withColumn("rank", F.row_number().over(w))
+        _scored(c, q, k, quantized=False)
+        .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("qid", "nid", "cosine_sim", "rank")
     )
@@ -494,98 +589,6 @@ def _int_dot(a: Column, b: Column) -> Column:
     )
 
 
-_MAX_DRIVER_QUERY_ROWS = 16384
-
-
-def _quantized_scored_numpy(c: DataFrame, qs_df: DataFrame, candidates: int):
-    """(nid, qid, approx) for the int8 candidate scan via one numpy int
-    matmul per Arrow batch, pruned to the per-batch top ``candidates``
-    per query (exactly mergeable — see :func:`quantized_topk`). Returns
-    ``None`` when the query set is empty or too large to build the
-    driver-side matrix, and the caller keeps the JVM fold path."""
-    import numpy as np
-
-    qrows = qs_df.limit(_MAX_DRIVER_QUERY_ROWS + 1).collect()
-    if not qrows or len(qrows) > _MAX_DRIVER_QUERY_ROWS:
-        return None
-    dim = max(
-        (len(r["qq"]) for r in qrows if r["qq"] is not None), default=0
-    )
-    if dim == 0:
-        return None
-    qids = [r["qid"] for r in qrows]
-    q_ok = np.array(
-        [r["qq"] is not None and len(r["qq"]) == dim for r in qrows]
-    )
-    Q = np.stack(
-        [
-            np.asarray(r["qq"], dtype=np.int64)
-            if ok
-            else np.zeros(dim, dtype=np.int64)
-            for r, ok in zip(qrows, q_ok)
-        ]
-    )
-    qn = np.array(
-        [
-            r["__qn__"] if r["__qn__"] is not None else np.nan
-            for r in qrows
-        ],
-        dtype=np.float64,
-    )
-    qn = np.where(q_ok, qn, np.nan)  # degenerate queries score 0.0 below
-    nid_t = c.schema["nid"].dataType.simpleString()
-    qid_t = qs_df.schema["qid"].dataType.simpleString()
-
-    def gen(it):
-        import pandas as pd
-
-        for pdf in it:
-            n = len(pdf)
-            if n == 0:
-                continue
-            nids = pdf["nid"].to_numpy()
-            nn = pdf["__nn__"].to_numpy(dtype=np.float64, na_value=np.nan)
-            rows_ok = np.array(
-                [
-                    v is not None and len(v) == dim
-                    for v in pdf["nq"]
-                ]
-            )
-            approx = np.zeros((n, len(qids)), dtype=np.float64)
-            if rows_ok.any():
-                A = np.stack(
-                    [
-                        np.asarray(v, dtype=np.int64)
-                        for v in pdf["nq"][rows_ok]
-                    ]
-                )
-                D = (A @ Q.T).astype(np.float64)
-                nn_ok = nn[rows_ok]
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    val = D / (nn_ok[:, None] * qn[None, :])
-                mask = (nn_ok[:, None] > 0) & (qn[None, :] > 0)
-                approx[rows_ok] = np.where(mask, val, 0.0)
-            m = min(candidates, n)
-            out_nid, out_qid, out_ap = [], [], []
-            for j, qid in enumerate(qids):
-                col = approx[:, j]
-                order = np.lexsort((nids, -col))[:m]
-                out_nid.append(nids[order])
-                out_qid.extend([qid] * m)
-                out_ap.append(col[order])
-            yield pd.DataFrame(
-                {
-                    "nid": np.concatenate(out_nid),
-                    "qid": out_qid,
-                    "approx": np.concatenate(out_ap),
-                }
-            )
-
-    return c.mapInPandas(
-        gen, f"nid {nid_t}, qid {qid_t}, approx double"
-    )
-
-
 def quantized_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -597,93 +600,39 @@ def quantized_topk(
     query_vec: str = "qvec",
 ) -> DataFrame:
     """Two-stage ANN over int8-quantized vectors: (1) candidate
-    generation ranks by QUANTIZED cosine — int dot / int norms, exact
-    and order-independent in doubles, per-vector scales cancel in the
-    cosine — keeping ``candidates`` per query; (2) exact float re-rank
-    of the survivors emits the top ``k``.
+    generation ranks by QUANTIZED cosine (:func:`quantize_int8` codes,
+    integer dot exact and order-independent in doubles; per-vector
+    scales cancel in the cosine), keeping ``candidates`` per query;
+    (2) the exact float cosine re-ranks the survivors and emits the top
+    ``k``. Output: ``(qid, nid, approx_r, sim_r, rank)`` with 5-dp
+    rounding on both scores.
 
-    The scan stage touches only the int8 arrays (4× less memory
-    traffic than float32 brute force); the exact vectors are read for
-    ``candidates`` rows per query, not the whole corpus. Same
-    broadcast-queries / bounded-window shape as
-    :func:`brute_force_topk`. Output: ``(qid, nid, approx_r, sim_r,
-    rank)`` with 5-dp rounding on both scores.
-
-    Honest local measurement (sf0.1, 10k×100, local[32]): ~1.7× SLOWER
-    than float brute force — the per-element fold costs the same for
-    int as float and this sandbox is compute-bound, so the win only
-    shows where the quantized arrays are what's PERSISTED and scanned
-    (4× fewer bytes off disk/network at 10^10 vectors) or where the
-    engine vectorizes int8 (SIMD). The operator's value at scale is
-    the storage/IO geometry, not the local fold count.
-
-    r6 restructure (guide §8 — decide on light rows, re-attach the
-    payload): the candidate stage used to carry BOTH float vectors and
-    both int arrays through the per-query ranking Exchange for every
-    pair row (~1 KB/row) just so the ``candidates`` survivors per query
-    could be re-ranked; now the scan/rank stage ships only (nid, qid,
-    approx) and the survivors broadcast-join their float vectors back
-    by id (the candidate set is |queries|×candidates rows — tiny by
-    construction at any corpus size; the big side is never shuffled).
-    Scores are unchanged: same int dot (exact, order-independent),
-    same float re-rank on the same vectors.
-
-    r6, second pass (guide §4.1 — replace per-row folds with one
-    vectorized batch op): the candidate scan now runs as a
-    ``mapInPandas`` numpy int matmul — each Arrow batch of quantized
-    corpus rows scores against the whole query matrix with one BLAS
-    call and locally prunes to the per-batch top ``candidates`` per
-    query before the ranking Exchange (top-k is exactly mergeable, so
-    the global window over the per-batch survivors selects the
-    identical candidate set while the Exchange shrinks from
-    |corpus|×|queries| rows to |batches|×|queries|×candidates). Every
-    scalar op is the same IEEE op the JVM fold performed on exact
-    integers (int64 matmul < 2^53, then the identical sqrt/mul/div
-    tree), so the scores are bit-identical — measured 0 mismatches and
-    1.7× end-to-end vs the fold path at sf0.1. The query side is
-    collected to the driver to build the matrix: query batches are
-    bounded by the operator's existing broadcast contract; an
-    oversized (>16384) or empty query set falls back to the JVM fold
-    path. Degenerate corpus rows (NULL or dimension-mismatched
-    quantized vector) score 0.0, like all-zero vectors.
+    Both stages run in one :func:`_scored` numpy pass per Arrow batch:
+    the kernel quantizes the batch's float vectors, scores the int8
+    cosine against the whole query matrix, keeps the per-batch top
+    ``candidates`` per query and computes their float cosine under the
+    same fold law as :func:`brute_force_topk`, so ``sim_r`` equals
+    ``round(cosine_sim, 5)`` of brute force wherever both return a pair.
+    It emits light ``(nid, qid, approx, sim)`` rows, and the two windows
+    on ``qid`` (by ``approx``, then by ``sim``) share one exchange; no
+    vector crosses it. Building the plan runs one eager collect of the
+    query side; an empty or over-cap query side is scored by JVM folds
+    over a broadcast cross join with the same scores. Degenerate vectors
+    score 0.0 in both stages (the rule in :func:`_scored`).
     """
-    # per-VECTOR norms projected before the cross join — per-pair norm
-    # evaluation was |corpus|×|queries| higher-order folds for values
-    # that only depend on one side
-    corp_named = corpus.select(
+    c = corpus.select(
         F.col(corpus_id).alias("nid"), F.col(corpus_vec).alias("nvec")
     )
-    c = quantize_int8(corp_named, "nvec").select(
-        "nid", F.col("q").alias("nq")
-    ).withColumn("__nn__", F.sqrt(_int_dot(F.col("nq"), F.col("nq"))))
-    q_named = queries.select(
+    q = queries.select(
         F.col(query_id).alias("qid"), F.col(query_vec).alias("qvec")
     )
-    qs_df = quantize_int8(q_named, "qvec").select(
-        "qid", F.col("q").alias("qq")
-    ).withColumn("__qn__", F.sqrt(_int_dot(F.col("qq"), F.col("qq"))))
-    scored = _quantized_scored_numpy(c, qs_df, candidates)
-    if scored is None:
-        # fold fallback: empty or driver-unsafe query-set size
-        qs = F.broadcast(qs_df)
-        approx = F.when(
-            (F.col("__nn__") > 0) & (F.col("__qn__") > 0),
-            _int_dot(F.col("nq"), F.col("qq"))
-            / (F.col("__nn__") * F.col("__qn__")),
-        ).otherwise(F.lit(0.0))
-        scored = c.crossJoin(qs).select("nid", "qid", approx.alias("approx"))
     wc = Window.partitionBy("qid").orderBy(F.desc("approx"), F.asc("nid"))
-    cand = scored.withColumn("ar", F.row_number().over(wc)).filter(
-        F.col("ar") <= candidates
-    )
-    exact = (
-        corp_named.join(F.broadcast(cand.select("nid", "qid", "approx")), "nid")
-        .join(F.broadcast(q_named), "qid")
-        .withColumn("sim", cosine(F.col("nvec"), F.col("qvec")))
-    )
     wk = Window.partitionBy("qid").orderBy(F.desc("sim"), F.asc("nid"))
     return (
-        exact.withColumn("rank", F.row_number().over(wk).cast("int"))
+        _scored(c, q, candidates, quantized=True)
+        .withColumn("ar", F.row_number().over(wc))
+        .filter(F.col("ar") <= candidates)
+        .withColumn("rank", F.row_number().over(wk))
         .filter(F.col("rank") <= k)
         .select(
             "qid",

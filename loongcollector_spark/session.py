@@ -48,6 +48,14 @@ def get_spark(
         # Presto/SPL map semantics: duplicate map keys keep the last value
         .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
         .config("spark.ui.enabled", "false")
+        # Generated-class cache (static, JVM-wide). The default 100 is below
+        # one functions-layer unit's ~120 classes, and an LRU cycled by a
+        # larger working set never hits: every repeat recompiled them all.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
+        # Keep the whole-stage codegen stage id out of the generated class:
+        # AQE numbers stages in completion order, so with the id in the
+        # class name the same code recompiles whenever that order changes.
+        .config("spark.sql.codegen.useIdInClassName", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
     )
     for k, v in (extra_conf or {}).items():

@@ -133,7 +133,7 @@ class TestMinhashGolden:
         sh = ["alpha beta gamma", "beta gamma delta", "gamma delta epsilon"]
         num_hashes = 8
         df = spark.createDataFrame([(sh,)], "sh array<string>").select(
-            minhash_signature(F.col("sh"), num_hashes).alias("sig")
+            minhash_signature("sh", num_hashes).alias("sig")
         )
         got = df.collect()[0].sig
         expected = [
@@ -147,9 +147,9 @@ class TestMinhashGolden:
 
         sh = ["alpha beta", "beta gamma", "x"]
         df = spark.createDataFrame([(sh,)], "sh array<string>")
-        a = df.select(minhash_signature(F.col("sh"), 4).alias("sig"))
+        a = df.select(minhash_signature("sh", 4).alias("sig"))
         b = df.select(shingle_hashes(F.col("sh")).alias("hh")).select(
-            minhash_signature(F.col("hh"), 4, prehashed=True).alias("sig")
+            minhash_signature("hh", 4, prehashed=True).alias("sig")
         )
         assert a.collect()[0].sig == b.collect()[0].sig
 

@@ -429,6 +429,13 @@ class TestDedupClusters:
         labels = {r.id: r.cluster_id for r in dedup_clusters(pairs).collect()}
         assert set(labels.values()) == {0}
 
+    def test_no_pairs(self, spark):
+        from loongcollector_spark.functions.dedup import dedup_clusters
+
+        # no near-duplicates: the observed round runs on an empty frame
+        pairs = spark.createDataFrame([], "id_a long, id_b long")
+        assert dedup_clusters(pairs).collect() == []
+
 
 class TestBatchedResume:
     def test_stale_uncommitted_partition_not_counted(self, spark, tmp_path):

@@ -262,26 +262,14 @@ def main() -> None:
             )(corpus)
         ),
     )
-    # Continue/End multiline: default pandas FSM (flags JVM-side,
-    # Arrow-batched numpy scan) vs the r5 pure-SQL closed-form window
-    # engine (zero Python). Measured head-to-head: a tie on
-    # many-small-group inputs, pandas ~30% faster on one huge serial
-    # group; the row pair keeps the comparison honest per-artifact.
+    # Continue/End multiline: the pandas FSM (flags JVM-side,
+    # Arrow-batched numpy scan)
     timed(
         "multiline_fsm",
         lambda: noop_write(
             MergeMultilineLog(
                 SourceKey="text", GroupKey="conv_id", OrderKey="turn_idx",
                 StartPattern=r"^\{", EndPattern=r"\|",
-            )(corpus)
-        ),
-    )
-    timed(
-        "multiline_fsm_sql",
-        lambda: noop_write(
-            MergeMultilineLog(
-                SourceKey="text", GroupKey="conv_id", OrderKey="turn_idx",
-                StartPattern=r"^\{", EndPattern=r"\|", Engine="sql",
             )(corpus)
         ),
     )

@@ -126,10 +126,6 @@ def build_queries(spark, sf_dir: str, cpus: int, bench_rows: int):
             SourceKey="text", GroupKey="conv_id", OrderKey="turn_idx",
             StartPattern=r"^\{", EndPattern=r"\|",
         )(corpus),
-        "multiline_fsm_sql": lambda: MergeMultilineLog(
-            SourceKey="text", GroupKey="conv_id", OrderKey="turn_idx",
-            StartPattern=r"^\{", EndPattern=r"\|", Engine="sql",
-        )(corpus),
         "multiline_fsm_skew_chunked": lambda: MergeMultilineLog(
             SourceKey="text", GroupKey="conv_id", OrderKey="turn_idx",
             StartPattern=r"^\{", EndPattern=r"\|", ChunkRows=262_144,

@@ -334,77 +334,15 @@ def _scan_open_state(u, v, p0: bool):
 _AUTO_MIN_GROUP = 1_000_000
 
 
-def _open_region_head_single(o, s, c, e, has_s, has_c, has_e,
-                             merge_unmatched=False):
-    """For ONE group sorted by order: the order value of the first line
-    of the EOF-*open* region — the suffix whose merge outcome could
-    still change if more lines arrived — or None when the group's whole
-    output is final. Uses the same per-mode transition vectors as
-    :func:`_merge_block_vectorized` (p' = (p & u) | (~p & v)); the open
-    region is the event whose state is still open AFTER the last line.
-    Powers the cross-trigger ``ForeachBatchMultilineMerge`` (streaming
-    == batch equivalence; differential-tested across all modes and
-    chunkings in tests/test_sinks_monitor.py)."""
-    import numpy as np
-
-    n = len(o)
-    if n == 0:
-        return None
-    if has_e and not has_s and not has_c:
-        # only-End: events split after each end line; the trailing
-        # event (lines after the last 'e') is still collecting
-        idx = np.flatnonzero(e)
-        if len(idx) == 0:
-            return o[0]
-        return None if idx[-1] == n - 1 else o[idx[-1] + 1]
-    if has_c and has_e and not has_s:
-        # Continue+End: an open run exists iff the last line continues;
-        # its head is the first line of the trailing continue-run
-        if not c[n - 1]:
-            return None
-        j = n - 1
-        while j > 0 and c[j - 1]:
-            j -= 1
-        return o[j]
-    if has_s and has_e and not has_c:
-        u, v = ~e, s
-    elif has_s and has_c and not has_e:
-        u, v = (c | s), s
-    elif has_s and has_c and has_e:
-        u, v = c, s
-    else:  # start-only
-        u, v = np.ones(n, dtype=bool), s
-    p = _scan_open_state(u, v, False)
-    p_after = (p[n - 1] & u[n - 1]) | (~p[n - 1] & v[n - 1])
-    if not p_after:
-        if merge_unmatched and not (has_c or has_e):
-            # start-only 'merge' extension: p_after False ⟺ no start
-            # marker yet, so the WHOLE group is one still-growing merged
-            # leading event — fully open (ADVICE r4: without this,
-            # streaming emitted the head per trigger while batch merges
-            # it into one event)
-            return o[0]
-        return None
-    if has_s and has_c and not has_e:
-        boundary = s & (~p | ~c)
-    elif has_c or has_e:
-        boundary = ~p & s
-    else:
-        # start-only: a start line opens a new event even while open
-        boundary = s
-    idx = np.flatnonzero(boundary)
-    # p can only open via a boundary line, so idx is non-empty; fall
-    # back to the whole group (carry everything) if that ever breaks
-    return o[idx[-1]] if len(idx) else o[0]
-
-
 def _mode_uv(s, c, e, has_s, has_c, has_e):
-    """Per-mode transition vectors for the FSM state recurrence
-    p' = (p & u) | (~p & v), plus the state entering the FIRST line of a
-    group. For the scan modes p is the open-event state; for only-End /
-    Continue+End p is 'previous line was e / c' (a SET every line).
-    Shared by the skew-chunked path; the block FSM keeps its original
-    formulation and the two are pinned together by differential tests."""
+    """The per-mode law of the merge FSM
+    (ProcessorMergeMultilineLogNative.cpp:161-345) as transition vectors
+    of the state recurrence p' = (p & u) | (~p & v), plus ``p0``, the
+    state entering the FIRST line of a group. For the scan modes p is
+    the open-event state; for only-End / Continue+End p is 'previous
+    line was e / c' (a SET every line). Every engine — the block scan,
+    the chunked transfer functions, the streaming open-region head —
+    derives from this table and :func:`_mode_line_flags`."""
     import numpy as np
 
     n = len(s)
@@ -423,22 +361,59 @@ def _mode_uv(s, c, e, has_s, has_c, has_e):
 
 def _mode_line_flags(p, s, c, e, has_s, has_c, has_e):
     """(member, boundary, close_ok | None, standalone) per line given the
-    recurrence state ``p`` from :func:`_mode_uv`. Mirrors the mode
-    dispatch in :func:`_merge_block_vectorized`."""
+    recurrence state ``p`` from :func:`_mode_uv`: member lines belong to
+    a (possibly broken) event, a boundary line opens one, an event is
+    complete iff one of its lines is ``close_ok`` (None: always), and a
+    standalone line is a complete 1-line event outside any run
+    (Continue+End's lone end line, .cpp:230-238)."""
     import numpy as np
 
     zeros = np.zeros(len(p), dtype=bool)
     if has_e and not has_s and not has_c:
+        # always inside; events split after each end line
         return np.ones(len(p), dtype=bool), p, e, zeros
     if has_c and has_e and not has_s:
+        # open at continue; the first non-continue line closes (end
+        # decides); a lone end line outside is a complete event
         return p | c, ~p & c, p & ~c & e, ~p & ~c & e
     if has_s and has_e and not has_c:
+        # open at start, close (after appending) at end
         return p | s, ~p & s, p & e, zeros
     if has_s and has_c and not has_e:
+        # run of continues; a non-continue start line both closes the
+        # run and opens a new event
         return s | (p & c), s & (~p | ~c), None, zeros
     if has_s and has_c and has_e:
+        # continues extend, any non-continue closes (end decides)
         return p | s, ~p & s, p & ~c & e, zeros
-    return p | s, s, None, zeros   # start-only
+    # start-only: a start line opens a new event even while open
+    return p | s, s, None, zeros
+
+
+def _open_region_head_single(o, s, c, e, has_s, has_c, has_e,
+                             merge_unmatched=False):
+    """For ONE group sorted by order: the order value of the first line
+    of the EOF-*open* region — the suffix whose merge outcome could
+    still change if more lines arrived — or None when the group's whole
+    output is final. The output is final iff the FSM ends back in its
+    initial state ``p0``; otherwise the open region is the trailing
+    event, headed by the last boundary line. Powers the cross-trigger
+    ``ForeachBatchMultilineMerge`` (streaming == batch equivalence;
+    differential-tested across all modes and chunkings in
+    tests/test_sinks_monitor.py)."""
+    import numpy as np
+
+    if len(o) == 0:
+        return None
+    u, v, p0 = _mode_uv(s, c, e, has_s, has_c, has_e)
+    p = _scan_open_state(u, v, p0)
+    if ((p[-1] & u[-1]) | (~p[-1] & v[-1])) == p0:
+        # back in the initial state: nothing pending — except under the
+        # start-only 'merge' extension, where it means no start marker
+        # yet, so the WHOLE group is one still-growing leading event
+        return o[0] if merge_unmatched else None
+    _, boundary, _, _ = _mode_line_flags(p, s, c, e, has_s, has_c, has_e)
+    return o[np.flatnonzero(boundary)[-1]]
 
 
 def _merge_block_vectorized(g, o, v_series, s, c, e, has_s, has_c, has_e,
@@ -447,14 +422,15 @@ def _merge_block_vectorized(g, o, v_series, s, c, e, has_s, has_c, has_e,
     COMPLETE groups sorted by (group, order) — same semantics as
     :func:`_merge_rows_python` (the reference transcription of
     ProcessorMergeMultilineLogNative.cpp:161-345, kept for differential
-    tests), but O(lines) numpy: open/closed state via
+    tests), but O(lines) numpy: the :func:`_mode_uv` recurrence via
     :func:`_scan_open_state` (per-group reset by forcing the last line
-    of each group to a SET-closed transition — its own state is already
-    computed, only successors see the reset), event ids via cumsum of
-    boundary flags, completeness via a per-event close mark, and one
-    join call per EVENT (not per line). Processing whole sorted
-    partitions instead of one pandas call per tiny group is what makes
-    the pandas path cheap at 10^12-turn scale.
+    of each group to a SET to ``p0`` — its own state is already
+    computed, only successors see the reset), line flags from
+    :func:`_mode_line_flags`, event ids via cumsum of boundary flags,
+    completeness via a per-event close mark, and one join call per
+    EVENT (not per line). Processing whole sorted partitions instead of
+    one pandas call per tiny group is what makes the pandas path cheap
+    at 10^12-turn scale.
 
     Returns (groups, texts, orders, n_merged) lists."""
     import numpy as np
@@ -463,60 +439,14 @@ def _merge_block_vectorized(g, o, v_series, s, c, e, has_s, has_c, has_e,
     n = len(o)
     if n == 0:
         return [], [], [], []
-    start = np.empty(n, dtype=bool)
-    start[0] = True
-    start[1:] = g[1:] != g[:-1]
     last = np.empty(n, dtype=bool)
     last[-1] = True
-    last[:-1] = start[1:]
-    standalone = np.zeros(n, dtype=bool)
-    close_ok = None
-
-    def scan(u, v):
-        # force SET-closed on each group's final line so the next
-        # group's first line reads the initial (closed) state
-        u = u & ~last
-        v = v & ~last
-        return _scan_open_state(u, v, False)
-
-    if has_e and not has_s and not has_c:
-        # only-End: always inside; events split after each end line
-        p = np.ones(n, dtype=bool)
-        member = p
-        boundary = start | np.concatenate(([False], e[:-1]))
-        close_ok = e
-    elif has_s and has_e and not has_c:
-        # Start+End: open at start, close (after appending) at end
-        p = scan(~e, s)
-        member = p | s
-        boundary = ~p & s
-        close_ok = p & e
-    elif has_s and has_c and not has_e:
-        # Start+Continue: run of continues; a non-continue start line
-        # both closes the run and opens a new event
-        p = scan(c | s, s)
-        member = s | (p & c)
-        boundary = s & (~p | ~c)
-    elif has_s and has_c and has_e:
-        # Start+Continue+End: continues extend, any non-continue closes
-        # (end decides matched/unmatched)
-        p = scan(c, s)
-        member = p | s
-        boundary = ~p & s
-        close_ok = p & ~c & e
-    elif has_c and has_e:
-        # Continue+End: open at continue; first non-continue line closes
-        # (end decides); a lone end line outside is a complete event
-        p = np.concatenate(([False], c[:-1])) & ~start
-        member = p | c
-        boundary = ~p & c
-        close_ok = p & ~c & e
-        standalone = ~p & ~c & e
-    else:
-        # Start-only (the JVM fast path normally handles this)
-        p = scan(np.ones(n, dtype=bool), s)
-        member = p | s
-        boundary = s
+    last[:-1] = g[1:] != g[:-1]
+    u, v, p0 = _mode_uv(s, c, e, has_s, has_c, has_e)
+    p = _scan_open_state(np.where(last, p0, u), np.where(last, p0, v), p0)
+    member, boundary, close_ok, standalone = _mode_line_flags(
+        p, s, c, e, has_s, has_c, has_e
+    )
     evt = np.cumsum(boundary)
     if close_ok is None:
         complete_line = member
@@ -560,24 +490,12 @@ def _merge_block_vectorized(g, o, v_series, s, c, e, has_s, has_c, has_e,
     return groups, texts, orders, ns
 
 
-def _merge_rows_vectorized(o, v_series, s, c, e, has_s, has_c, has_e,
-                           single_line):
-    """Single-group wrapper of :func:`_merge_block_vectorized` (used by
-    the engine-parity tests); returns (texts, orders, n_merged)."""
-    import numpy as np
-
-    _, texts, orders, ns = _merge_block_vectorized(
-        np.zeros(len(o), dtype=np.int64), o, v_series, s, c, e,
-        has_s, has_c, has_e, single_line,
-    )
-    return texts, orders, ns
-
-
 def _merge_rows_python(rows, has_s, has_c, has_e, single_line):
     """Reference per-row transcription of the two-state FSM
     (ProcessorMergeMultilineLogNative.cpp:161-345). Retained verbatim for
-    differential testing of :func:`_merge_rows_vectorized`; production
-    uses the vectorized engine. rows: (order, text, s, c, e) sorted."""
+    differential testing of :func:`_merge_block_vectorized` and the
+    Spark plans; production uses the vectorized engine.
+    rows: (order, text, s, c, e) sorted."""
     out: list[tuple] = []
     events: list[tuple] = []  # (order, text)
 
@@ -668,27 +586,30 @@ class MergeMultilineLog(Processor):
     in the reference. ``UnmatchedContentTreatment``: 'single_line' emits
     unmatched rows as their own events; 'discard' drops them.
 
-    Physical plans:
-    * Start-only fast path — a window over (GroupKey → OrderKey) computing
-      a running sum of start flags (one shuffle on GroupKey), then groupBy
-      the assigned event id with ``array_join(collect_list(...))``; no
-      Python at all.
-    * Continue/End combinations — two interchangeable engines, pinned
-      equal by a mode×treatment differential:
+    The Start/Continue/End flags are computed JVM-side with ``rlike``
+    *before* any shuffle (:meth:`_flagged`), so Python sees only booleans
+    + strings. Physical plans:
 
-      - ``Engine='pandas'`` (default): the reference's two-state FSM is
-        inherently sequential per group, so it runs partition-level via
-        Arrow with a vectorized numpy scan. The expensive part (regex
-        matching) is still JVM-vectorized: Start/Continue/End flags are
-        computed with ``rlike`` *before* the shuffle, so Python sees
-        only booleans + strings — one shuffle on GroupKey.
-      - ``Engine='sql'``: the merge recurrence solved in closed form
-        with window functions (last-SET value xor toggle parity) —
-        the same single shuffle with ZERO Python (no Arrow transfer,
-        no Python workers). Measured: ties pandas on many-small-group
-        inputs, ~30% slower on one huge serial group (5 window passes
-        vs one numpy scan); pick it when the deployment should not
-        carry Python workers for this operator.
+    * Start-only — a window over (GroupKey → OrderKey) computing a
+      running sum of start flags (one shuffle on GroupKey), then one
+      groupBy on the assigned event id (:meth:`_assemble_events`); no
+      Python at all.
+    * Continue/End combinations — the reference's two-state FSM is
+      inherently sequential per group, so it runs partition-level via
+      Arrow: one shuffle on GroupKey, then the vectorized numpy scan
+      (:func:`_merge_block_vectorized`) over whole sorted partitions.
+    * ``ChunkRows`` set — groups larger than ChunkRows take the
+      chunk-parallel transfer-function path (:meth:`_chunked_core`), the
+      rest one of the plans above. Routing needs the group sizes, so
+      building the plan runs eager metadata jobs: an int ChunkRows runs
+      one aggregate collect; ``'auto'`` checkpoints the group sizes and
+      reads their max, then runs that collect only if it chunks. With
+      ``ChunkRows=None`` (the default) building the plan starts no
+      Spark job.
+
+    Every Continue/End plan derives from one statement of the per-mode
+    law (:func:`_mode_uv` + :func:`_mode_line_flags`), pinned against the
+    per-row reference transcription :func:`_merge_rows_python`.
     """
 
     def __init__(
@@ -701,7 +622,6 @@ class MergeMultilineLog(Processor):
         EndPattern: str | None = None,
         UnmatchedContentTreatment: str = "single_line",
         ChunkRows: int | None = None,
-        Engine: str = "pandas",
     ) -> None:
         if not (StartPattern or ContinuePattern or EndPattern):
             raise ValueError("at least one of Start/Continue/EndPattern required")
@@ -736,9 +656,6 @@ class MergeMultilineLog(Processor):
         if ChunkRows is not None and ChunkRows != "auto" and ChunkRows < 2:
             raise ValueError("ChunkRows must be >= 2 (or 'auto')")
         self.chunk_rows = ChunkRows
-        if Engine not in ("sql", "pandas"):
-            raise ValueError("Engine must be 'sql' or 'pandas'")
-        self.engine = Engine
 
     def __call__(self, df: DataFrame) -> DataFrame:
         if df.isStreaming:
@@ -756,11 +673,46 @@ class MergeMultilineLog(Processor):
             )
         if self.chunk_rows is not None:
             return self._call_fsm_chunked(df)
+        return self._plain(df)
+
+    def _plain(self, df: DataFrame) -> DataFrame:
+        """The single-shuffle plan for the configured patterns."""
         if self.continue_pattern or self.end_pattern:
-            if self.engine == "sql":
-                return self._call_fsm_sql(df)
             return self._call_fsm(df)
         return self._call_start_only(df)
+
+    def _flagged(self, df: DataFrame, *cols) -> DataFrame:
+        """(GroupKey, OrderKey, __v__ = source, __s__, __c__, __e__,
+        *cols): the per-line pattern flags every plan reads.
+        BoostRegexSearch is a *search*, not a full match; a NULL line
+        matches nothing. Start-only anchors its pattern (``^(?:…)``), on
+        every path, so plain, chunked and streaming agree."""
+        src = F.col(self.source_key)
+        start_only = not (self.continue_pattern or self.end_pattern)
+
+        def flag(pattern, anchored=False):
+            if not pattern:
+                return F.lit(False)
+            pat = f"^(?:{pattern})" if anchored else pattern
+            return F.coalesce(src.rlike(pat), F.lit(False))
+
+        return df.select(
+            self.group_key,
+            self.order_key,
+            src.alias("__v__"),
+            flag(self.start_pattern, start_only).alias("__s__"),
+            flag(self.continue_pattern).alias("__c__"),
+            flag(self.end_pattern).alias("__e__"),
+            *cols,
+        )
+
+    def _mode(self):
+        """(has_s, has_c, has_e): which patterns are set."""
+        return (
+            self.start_pattern is not None,
+            self.continue_pattern is not None,
+            self.end_pattern is not None,
+        )
 
     def open_region_heads(self, df: DataFrame) -> DataFrame:
         """(GroupKey, __open_head__) per group whose EOF tail is still
@@ -772,32 +724,9 @@ class MergeMultilineLog(Processor):
         Not a 10^12-row hot path: per-trigger inputs only."""
         from pyspark.sql import types as T
 
-        src = F.col(self.source_key)
-        has_s = self.start_pattern is not None
-        has_c = self.continue_pattern is not None
-        has_e = self.end_pattern is not None
-
-        def flag(pattern):
-            if not pattern:
-                return F.lit(False)
-            return F.coalesce(src.rlike(pattern), F.lit(False))
-
-        # start-only fast path anchors the start pattern (_call_start_only)
-        start_expr = (
-            F.coalesce(
-                src.rlike(f"^(?:{self.start_pattern})"), F.lit(False)
-            )
-            if (has_s and not has_c and not has_e)
-            else flag(self.start_pattern)
-        )
+        has_s, has_c, has_e = self._mode()
         gk, ok = self.group_key, self.order_key
-        flagged = df.select(
-            gk,
-            ok,
-            start_expr.alias("__s__"),
-            flag(self.continue_pattern).alias("__c__"),
-            flag(self.end_pattern).alias("__e__"),
-        )
+        flagged = self._flagged(df).drop("__v__")
         in_schema = dict(zip(df.schema.names, df.schema.fields))
         out_schema = T.StructType(
             [
@@ -828,220 +757,17 @@ class MergeMultilineLog(Processor):
 
         return flagged.groupBy(gk).applyInPandas(fn, out_schema)
 
-    def _call_fsm_sql(self, df: DataFrame) -> DataFrame:
-        """Pure-SQL FSM engine (r5): the merge recurrence
-        p' = (p & u) | (~p & v) is solved in closed form with window
-        functions — every line is a SET (u==v, to value u), a TOGGLE
-        (~u & v), or IDENTITY, so the state after line i is the u-value
-        at the last SET xor the parity of TOGGLEs since it (the same
-        closed form as the numpy `_scan_open_state`, expressed as
-        last(...ignorenulls) + cumulative sums over ONE window spec).
-        Per-mode member/boundary/close flags and the event-id cumsum are
-        plain column expressions, and the final groupBy(group, event)
-        re-uses the window's hash partitioning (subset key → no second
-        exchange), so the whole operator is ONE shuffle with zero
-        Python — no Arrow transfer, no pandas. Differentially pinned
-        against the pandas engine and the reference FSM transcription.
-        """
-        src = F.col(self.source_key)
-        has_s = self.start_pattern is not None
-        has_c = self.continue_pattern is not None
-        has_e = self.end_pattern is not None
-        single_line = self.unmatched != "discard"
-        gk, okey, sk = self.group_key, self.order_key, self.source_key
-
-        def flag(pattern):
-            return (
-                F.coalesce(src.rlike(pattern), F.lit(False))
-                if pattern
-                else F.lit(False)
-            )
-
-        flagged = df.select(
-            gk,
-            okey,
-            src.alias("__v__"),
-            flag(self.start_pattern).alias("__s__"),
-            flag(self.continue_pattern).alias("__c__"),
-            flag(self.end_pattern).alias("__e__"),
-        )
-        s, c, e = F.col("__s__"), F.col("__c__"), F.col("__e__")
-        # per-mode transition vectors (mirrors _mode_uv)
-        if has_e and not has_s and not has_c:
-            u, v, p0 = e, e, True
-        elif has_c and has_e and not has_s:
-            u, v, p0 = c, c, False
-        elif has_s and has_e and not has_c:
-            u, v, p0 = ~e, s, False
-        elif has_s and has_c and not has_e:
-            u, v, p0 = c | s, s, False
-        else:  # start+continue+end
-            u, v, p0 = c, s, False
-        w = Window.partitionBy(gk).orderBy(okey)
-        wincl = w.rowsBetween(Window.unboundedPreceding, 0)
-        # only-End / Continue+End SET the state every line (u == v), so
-        # p is just the lagged flag — skip the toggle-parity machinery
-        set_every_line = (has_e and not has_s and not has_c) or (
-            has_c and has_e and not has_s
-        )
-        if set_every_line:
-            step3 = flagged.withColumn("__p__", F.lag(u, 1, p0).over(w))
-        else:
-            is_set = u == v
-            toggle = ~u & v
-            step1 = flagged.select(
-                "*",
-                F.sum(toggle.cast("long")).over(wincl).alias("__tog__"),
-            ).withColumn("__setu__", F.when(is_set, u))
-            # p_after(i) = u@lastSET(≤i) xor parity of toggles since it;
-            # both last()s share one window spec → one Window node
-            step2 = step1.select(
-                "*",
-                F.coalesce(
-                    F.last("__setu__", ignorenulls=True).over(wincl),
-                    F.lit(p0),
-                ).alias("__base__"),
-                F.coalesce(
-                    F.last(
-                        F.when(
-                            F.col("__setu__").isNotNull(), F.col("__tog__")
-                        ),
-                        ignorenulls=True,
-                    ).over(wincl),
-                    F.lit(0),
-                ).alias("__tset__"),
-            )
-            # boolean xor as != (both sides non-null by construction)
-            p_after = F.col("__base__") != (
-                ((F.col("__tog__") - F.col("__tset__")) % 2) == 1
-            )
-            step3 = step2.withColumn(
-                "__p__", F.lag(p_after, 1, p0).over(w)
-            )
-        p = F.col("__p__")
-        # per-mode line flags (mirrors _mode_line_flags)
-        standalone = F.lit(False)
-        if has_e and not has_s and not has_c:
-            member, boundary, close_ok = F.lit(True), p, e
-        elif has_c and has_e and not has_s:
-            member, boundary, close_ok = p | c, ~p & c, p & ~c & e
-            standalone = ~p & ~c & e
-        elif has_s and has_e and not has_c:
-            member, boundary, close_ok = p | s, ~p & s, p & e
-        elif has_s and has_c and not has_e:
-            member, boundary, close_ok = s | (p & c), s & (~p | ~c), F.lit(True)
-        else:
-            member, boundary, close_ok = p | s, ~p & s, p & ~c & e
-        # one pass: event id + a per-line ordinal (unique negative ids
-        # for single-emitted lines, so ONE groupBy covers merged events,
-        # broken events, unmatched singles, and standalone completes —
-        # no union, no recomputation of the window chain).
-        # r6: completeness moved INTO the aggregation (max over the
-        # event's member-close flags) — the per-row completeness window
-        # needed an extra Sort(gk, evt) + Window pass; now the groupBy
-        # decides merged-vs-singles per group and an array generate
-        # emits either shape (same single-pass trick as
-        # _assemble_events). Plan diff: 1 Sort + 1 Window removed.
-        final_evt = F.when(member, F.sum(boundary.cast("long")).over(wincl)).otherwise(
-            -F.row_number().over(w)
-        )
-        step4 = step3.select(
-            gk,
-            okey,
-            "__v__",
-            member.alias("__m__"),
-            standalone.alias("__sa__"),
-            (member & close_ok).alias("__mcl__"),
-            final_evt.alias("__fe__"),
-        )
-        aggd = step4.groupBy(gk, "__fe__").agg(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(F.col(okey).alias("o"), F.col("__v__").alias("v"))
-                )
-            ).alias("pieces"),
-            F.max("__mcl__").alias("__complete__"),
-            F.max("__m__").alias("__is_m__"),
-            F.max("__sa__").alias("__has_sa__"),
-        )
-        # 1-piece events (incl. singles) keep the raw value — null
-        # preserved, matching every other engine's contract
-        merged_struct = F.struct(
-            F.when(F.size("pieces") == 1, F.element_at("pieces", 1)["v"])
-            .otherwise(
-                F.array_join(
-                    F.transform(
-                        F.col("pieces"),
-                        lambda x: F.coalesce(x["v"], F.lit("")),
-                    ),
-                    "\n",
-                )
-            )
-            .alias("v"),
-            F.element_at(F.col("pieces"), 1)["o"].alias("o"),
-            F.size("pieces").cast("long").alias("n"),
-        )
-        singles = F.transform(
-            F.col("pieces"),
-            lambda x: F.struct(
-                x["v"].alias("v"), x["o"].alias("o"),
-                F.lit(1).cast("long").alias("n"),
-            ),
-        )
-        empty = F.slice(singles, 1, 0)
-        # member events: merged when complete, else per-line singles
-        # under 'single_line' / dropped under 'discard'; non-member
-        # singleton groups: standalone always emits, unmatched only
-        # under 'single_line' — identical keep law to the previous
-        # per-row filter (mc | sa | single_line & (um | broken-member))
-        outs = (
-            F.when(F.col("__is_m__") & F.col("__complete__"), F.array(merged_struct))
-            .when(
-                F.col("__is_m__"),
-                singles if single_line else empty,
-            )
-            .otherwise(
-                singles
-                if single_line
-                else F.when(F.col("__has_sa__"), singles).otherwise(empty)
-            )
-        )
-        return (
-            aggd.select(gk, F.explode(outs).alias("__x__"))
-            .select(
-                gk,
-                F.col("__x__")["v"].alias(sk),
-                F.col("__x__")["o"].alias(okey),
-                F.col("__x__")["n"].alias("n_merged"),
-            )
-        )
-
     def _call_fsm(self, df: DataFrame) -> DataFrame:
         from pyspark.sql import types as T
 
-        src = F.col(self.source_key)
-        has_s = self.start_pattern is not None
-        has_c = self.continue_pattern is not None
-        has_e = self.end_pattern is not None
+        has_s, has_c, has_e = self._mode()
         single_line = self.unmatched != "discard"
         group_key, order_key, source_key = (
             self.group_key,
             self.order_key,
             self.source_key,
         )
-
-        def flag(pattern):
-            # BoostRegexSearch is a *search*, not a full match
-            return F.coalesce(src.rlike(pattern), F.lit(False)) if pattern else F.lit(False)
-
-        flagged = df.select(
-            group_key,
-            order_key,
-            src.alias("__v__"),
-            flag(self.start_pattern).alias("__s__"),
-            flag(self.continue_pattern).alias("__c__"),
-            flag(self.end_pattern).alias("__e__"),
-        )
+        flagged = self._flagged(df)
         in_schema = dict(zip(df.schema.names, df.schema.fields))
         out_schema = T.StructType(
             [
@@ -1162,26 +888,12 @@ class MergeMultilineLog(Processor):
                 F.col("__n__") > chunk_rows
             )
         if chunk_rows is None:
-            if self.continue_pattern or self.end_pattern:
-                # honor Engine='sql' here too (ADVICE r5: this branch
-                # ignored it, breaking the no-Python-workers guarantee)
-                return (
-                    self._call_fsm_sql(df)
-                    if self.engine == "sql"
-                    else self._call_fsm(df)
-                )
-            return self._call_start_only(df)
+            return self._plain(df)
         stat_rows = big_stats.limit(100_001).collect()
         if not stat_rows:
             # no group exceeds ChunkRows → the 3-shuffle machinery (and
             # the routing joins) buy nothing; run the plain path whole
-            if self.continue_pattern or self.end_pattern:
-                return (
-                    self._call_fsm_sql(df)
-                    if self.engine == "sql"
-                    else self._call_fsm(df)
-                )
-            return self._call_start_only(df)
+            return self._plain(df)
         group_mins = None
         if numeric_ok and len(stat_rows) <= 100_000 and all(
             r["__mx__"] - r["__mn__"] + 1 == r["__n__"] for r in stat_rows
@@ -1200,15 +912,7 @@ class MergeMultilineLog(Processor):
             big = F.broadcast(big_stats.select(g))
         small_df = df.join(big, g, "left_anti")
         big_df = df.join(big, g, "left_semi")
-        if self.continue_pattern or self.end_pattern:
-            plain = (
-                self._call_fsm_sql(small_df)
-                if self.engine == "sql"
-                else self._call_fsm(small_df)
-            )
-        else:
-            plain = self._call_start_only(small_df)
-        return plain.unionByName(
+        return self._plain(small_df).unionByName(
             self._chunked_core(big_df, chunk_rows, group_mins)
         )
 
@@ -1246,26 +950,18 @@ class MergeMultilineLog(Processor):
         group run ~3x faster and stop scaling with the hot group).
         Reference semantics: ProcessorMergeMultilineLogNative.cpp:161-345.
         """
+        import numpy as np
         from pyspark.sql import types as T
 
         C = int(chunk_rows)
-        gk, okey, sk = self.group_key, self.order_key, self.source_key
+        gk, okey = self.group_key, self.order_key
         in_schema = dict(zip(df.schema.names, df.schema.fields))
-        src = F.col(sk)
-        has_s = self.start_pattern is not None
-        has_c = self.continue_pattern is not None
-        has_e = self.end_pattern is not None
+        has_s, has_c, has_e = self._mode()
         single_line = self.unmatched != "discard"
         merge_unmatched = self.unmatched == "merge"
-        # only-End enters every group at a boundary
-        p0_first = has_e and not has_s and not has_c
-        start_only = has_s and not has_c and not has_e
-
-        def flag(pattern, anchored=False):
-            if not pattern:
-                return F.lit(False)
-            pat = f"^(?:{pattern})" if anchored else pattern
-            return F.coalesce(src.rlike(pat), F.lit(False))
+        # the state entering a group's first chunk
+        no_lines = np.zeros(0, dtype=bool)
+        _, _, p0 = _mode_uv(no_lines, no_lines, no_lines, has_s, has_c, has_e)
 
         # chunk id = floor(dense per-group ordinal / ChunkRows). With
         # proven-dense numeric OrderKeys (group_mins from the caller's
@@ -1305,15 +1001,8 @@ class MergeMultilineLog(Processor):
         else:
             w_ord = Window.partitionBy(gk).orderBy(okey)
             ordinal = F.row_number().over(w_ord) - 1
-        flagged = df.select(
-            gk,
-            okey,
-            src.alias("__v__"),
-            # the start-only plain path anchors its pattern — match it
-            flag(self.start_pattern, anchored=start_only).alias("__s__"),
-            flag(self.continue_pattern).alias("__c__"),
-            flag(self.end_pattern).alias("__e__"),
-            F.floor(ordinal / C).cast("long").alias("__chunk__"),
+        flagged = self._flagged(
+            df, F.floor(ordinal / C).cast("long").alias("__chunk__")
         )
         # r6: the flagged projection feeds TWO chunk passes (meta +
         # records) and the DataFrame API has no common-subplan reuse, so
@@ -1386,7 +1075,7 @@ class MergeMultilineLog(Processor):
             import pandas as pd
 
             pdf = pdf.sort_values("__chunk__")
-            state, off = p0_first, 0
+            state, off = p0, 0
             ent, offs = [], []
             for f0, f1, b0, b1 in zip(
                 pdf["f0"], pdf["f1"], pdf["b0"], pdf["b1"]
@@ -1414,7 +1103,6 @@ class MergeMultilineLog(Processor):
                 ofield,
                 T.StructField("__v__", T.StringType()),
                 T.StructField("__ok__", T.BooleanType()),
-                T.StructField("__direct__", T.BooleanType()),
             ]
         )
 
@@ -1431,18 +1119,6 @@ class MergeMultilineLog(Processor):
             member, boundary, close_ok, standalone = _mode_line_flags(
                 p, s, c, e, has_s, has_c, has_e
             )
-            evt = int(pdf["__off__"].iloc[0]) + np.cumsum(boundary)
-            okarr = (
-                np.ones(len(p), dtype=bool) if close_ok is None else close_ok
-            )
-            ordv = pdf[okey].to_numpy()
-            text = pdf["__v__"].to_numpy(dtype=object)
-            # unique NEGATIVE event id per direct (single-emitted) line:
-            # -(global dense position + 1), so the assembly can fold
-            # direct lines into the same (group, event) groupBy as
-            # merged events (r6 — one pass instead of a 3-branch union;
-            # member events have evt >= 0, so the id spaces never meet)
-            gpos = int(key[1]) * C + np.arange(len(pdf), dtype=np.int64)
             unmatched = ~member & ~standalone
             if merge_unmatched:
                 # start-only 'merge' extension: unmatched lines exist
@@ -1452,48 +1128,30 @@ class MergeMultilineLog(Processor):
                 # chunks through the ordinary (group, evt=0) assembly
                 member = member | unmatched
                 unmatched = np.zeros(len(member), dtype=bool)
-            direct = standalone | (unmatched & single_line)
-            frames = []
-            if member.any():
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            gk: key[0],
-                            "__evt__": evt[member],
-                            okey: ordv[member],
-                            "__v__": text[member],
-                            "__ok__": okarr[member],
-                            "__direct__": False,
-                        }
-                    )
-                )
-            if direct.any():
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            gk: key[0],
-                            "__evt__": -(gpos[direct] + 1),
-                            okey: ordv[direct],
-                            "__v__": text[direct],
-                            "__ok__": True,
-                            "__direct__": True,
-                        }
-                    )
-                )
-            if not frames:
-                # discard treatment can empty a chunk; typed empties keep
-                # the Arrow conversion happy
-                return pd.DataFrame(
-                    {
-                        gk: pd.Series(dtype=object),
-                        "__evt__": pd.Series(dtype="int64"),
-                        okey: pd.Series(dtype="int64"),
-                        "__v__": pd.Series(dtype=object),
-                        "__ok__": pd.Series(dtype=bool),
-                        "__direct__": pd.Series(dtype=bool),
-                    }
-                )
-            return pd.concat(frames, ignore_index=True)
+            # direct (single-emitted) lines get a unique NEGATIVE event
+            # id, -(global dense position + 1), so the assembly folds
+            # them into the same (group, event) groupBy as merged events
+            # (member events have evt >= 0, so the id spaces never meet)
+            gpos = int(key[1]) * C + np.arange(len(pdf), dtype=np.int64)
+            evt = np.where(
+                member,
+                int(pdf["__off__"].iloc[0]) + np.cumsum(boundary),
+                -(gpos + 1),
+            )
+            # direct lines are complete 1-line events
+            ok = ~member | (True if close_ok is None else close_ok)
+            # the chunk's own columns keep their dtypes, so a chunk the
+            # 'discard' treatment empties still converts to Arrow
+            keep = member | standalone | (unmatched & single_line)
+            return pd.DataFrame(
+                {
+                    gk: pdf[gk].to_numpy()[keep],
+                    "__evt__": evt[keep],
+                    okey: pdf[okey].to_numpy()[keep],
+                    "__v__": pdf["__v__"].to_numpy(dtype=object)[keep],
+                    "__ok__": ok[keep],
+                }
+            )
 
         # entries is #chunks rows — broadcast keeps the data unshuffled
         # between the chunk passes
@@ -1508,15 +1166,14 @@ class MergeMultilineLog(Processor):
 
     def _assemble_events(self, records: DataFrame) -> DataFrame:
         """Shared event assembly over a line-record frame
-        (GroupKey, __evt__, OrderKey, __v__, __ok__, __direct__):
-        member lines group by (group, event id) — pieces sort + join,
-        completeness = any line with ``__ok__``; incomplete events fall
-        back to the unmatched treatment per line; ``__direct__`` lines
-        pass through as their own events. Used by the chunk-parallel
-        path (events stitch across chunks through the same groupBy).
-        The pure-SQL engine assembles inline instead: it folds singles
-        into the same groupBy via unique negative event ids, so it
-        needs no union and keeps the group-key partitioning."""
+        (GroupKey, __evt__, OrderKey, __v__, __ok__): lines group by
+        (group, event id) — pieces sort + join, completeness = any line
+        with ``__ok__``; incomplete events fall back to the unmatched
+        treatment per line. Lines emitted on their own carry a unique
+        negative event id, so they are complete 1-piece events of the
+        same groupBy. Used by the chunk-parallel path (events stitch
+        across chunks through the same groupBy) and the start-only
+        plan."""
         gk, okey, sk = self.group_key, self.order_key, self.source_key
         single_line = self.unmatched != "discard"
         # r6: ONE groupBy + ONE generate cover merged events, broken
@@ -1579,76 +1236,29 @@ class MergeMultilineLog(Processor):
         )
 
     def _call_start_only(self, df: DataFrame) -> DataFrame:
-        src = F.col(self.source_key)
-        # coalesce like the FSM paths' flag(): a NULL source line must
-        # read as not-a-start, or the running sum yields NULL event ids
-        # for leading null rows (splitting the 'merge' leading region /
-        # merging consecutive leading nulls under 'single_line')
-        is_start = F.coalesce(
-            src.rlike(f"^(?:{self.start_pattern})"), F.lit(False)
+        gk, okey = self.group_key, self.order_key
+        w = Window.partitionBy(gk).orderBy(okey)
+        # event id = running count of start lines; the flag is coalesced
+        # (_flagged), so leading NULL lines read as not-a-start instead
+        # of yielding NULL ids
+        evt = F.sum(F.col("__s__").cast("long")).over(
+            w.rowsBetween(Window.unboundedPreceding, 0)
         )
-        w = (
-            Window.partitionBy(self.group_key)
-            .orderBy(self.order_key)
-            .rowsBetween(Window.unboundedPreceding, 0)
+        if self.unmatched not in ("discard", "merge"):
+            # 'single_line': leading unmatched rows (before any start marker, evt == 0)
+            # are emitted as their OWN events: a distinct negative id per
+            # row from the same window (ProcessorMergeMultilineLogNative
+            # unmatched handling). 'merge' (engine extension) keeps them
+            # as one leading event; 'discard' drops them below. nullif
+            # keeps the running sum to one window column.
+            evt = F.coalesce(F.nullif(evt, F.lit(0)), -F.row_number().over(w))
+        records = self._flagged(df).select(
+            gk, okey, "__v__", evt.alias("__evt__"),
+            F.lit(True).alias("__ok__"),
         )
-        df = df.withColumn("__lc_evt__", F.sum(is_start.cast("int")).over(w))
         if self.unmatched == "discard":
-            df = df.filter(F.col("__lc_evt__") > 0)
-        elif self.unmatched == "merge":
-            # engine extension: leading unmatched rows merge into one
-            # event (used e.g. to collapse a whole group when no start
-            # marker exists) — not a reference treatment
-            pass
-        else:
-            # 'single_line': leading unmatched rows (before any start
-            # marker, __lc_evt__ == 0) are emitted as their OWN events —
-            # give each a distinct negative event id keyed by order
-            # (ProcessorMergeMultilineLogNative unmatched handling).
-            df = df.withColumn(
-                "__lc_evt__",
-                F.when(
-                    F.col("__lc_evt__") == 0,
-                    -(F.col(self.order_key).cast("long") + F.lit(1)),
-                ).otherwise(F.col("__lc_evt__")),
-            )
-        merged = (
-            df.groupBy(self.group_key, "__lc_evt__")
-            .agg(
-                F.array_sort(
-                    F.collect_list(
-                        F.struct(F.col(self.order_key).alias("o"), src.alias("v"))
-                    )
-                ).alias("__pieces__"),
-                F.min(self.order_key).alias(self.order_key),
-                F.count(F.lit(1)).alias("n_merged"),
-            )
-            .select(
-                self.group_key,
-                # null content inside a MERGE joins as "" (C++ strings are
-                # never null; array_join would otherwise DROP the element
-                # and its separator while n_merged still counts it), but a
-                # 1-line event keeps its null — both matching the FSM
-                # paths (pinned by the chunked-path differential)
-                F.when(
-                    F.size("__pieces__") == 1,
-                    F.element_at("__pieces__", 1)["v"],
-                )
-                .otherwise(
-                    F.array_join(
-                        F.transform(
-                            "__pieces__",
-                            lambda s: F.coalesce(s["v"], F.lit("")),
-                        ),
-                        "\n",
-                    )
-                )
-                .alias(self.source_key),
-                self.order_key,
-                "n_merged",
-            )
-        )
-        return merged
+            records = records.filter(F.col("__evt__") > 0)
+        return self._assemble_events(records)
 
 
 @register("processor_merge_partial_logs")

@@ -141,25 +141,6 @@ def main() -> None:
         ],
     ))
 
-    fsm_sql = MergeMultilineLog(
-        SourceKey="text", GroupKey="conv_id", OrderKey="turn_idx",
-        StartPattern=r"^\{", EndPattern=r"\|", Engine="sql",
-    )(t)
-    p = plan_of(fsm_sql)
-    sections.append((
-        "multiline merge, SQL engine (closed-form window scan, r5)",
-        p,
-        [
-            ("zero Python nodes (no MapInPandas / FlatMapGroupsInPandas)",
-             "InPandas" not in p),
-            ("one Exchange for the operator (+ derivation): the event "
-             "groupBy reuses the window's group-key hash partitioning",
-             n_nodes(p, r"\(\d+\) Exchange") <= 2),
-            ("regex flags (rlike) evaluated once, below the windows",
-             "rlike" in p.lower() or "RLIKE" in p),
-        ],
-    ))
-
     fused = pipe.run(t)["__metrics__"]
     p = plan_of(fused)
     sections.append((

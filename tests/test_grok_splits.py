@@ -365,6 +365,33 @@ class TestSplits:
             "orphan line B",
             "2024-01-01 start\n  cont",
         ]
+        # the leading rows' event ids must not come from the OrderKey
+        # value: a string key (no numeric cast) and negative keys both
+        # still give one event per leading row, as the reference does
+        from loongcollector_spark.operators.splits import _merge_rows_python
+
+        texts = ["x1", "x2", "S1", "y"]
+        for keys, ddl in (
+            (["a", "b", "c", "d"], "src string, off string, content string"),
+            ([-3, -2, 0, 1], "src string, off int, content string"),
+        ):
+            df = spark.createDataFrame(
+                [("f1", k, t) for k, t in zip(keys, texts)], ddl
+            )
+            got = sorted(
+                (r.off, r.content, r.n_merged)
+                for r in MergeMultilineLog(
+                    SourceKey="content", StartPattern="S",
+                    GroupKey="src", OrderKey="off",
+                )(df).collect()
+            )
+            want = _merge_rows_python(
+                [(k, t, t.startswith("S"), False, False)
+                 for k, t in zip(keys, texts)],
+                True, False, False, True,
+            )
+            assert got == sorted((o, t, n) for t, o, n in want), keys
+            assert len(got) == 3
 
     def test_merge_multiline_discard_unmatched(self, spark):
         rows = [
@@ -519,7 +546,7 @@ class TestMergeMultilineMatrix:
 
 
 class TestMultilineEngineParity:
-    """The production vectorized multiline engine (_merge_rows_vectorized:
+    """The production vectorized multiline engine (_merge_block_vectorized:
     boolean-scan state, cumsum event ids) must agree with the reference
     per-row FSM transcription (_merge_rows_python) on every pattern mode
     x treatment x random flag sequence — including dangling partials,
@@ -541,8 +568,8 @@ class TestMultilineEngineParity:
         import pandas as pd
 
         from loongcollector_spark.operators.splits import (
+            _merge_block_vectorized,
             _merge_rows_python,
-            _merge_rows_vectorized,
         )
 
         rng = random.Random(20260816)
@@ -561,7 +588,8 @@ class TestMultilineEngineParity:
                         list(zip(orders, texts, s, c, e)),
                         has_s, has_c, has_e, single_line,
                     )
-                    t2, o2, n2 = _merge_rows_vectorized(
+                    _, t2, o2, n2 = _merge_block_vectorized(
+                        np.zeros(n, dtype=np.int64),
                         np.asarray(orders, dtype=np.int64),
                         pd.Series(texts, dtype=object),
                         np.asarray(s), np.asarray(c), np.asarray(e),
@@ -577,6 +605,56 @@ class TestMultilineEngineParity:
                     ] == [
                         (t, int(o), int(m)) for t, o, m in want
                     ], (trial, has_s, has_c, has_e, single_line)
+
+    def test_block_of_groups_resets_per_group(self):
+        """One block holding several groups (what a sorted partition
+        hands the engine) must equal the reference run per group: the
+        scan resets to each mode's initial state at every group
+        boundary, including only-End, whose initial state is open."""
+        import random
+
+        import numpy as np
+        import pandas as pd
+
+        from loongcollector_spark.operators.splits import (
+            _merge_block_vectorized,
+            _merge_rows_python,
+        )
+
+        rng = random.Random(20261017)
+        for trial in range(150):
+            sizes = [rng.randrange(1, 12) for _ in range(rng.randrange(1, 6))]
+            g = np.repeat(np.arange(len(sizes), dtype=np.int64), sizes)
+            n = len(g)
+            s = np.array([rng.random() < 0.3 for _ in range(n)])
+            c = np.array([rng.random() < 0.4 for _ in range(n)])
+            e = np.array([rng.random() < 0.3 for _ in range(n)])
+            texts = [None if rng.random() < 0.1 else f"l{i}" for i in range(n)]
+            orders = np.concatenate([np.arange(k) for k in sizes])
+            for has_s, has_c, has_e in self.MODES:
+                for single_line in (True, False):
+                    want = []
+                    for gi in range(len(sizes)):
+                        idx = np.flatnonzero(g == gi)
+                        want += [
+                            (gi, t, int(o), int(m))
+                            for t, o, m in _merge_rows_python(
+                                [(int(orders[i]), texts[i], s[i], c[i], e[i])
+                                 for i in idx],
+                                has_s, has_c, has_e, single_line,
+                            )
+                        ]
+                    got = [
+                        (int(gg), t, int(o), int(m))
+                        for gg, t, o, m in zip(*_merge_block_vectorized(
+                            g, orders, pd.Series(texts, dtype=object),
+                            s, c, e, has_s, has_c, has_e, single_line,
+                        ))
+                    ]
+                    key = lambda r: (r[0], r[2], str(r[1]))  # noqa: E731
+                    assert sorted(got, key=key) == sorted(want, key=key), (
+                        trial, has_s, has_c, has_e, single_line,
+                    )
 
     def test_group_split_across_arrow_batches(self, spark):
         """With tiny Arrow batches, one group's lines span many

@@ -184,8 +184,8 @@ class TestMultilineFsmParity:
         import pandas as pd
 
         from loongcollector_spark.operators.splits import (
+            _merge_block_vectorized,
             _merge_rows_python,
-            _merge_rows_vectorized,
         )
 
         has_s, has_c, has_e = mode
@@ -199,8 +199,9 @@ class TestMultilineFsmParity:
             list(zip(o.tolist(), texts, s, c, e)),
             has_s, has_c, has_e, single_line,
         )
-        t2, o2, n2 = _merge_rows_vectorized(
-            o, pd.Series(texts, dtype=object), s, c, e,
+        _, t2, o2, n2 = _merge_block_vectorized(
+            np.zeros(n, dtype=np.int64), o, pd.Series(texts, dtype=object),
+            s, c, e,
             has_s, has_c, has_e, single_line,
         )
         got = sorted(

@@ -106,17 +106,10 @@ class TestRound2PlanShapes:
         assert "Exchange" not in plan
 
     def test_merge_fsm_single_shuffle_jvm_flags(self, spark):
-        """Continue+End FSM, both engines, one Exchange each.
-
-        sql (r5, opt-in): closed-form window scan — ZERO Python nodes;
-        the event groupBy reuses the window's group-key hash
-        partitioning (subset key), so the whole operator is one
-        Exchange of pure JVM operators.
-
-        pandas (default): group-key repartition, in-partition sort,
-        then partition-level MapInPandas (one Python call per Arrow
-        batch, not per group); regex flags computed BEFORE the shuffle
-        so pandas sees only booleans."""
+        """Continue+End FSM, one Exchange: group-key repartition,
+        in-partition sort, then partition-level MapInPandas (one Python
+        call per Arrow batch, not per group); regex flags computed
+        BEFORE the shuffle so pandas sees only booleans."""
         from loongcollector_spark.operators.splits import MergeMultilineLog
 
         df = spark.createDataFrame(
@@ -126,17 +119,8 @@ class TestRound2PlanShapes:
             SourceKey="content", GroupKey="src", OrderKey="off",
             ContinuePattern="c", EndPattern="e",
         )
-        sql_plan = (
-            MergeMultilineLog(Engine="sql", **kw)(df)
-            ._jdf.queryExecution().executedPlan().toString()
-        )
-        assert sql_plan.count("Exchange hashpartitioning") == 1
-        assert "MapInPandas" not in sql_plan
-        assert "FlatMapGroupsInPandas" not in sql_plan
-        assert "rlike" in sql_plan.lower()
-
         plan = (
-            MergeMultilineLog(Engine="pandas", **kw)(df)
+            MergeMultilineLog(**kw)(df)
             ._jdf.queryExecution().executedPlan().toString()
         )
         assert plan.count("Exchange hashpartitioning") == 1
@@ -351,6 +335,26 @@ class TestHotConversationSkew:
             .count()
         )
         assert n_chunks == -(-n // 512)
+        # a non-numeric OrderKey under 'discard', where whole chunks
+        # emit nothing: the chunked path must still type its output
+        lines = ["x", "x", "x", "x", "S", "E", "x", "x"]
+        sdf = spark.createDataFrame(
+            [("g", f"k{i:02d}", t) for i, t in enumerate(lines)],
+            "src string, off string, content string",
+        )
+        skw = dict(
+            SourceKey="content", GroupKey="src", OrderKey="off",
+            StartPattern="^S", EndPattern="^E",
+            UnmatchedContentTreatment="discard",
+        )
+        want = [("g", "S\nE", "k04", 2)]
+        for op in (
+            MergeMultilineLog(**skw), MergeMultilineLog(ChunkRows=2, **skw)
+        ):
+            assert [
+                (r.src, r.content, r.off, r.n_merged)
+                for r in op(sdf).collect()
+            ] == want
 
     def test_chunked_auto_routes_by_skew(self, spark, monkeypatch):
         """ChunkRows='auto': below the hot-group threshold the plan is
@@ -392,13 +396,18 @@ class TestHotConversationSkew:
             for r in auto(df).collect()
         } == plain
 
-    def test_sql_engine_equals_pandas_engine(self, spark):
-        """The r5 pure-SQL FSM engine (closed-form window scan, zero
-        Python) must equal the pandas engine on every Continue/End mode
-        x treatment over a seeded multi-group sequence with nulls."""
+    def test_plain_fsm_equals_reference_all_modes(self, spark):
+        """The Spark FSM plan must equal the per-row reference
+        transcription (_merge_rows_python), group by group, on every
+        Continue/End mode x treatment over a seeded multi-group
+        sequence with nulls."""
         import random
+        import re
 
-        from loongcollector_spark.operators.splits import MergeMultilineLog
+        from loongcollector_spark.operators.splits import (
+            MergeMultilineLog,
+            _merge_rows_python,
+        )
 
         rng = random.Random(99)
         rows = []
@@ -418,20 +427,87 @@ class TestHotConversationSkew:
             dict(ContinuePattern=r"^c", EndPattern=r"^E"),
             dict(EndPattern=r"^E"),
         ]
+
+        def flag(pattern, text):
+            return bool(pattern and text is not None and re.search(pattern, text))
+
         for mode in modes:
+            sp, cp, ep = (
+                mode.get(k) for k in
+                ("StartPattern", "ContinuePattern", "EndPattern")
+            )
             for treatment in ("single_line", "discard"):
-                outs = {}
-                for eng in ("sql", "pandas"):
-                    proc = MergeMultilineLog(
-                        SourceKey="content", GroupKey="src", OrderKey="off",
-                        UnmatchedContentTreatment=treatment, Engine=eng,
-                        **mode,
-                    )
-                    outs[eng] = sorted(
-                        (r.src, r.off, r.content, r.n_merged)
-                        for r in proc(df).collect()
-                    )
-                assert outs["sql"] == outs["pandas"], (mode, treatment)
+                proc = MergeMultilineLog(
+                    SourceKey="content", GroupKey="src", OrderKey="off",
+                    UnmatchedContentTreatment=treatment, **mode,
+                )
+                got = sorted(
+                    (r.src, r.off, r.content, r.n_merged)
+                    for r in proc(df).collect()
+                )
+                want = []
+                for g in ("g1", "g2", "g3", "tiny"):
+                    grp = [
+                        (o, t, flag(sp, t), flag(cp, t), flag(ep, t))
+                        for gg, o, t in rows if gg == g
+                    ]
+                    want += [
+                        (g, o, t, n)
+                        for t, o, n in _merge_rows_python(
+                            grp, sp is not None, cp is not None,
+                            ep is not None, treatment == "single_line",
+                        )
+                    ]
+                assert got == sorted(want), (mode, treatment)
+
+    def test_default_plans_start_no_job(self, spark):
+        """Building the Continue/End and start-only plans (ChunkRows
+        unset) runs no Spark action; ChunkRows does (its routing
+        metadata job), which also shows the job count is live."""
+        import time
+
+        from loongcollector_spark.operators.splits import MergeMultilineLog
+
+        sc = spark.sparkContext
+        df = spark.createDataFrame(
+            [("g", i, t) for i, t in enumerate(["S", "c", "E", "x"])],
+            "src string, off long, content string",
+        )
+        kw = dict(SourceKey="content", GroupKey="src", OrderKey="off")
+        cases = {
+            "continue_end": (dict(ContinuePattern="^c", EndPattern="^E"), False),
+            "start_end": (dict(StartPattern="^S", EndPattern="^E"), False),
+            "start_only": (dict(StartPattern="S"), False),
+            "start_only_merge": (
+                dict(StartPattern="S", UnmatchedContentTreatment="merge"),
+                False,
+            ),
+            "chunked": (
+                dict(StartPattern="^S", EndPattern="^E", ChunkRows=2), True
+            ),
+        }
+        try:
+            for name, (mode, _) in cases.items():
+                sc.setJobGroup(f"plan_build_{name}", name)
+                MergeMultilineLog(**kw, **mode)(df)
+            # the listener bus is ordered: once this marker job is
+            # visible, every job started above is too
+            sc.setJobGroup("plan_build_marker", "marker")
+            spark.range(1).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        tracker = sc.statusTracker()
+        deadline = time.time() + 30
+        while (
+            not tracker.getJobIdsForGroup("plan_build_marker")
+            and time.time() < deadline
+        ):
+            time.sleep(0.1)
+        assert tracker.getJobIdsForGroup("plan_build_marker")
+        for name, (_, runs_job) in cases.items():
+            jobs = tracker.getJobIdsForGroup(f"plan_build_{name}")
+            assert bool(jobs) == runs_job, (name, jobs)
 
     def test_multiline_fsm_chunked_modes_differential(self, spark):
         """Chunk-parallel == plain across every FSM mode and treatment on

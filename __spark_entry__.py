@@ -30,7 +30,7 @@ from loongcollector_spark.operators.parsers import (
     ParseRegexNative,
     parse_kv_columns,
 )
-from loongcollector_spark.aggregators import shardhash_repartition, sink_metrics_flat
+from loongcollector_spark.aggregators import shardhash_repartition
 from loongcollector_spark.plans import transcript_pipeline as tp
 from loongcollector_spark.sources.transcripts import (
     transcripts_duckdb_sql,
@@ -68,8 +68,9 @@ def _session_safety(spark: SparkSession) -> None:
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: full pipeline at sf0.001, returns the per-sink metrics."""
-    sinks = tp.TranscriptPipeline().run_on_events(spark, "/root/testdata/sf0.001")
-    return sinks["__metrics__"]
+    p = tp.TranscriptPipeline()
+    transcripts = transcripts_from_events(spark, "/root/testdata/sf0.001")
+    return p.metrics(p.run_single_pass(transcripts))
 
 
 # ---------------------------------------------------------------------------
@@ -97,8 +98,9 @@ def q_enriched(spark, sf_dir):
 
 def _q_sink(sink):
     def q(spark, sf_dir):
-        sinks = tp.TranscriptPipeline().run(_transcripts(spark, sf_dir))
-        return sinks[sink].select(
+        p = tp.TranscriptPipeline()
+        routed = p.run_single_pass(_transcripts(spark, sf_dir))
+        return p.router.sink(routed, sink).select(
             "conv_id", "turn_idx", "role", "text", "tool", "ts", "grammar",
             "parsed_user", "etype", "error_class", "tool_class", "role_class",
         )
@@ -107,9 +109,11 @@ def _q_sink(sink):
 
 
 def q_sink_metrics(spark, sf_dir):
+    """Per-sink aggregates of the routed frame, ONE aggregation for all
+    sinks (also serves pipeline_metrics_single_pass)."""
     p = tp.TranscriptPipeline()
-    sinks = p.run(_transcripts(spark, sf_dir))
-    return sinks["__metrics__"].select(
+    routed = p.run_single_pass(_transcripts(spark, sf_dir))
+    return p.metrics(routed).select(
         "conv_prefix", "ts_hour", "error_class", "n_rows", "n_bytes", "sink"
     )
 
@@ -1805,16 +1809,6 @@ def q_multicast_exploded(spark, sf_dir):
     return routed.select("conv_id", "turn_idx", F.col("__sink__").alias("sink"))
 
 
-def q_metrics_single_pass(spark, sf_dir):
-    """Per-sink aggregates computed in ONE aggregation off the exploded
-    frame — must equal the per-sink cached-fan-out metrics."""
-    p = tp.TranscriptPipeline()
-    routed = p.run_single_pass(_transcripts(spark, sf_dir))
-    return p.metrics_single_pass(routed).select(
-        "conv_prefix", "ts_hour", "error_class", "n_rows", "n_bytes", "sink"
-    )
-
-
 def q_metrics_from_snapshot(spark, sf_dir):
     """Per-sink metrics aggregated from the WRITTEN routed snapshot
     (plans/transcript_pipeline.py write_routed → parquet partitioned by
@@ -2243,7 +2237,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "encrypt_roundtrip": q_encrypt_roundtrip,
         "json_expand_flatten": q_json_expand_map,
         "logstore_router_regex": q_logstore_router,
-        "pipeline_metrics_single_pass": q_metrics_single_pass,
+        "pipeline_metrics_single_pass": q_sink_metrics,
         "prom_parse_relabel": q_prom_parse_relabel,
         "route_exclusive_tagged": q_exclusive_tagged_route,
         "route_multicast_exploded": q_multicast_exploded,

@@ -103,9 +103,7 @@ def build_queries(spark, sf_dir: str, cpus: int, bench_rows: int):
 
     q = {
         "pipeline_end_to_end": lambda: pipe.run_single_pass(corpus),
-        "pipeline_metrics": lambda: pipe.metrics_single_pass(
-            pipe.run_single_pass(corpus)
-        ),
+        "pipeline_metrics": lambda: pipe.metrics(pipe.run_single_pass(corpus)),
         "parse_dispatch": lambda: pipe.parse(corpus),
         "enrich_broadcast_join": lambda: pipe.enrich(pipe.parse(corpus)),
         "rate_limit_window": lambda: RateLimit(
@@ -163,7 +161,7 @@ def build_queries(spark, sf_dir: str, cpus: int, bench_rows: int):
             packable, budget=8192, shard_cols=["shard"], key_col="k"
         ),
         "sf_transcripts_pipeline": lambda: pipe.metrics(
-            pipe.route(pipe.enrich(pipe.parse(trans)))
+            pipe.run_single_pass(trans)
         ),
         "minhash_lsh_candidates": lambda: minhash_lsh_candidates(docs_par),
         "minhash_stage_signature": lambda: minhash_lsh_stages(docs_par)[

@@ -16,7 +16,17 @@ Cluster usage (the north-rule deployment shape)::
 Local smoke::
 
     python jobs/run_pipeline.py --input /root/testdata/sf0.001 \\
-        --from-events --output /tmp/lc_out --checkpoint /tmp/lc_cp
+        --from-events --output /tmp/lc_out [--checkpoint /tmp/lc_cp]
+
+Output layout. The default mode runs parse → enrich → route once
+(``TranscriptPipeline.run_single_pass``, observed by a ``StageMonitor``),
+writes the routed frame in one job as ``<out>/routed/__sink__=<name>``
+(rows sorted by (conv_id, turn_idx) within each file), then aggregates
+the per-sink metrics from that written snapshot into
+``<out>/__metrics__`` — the input is parsed once. ``--config`` writes a
+YAML pipeline's routed frame the same way. ``--checkpoint`` (resumable)
+writes ``<out>/<sink>/unit=<u>`` per sink and records committed units,
+so a rerun skips them.
 """
 
 from __future__ import annotations
@@ -42,8 +52,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--unit-expr", default="date_format(ts, 'yyyy-MM-dd')",
                     help="SQL expr defining the resume unit (partition) of each row")
     ap.add_argument("--master", default=None)
-    ap.add_argument("--single-pass", action="store_true",
-                    help="exploded-multicast single write partitioned by sink")
     ap.add_argument("--config", default=None,
                     help="YAML pipeline config (the reference's plugin-chain "
                          "shape); replaces the built-in flagship pipeline")
@@ -54,7 +62,7 @@ def main(argv: list[str] | None = None) -> int:
     from loongcollector_spark.session import get_spark
     from loongcollector_spark.monitor import StageMonitor
     from loongcollector_spark.plans.transcript_pipeline import TranscriptPipeline
-    from loongcollector_spark.sinks.writers import write_routed_sinks
+    from loongcollector_spark.sinks.writers import write_dynamic_topic
     from loongcollector_spark.sources.transcripts import transcripts_from_events
 
     spark = get_spark(app_name="lc_pipeline", master=args.master)
@@ -65,40 +73,21 @@ def main(argv: list[str] | None = None) -> int:
 
     pipe = TranscriptPipeline()
     mon = StageMonitor()
+    routed_path = f"{args.output}/routed"
     t0 = time.time()
+
+    def write_sorted(routed):
+        if {"conv_id", "turn_idx"} <= set(routed.columns):
+            routed = routed.sortWithinPartitions("conv_id", "turn_idx")
+        write_dynamic_topic(routed, routed_path, topic_col="__sink__")
 
     if args.config:
         # config-driven mode: the YAML plugin chain is the pipeline,
         # exactly like the reference's CollectionConfig entry path
         from loongcollector_spark.plans.config_pipeline import load_config
 
-        cfg = load_config(args.config)
-        sinks = cfg.run(transcripts)
-        paths = write_routed_sinks(sinks, args.output)
-        summary = {
-            "mode": "config",
-            "config": args.config,
-            "sinks": paths,
-        }
-    elif args.single_pass:
-        from loongcollector_spark.sinks.writers import write_dynamic_topic
-
-        routed = mon.observe(
-            pipe.run_single_pass(transcripts), "routed",
-            error_class_col="error_class",
-        ).sortWithinPartitions("conv_id", "turn_idx")
-        write_dynamic_topic(routed, f"{args.output}/routed", topic_col="__sink__")
-        pipe.metrics_single_pass(pipe.run_single_pass(transcripts)).write.mode(
-            "overwrite"
-        ).parquet(f"{args.output}/__metrics__")
-        summary = {
-            "mode": "single_pass",
-            "output": f"{args.output}/routed",
-            "stage_metrics": {
-                k: {m: int(v) for m, v in d.items()}
-                for k, d in mon.results().items()
-            },
-        }
+        write_sorted(load_config(args.config).run(transcripts))
+        summary = {"mode": "config", "config": args.config, "output": routed_path}
     elif args.checkpoint:
         from loongcollector_spark.checkpoint import (
             BatchedResumableRunner,
@@ -108,27 +97,30 @@ def main(argv: list[str] | None = None) -> int:
         cp = CheckpointTable(spark, args.checkpoint)
         runner = BatchedResumableRunner(spark, cp, args.output)
         with_unit = transcripts.withColumn("unit", F.expr(args.unit_expr))
-
-        def transform(unit_df):
-            parsed = pipe.parse(unit_df)
-            enriched = pipe.enrich(parsed)
-            return pipe.route(enriched)
-
-        processed = runner.run(with_unit, transform=transform)
+        # every sink's write reads the routed frame: compute it once
+        routed = pipe.run_single_pass(with_unit).persist()
+        try:
+            processed = runner.run(
+                routed,
+                transform=lambda r: {s: pipe.router.sink(r, s) for s in pipe.SINKS},
+            )
+        finally:
+            routed.unpersist()
         summary = {
             "mode": "resumable",
             "processed_units": {k: len(v) for k, v in processed.items()},
         }
     else:
-        parsed = mon.observe(pipe.parse(transcripts), "parse",
-                             error_class_col="error_class")
-        enriched = pipe.enrich(parsed)
-        sinks = pipe.route(enriched)
-        sinks["__metrics__"] = pipe.metrics(dict(sinks))
-        paths = write_routed_sinks(sinks, args.output)
+        write_sorted(mon.observe(
+            pipe.run_single_pass(transcripts), "routed",
+            error_class_col="error_class",
+        ))
+        pipe.metrics_from_snapshot(spark, routed_path).write.mode(
+            "overwrite"
+        ).parquet(f"{args.output}/__metrics__")
         summary = {
             "mode": "full",
-            "sinks": paths,
+            "output": routed_path,
             "stage_metrics": {
                 k: {m: int(v) for m, v in d.items()}
                 for k, d in mon.results().items()

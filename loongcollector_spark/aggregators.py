@@ -7,9 +7,9 @@ self-monitor counter set (§2.7). Both are represented here:
 * grouping/batching → ``repartition`` / ``groupBy`` (Batcher tag-hash ≙
   shuffle-by-key; flush thresholds ≙ output file sizing)
 * shard hash       → ``repartition(n, xxhash64(...))``
-* self-monitor     → per-sink ``groupBy().agg`` producing counts, byte
-  volumes and error-class histograms keyed by (conv_id prefix, hour
-  bucket) — the BASELINE per-sink aggregates
+* self-monitor     → the per-sink counters are one ``groupBy`` over the
+  routed frame (``TranscriptPipeline.metrics``) and per-stage
+  observations (monitor.py)
 """
 
 from __future__ import annotations
@@ -82,62 +82,6 @@ def batch_pack_ids(
     )
 
 
-def sink_metrics(
-    df: DataFrame,
-    sink_name: str,
-    text_col: str = "text",
-    conv_col: str = "conv_id",
-    ts_col: str = "ts",
-    error_class_col: str | None = "error_class",
-    prefix_len: int = 6,
-) -> DataFrame:
-    """Per-sink aggregate counters (the BASELINE contract).
-
-    Mirrors the reference's per-plugin self-monitor counters
-    (METRIC_PLUGIN_IN/OUT/DISCARDED_EVENTS_TOTAL,
-    core/monitor/metric_constants/MetricConstants.h:80-171; parser counters
-    ProcessorParseRegexNative.h:64-67) materialized per sink per
-    (conv_id prefix, hour bucket):
-
-    * ``n_rows``      — count(*)
-    * ``n_bytes``     — sum(octet_length(text))
-    * ``error_hist``  — map error_class → count (histogram; '' = ok)
-
-    Partial (map-side) aggregation applies automatically; the shuffle key
-    (prefix, bucket) has bounded cardinality, so this is skew-safe even
-    when one conv_id is hot.
-    """
-    prefix = F.substring(F.col(conv_col), 1, prefix_len).alias("conv_prefix")
-    bucket = F.date_trunc("hour", F.col(ts_col)).alias("ts_hour")
-    aggs = [
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum(F.octet_length(F.col(text_col))).alias("n_bytes"),
-    ]
-    group_cols = [prefix, bucket]
-    if error_class_col and error_class_col in df.columns:
-        # histogram as sorted entries → deterministic map
-        ec = F.coalesce(F.col(error_class_col), F.lit("")).alias("error_class")
-        inner = df.groupBy(prefix, bucket, ec).agg(*aggs)
-        return (
-            inner.groupBy("conv_prefix", "ts_hour")
-            .agg(
-                F.sum("n_rows").alias("n_rows"),
-                F.sum("n_bytes").alias("n_bytes"),
-                F.map_from_entries(
-                    F.sort_array(
-                        F.collect_list(
-                            F.struct(F.col("error_class"), F.col("n_rows").alias("n"))
-                        )
-                    )
-                ).alias("error_hist"),
-            )
-            .withColumn("sink", F.lit(sink_name))
-        )
-    return (
-        df.groupBy(*group_cols).agg(*aggs).withColumn("sink", F.lit(sink_name))
-    )
-
-
 def salted_agg(
     df: DataFrame,
     keys: list[str],
@@ -174,34 +118,6 @@ def salted_agg(
             phase2_aggs.append(combine(out).alias(out))
     partial = salted.groupBy(*keys, salt_col).agg(*phase1_aggs)
     return partial.groupBy(*keys).agg(*phase2_aggs)
-
-
-def sink_metrics_flat(
-    df: DataFrame,
-    sink_name: str,
-    text_col: str = "text",
-    conv_col: str = "conv_id",
-    ts_col: str = "ts",
-    error_class_col: str | None = "error_class",
-    prefix_len: int = 6,
-) -> DataFrame:
-    """SQL-oracle-friendly variant: error histogram as flat rows
-    (sink, conv_prefix, ts_hour, error_class, n_rows, n_bytes)."""
-    prefix = F.substring(F.col(conv_col), 1, prefix_len).alias("conv_prefix")
-    bucket = F.date_trunc("hour", F.col(ts_col)).alias("ts_hour")
-    group = [prefix, bucket]
-    if error_class_col and error_class_col in df.columns:
-        group.append(
-            F.coalesce(F.col(error_class_col), F.lit("")).alias("error_class")
-        )
-    return (
-        df.groupBy(*group)
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum(F.octet_length(F.col(text_col))).alias("n_bytes"),
-        )
-        .withColumn("sink", F.lit(sink_name))
-    )
 
 
 def otel_signal_route(

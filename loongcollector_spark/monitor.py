@@ -8,8 +8,9 @@ ProcessorParseRegexNative.h:64-67). The Spark-native equivalents:
 * ``Observation`` (``df.observe``) — zero-cost aggregates computed during
   the action that already runs, no extra job. Used for per-stage
   in/out/discard counts.
-* the per-sink ``sink_metrics`` tables (aggregators.py) — the durable,
-  queryable form.
+* the per-sink metrics table (``TranscriptPipeline.metrics`` over the
+  routed frame, or ``metrics_from_snapshot`` over the written one) —
+  the durable, queryable form.
 """
 
 from __future__ import annotations

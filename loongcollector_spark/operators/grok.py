@@ -17,6 +17,10 @@ driver (pure Python, below); execution is either
   ``pyarrow.compute.extract_regex`` (r6, guide §4.2); otherwise a pandas
   ``Series.str.extract`` per pattern (needed when the compiled regex uses
   Perl-isms RE2 lacks, or a per-log match timeout is configured).
+  Every path reads ``\\w\\d\\s\\b`` as ASCII classes, the sets RE2, the
+  JVM and Go ``regexp`` (the reference runtime) use: the pandas and
+  timeout paths compile with the ASCII flag, so which path a Match list
+  takes never changes what it matches.
 
 Multi-pattern dispatch (Match list) = chained ``CASE WHEN rlike`` — the
 anchored-dispatch pattern, identical to the reference's first-match-wins.
@@ -143,9 +147,8 @@ def _re2_translate(rx: str) -> str | None:
     newline — the trailing ``$`` is rewritten to ``(?:\\n)?$`` to keep that
     semantics). Perl classes (``\\w``/``\\d``/``\\s``/``\\b``) pass through
     and are ASCII under RE2 — the same sets ``java.util.regex`` (the
-    ``jvm`` engine) and Go ``regexp`` (the reference runtime) use, so the
-    fast path tightens cross-engine parity rather than loosening it;
-    python-``re``'s Unicode classes were the outlier."""
+    ``jvm`` engine), Go ``regexp`` (the reference runtime) and the
+    ASCII-flagged pandas path use."""
     out: list[str] = []
     i, n = 0, len(rx)
     group = 0
@@ -554,7 +557,10 @@ class Grok(Processor):
                 import regex as regex_mod
 
                 tmo = timeout_ms / 1000.0
-                pats = [(regex_mod.compile(rx), aliases) for rx, aliases in compiled]
+                pats = [
+                    (regex_mod.compile(rx, flags=regex_mod.ASCII), aliases)
+                    for rx, aliases in compiled
+                ]
                 for pat, aliases in pats:
                     if not remaining.any():
                         break
@@ -583,10 +589,12 @@ class Grok(Processor):
 
                 with warnings.catch_warnings():
                     warnings.simplefilter("ignore", UserWarning)
-                    hit = sub.str.contains(rx, regex=True, na=False)
+                    hit = sub.str.contains(
+                        rx, regex=True, na=False, flags=re.ASCII
+                    )
                 hit_idx = sub.index[hit]
                 if aliases and len(hit_idx):
-                    ext = sub.str.extract(rx, expand=True)
+                    ext = sub.str.extract(rx, flags=re.ASCII, expand=True)
                     for gi, alias in enumerate(aliases):
                         # matched row + non-participating optional group =
                         # "" — parity with Go FindStringSubmatch and the

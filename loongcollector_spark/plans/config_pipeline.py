@@ -20,6 +20,10 @@ the same document shape and compiles it to DataFrame machinery:
       - Name: sink_a
         Match: {Key: role_class, Value: model}
       - Name: sink_all     # unconditional
+
+``CompiledConfig.run`` returns the routed frame (``__sink__`` column,
+see routing.py); with no flushers every row goes to one unconditional
+route named ``default``. ``router.sink(routed, name)`` is one sink.
 """
 
 from __future__ import annotations
@@ -41,15 +45,13 @@ from loongcollector_spark.routing import Route, Router, TagCondition, ExprCondit
 class CompiledConfig:
     processors: Pipeline
     aggregators: list
-    router: Router | None
+    router: Router
 
-    def run(self, df: DataFrame) -> dict[str, DataFrame]:
+    def run(self, df: DataFrame) -> DataFrame:
         out = self.processors(df)
         for agg in self.aggregators:
             out = agg(out)
-        if self.router is None:
-            return {"default": out}
-        return self.router.route(out)
+        return self.router.route_multicast_exploded(out)
 
 
 def _build_aggregator(spec: dict):
@@ -76,23 +78,19 @@ def compile_config(doc: dict) -> CompiledConfig:
     """Compile a reference-shaped pipeline document (already parsed)."""
     processors = compile_pipeline(doc.get("processors", []))
     aggregators = [_build_aggregator(a) for a in doc.get("aggregators", [])]
-    router = None
-    flushers = doc.get("flushers", [])
-    if flushers:
-        routes = []
-        for f in flushers:
-            cond = None
-            if "Match" in f:
-                m = f["Match"]
-                if "Expr" in m:
-                    cond = ExprCondition(m["Expr"])
-                else:
-                    cond = TagCondition(
-                        m["Key"], m["Value"], m.get("DiscardingTag", False)
-                    )
-            routes.append(Route(f["Name"], cond))
-        router = Router(routes)
-    return CompiledConfig(processors, aggregators, router)
+    routes = []
+    for f in doc.get("flushers") or [{"Name": "default"}]:
+        cond = None
+        if "Match" in f:
+            m = f["Match"]
+            if "Expr" in m:
+                cond = ExprCondition(m["Expr"])
+            else:
+                cond = TagCondition(
+                    m["Key"], m["Value"], m.get("DiscardingTag", False)
+                )
+        routes.append(Route(f["Name"], cond))
+    return CompiledConfig(processors, aggregators, Router(routes))
 
 
 def load_config(path_or_text: str) -> CompiledConfig:

@@ -13,10 +13,14 @@ every operator category:
    role→role_class), reference processor_dict_map semantics.
 3. **route** — multicast tag router (Router.cpp:50-82): sink A
    (role_class == 'model'), sink B (error_class != ''), sink C
-   (unconditional) — A/B rows also land in C.
+   (unconditional) — A/B rows also land in C. The result is ONE routed
+   frame with a ``__sink__`` column (``run_single_pass``); per-sink
+   views are ``router.sink(routed, name)``.
 4. **aggregate** — per-sink counters keyed by (conv_id prefix, hour
-   bucket): counts, byte volumes, error-class histogram — the
-   reference's self-monitor counters per sink.
+   bucket, error class): row counts and byte volumes, the reference's
+   self-monitor counters per sink. ``metrics(routed)`` computes them in
+   one aggregation; ``metrics_from_snapshot`` computes the same rows
+   from the written snapshot.
 
 Every stage has an equivalent DuckDB SQL (``oracle_*`` functions) over
 the same ``events`` parquet, giving the driver a full value-level
@@ -28,13 +32,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from loongcollector_spark.aggregators import sink_metrics_flat
 from loongcollector_spark.operators.enrich import DictMap
 from loongcollector_spark.routing import Route, Router, TagCondition, ExprCondition
-from loongcollector_spark.sources.transcripts import (
-    transcripts_duckdb_sql,
-    transcripts_from_events,
-)
+from loongcollector_spark.sources.transcripts import transcripts_duckdb_sql
 
 # ---------------------------------------------------------------------------
 # Grammar patterns (shared between the Spark plan and the DuckDB oracle —
@@ -59,14 +59,17 @@ ROLE_CLASS_DICT = {
     "tool": "machine",
 }
 
+# metrics key: the first CONV_PREFIX_LEN characters of conv_id (the
+# oracle SQL below and the streaming metrics use the same prefix)
+CONV_PREFIX_LEN = 6
+
 
 class TranscriptPipeline:
     """parse → enrich → route → aggregate, built-ins only."""
 
     SINKS = ("sink_model", "sink_errors", "sink_all")
 
-    def __init__(self, conv_prefix_len: int = 6):
-        self.conv_prefix_len = conv_prefix_len
+    def __init__(self):
         self.router = Router(
             [
                 Route("sink_model", TagCondition("role_class", "model")),
@@ -198,75 +201,22 @@ class TranscriptPipeline:
             "tool_class", F.coalesce(F.col("tool_class"), F.lit("Unknown"))
         )
 
-    # -- route -----------------------------------------------------------
-    def route(self, df: DataFrame) -> dict[str, DataFrame]:
-        return self.router.route(df)
-
-    # -- aggregate ---------------------------------------------------------
-    def metrics(self, sinks: dict[str, DataFrame]) -> DataFrame:
-        """Per-sink flat metrics rows.
-
-        r6 (guide §2.1 — remove repeated passes): when the dict is the
-        router's standard fan-out (exactly the ``SINKS`` keys), the
-        N-sink union of :func:`sink_metrics_flat` aggregations — each of
-        which re-ran the parse/enrich lineage (or re-scanned the route
-        cache) — collapses into ONE pass: ``sink_all`` is the
-        unconditional route (row-identical to the shared parent) and the
-        exploded multicast reproduces every sink's row set (pinned by
-        tests), so one grouped-by-sink aggregation over
-        ``route_multicast_exploded(sink_all)`` yields the identical row
-        multiset. Measured: 4 aggregation passes → 1 on the bench's
-        sf-transcripts row. A custom dict (different keys) keeps the
-        general per-frame union path."""
-        if set(sinks) == set(self.SINKS):
-            return self.metrics_single_pass(
-                self.router.route_multicast_exploded(sinks["sink_all"])
-            )
-        parts = [
-            sink_metrics_flat(df, name, prefix_len=self.conv_prefix_len)
-            for name, df in sinks.items()
-        ]
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
-
-    # -- end to end ---------------------------------------------------------
-    def run(self, transcripts: DataFrame) -> dict[str, DataFrame]:
-        parsed = self.parse(transcripts)
-        enriched = self.enrich(parsed)
-        sinks = self.route(enriched)
-        # fused metrics (r5): per-sink row sets equal the exploded
-        # multicast's (tested), so the per-sink aggregates come from ONE
-        # scan of the cached parent + ONE shuffle over the exploded
-        # frame instead of metrics()'s 3 cache scans + 3 unioned
-        # aggregations. sink_all is the unconditional route == the
-        # cached parent itself.
-        sinks["__metrics__"] = self.metrics_single_pass(
-            self.router.route_multicast_exploded(sinks["sink_all"])
-        )
-        return sinks
-
-    def run_on_events(self, spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-        return self.run(transcripts_from_events(spark, sf_dir))
-
-    # -- single-pass physical strategy ------------------------------------
+    # -- route + aggregate --------------------------------------------------
     def run_single_pass(self, transcripts: DataFrame) -> DataFrame:
-        """One-scan multicast: returns the exploded routed frame
-        (one row per (turn, matching sink), ``__sink__`` column). Row sets
-        per sink are identical to ``run()``'s; physically this is a single
-        codegen stage feeding one (partitioned) write — no cache, no
-        repeated scans. Preferred at scale when sinks share a format."""
+        """parse → enrich → route: the routed frame (one row per (turn,
+        matching sink), ``__sink__`` column). One codegen stage feeding
+        one partitioned write: no cache, no repeated scans."""
         enriched = self.enrich(self.parse(transcripts))
         return self.router.route_multicast_exploded(enriched)
 
-    def metrics_single_pass(self, routed: DataFrame) -> DataFrame:
-        """Per-sink aggregates off the exploded frame — one aggregation
-        for ALL sinks (bounded keys: sink × conv_prefix × hour)."""
+    def metrics(self, routed: DataFrame) -> DataFrame:
+        """Per-sink aggregates of a routed frame: one aggregation for ALL
+        sinks (bounded keys: sink × conv_prefix × hour × error_class).
+        It counts exactly the rows of the frame it is given."""
         return (
             routed.groupBy(
                 F.col("__sink__").alias("sink"),
-                F.substring(F.col("conv_id"), 1, self.conv_prefix_len).alias(
+                F.substring(F.col("conv_id"), 1, CONV_PREFIX_LEN).alias(
                     "conv_prefix"
                 ),
                 F.date_trunc("hour", F.col("ts")).alias("ts_hour"),
@@ -304,7 +254,7 @@ class TranscriptPipeline:
         counters that disagree with the table contents (the reference's
         flusher self-monitor counts what it shipped, not what it saw:
         plugins/flusher self-monitor semantics)."""
-        return self.metrics_single_pass(spark.read.parquet(path))
+        return self.metrics(spark.read.parquet(path))
 
 
 # ---------------------------------------------------------------------------

@@ -7,11 +7,13 @@ Conditions (core/collection_pipeline/route/Condition.h:28-73) are either
 event-type equality or tag equality, with optional ``DiscardingTag``
 (the matched tag is removed after routing).
 
-Spark realization: the routed parent DataFrame is computed ONCE and
-cached/persisted; each sink is a filtered view written independently.
-Multicast = non-exclusive filters over the same cached plan — no second
-scan, no shuffle. At 100 TB the cache spills per-partition; alternatively
-``persist(DISK_ONLY)`` or a single pre-partitioned intermediate table.
+Spark realization: ONE routed frame. ``Router.route_multicast_exploded``
+gives every row one copy per matching sink, named in a ``__sink__``
+column; the copies are made inside the same codegen stage, with no
+cache, no second scan and no shuffle. Everything downstream derives
+from that frame: one ``partitionBy("__sink__")`` write lays it out as
+``<root>/__sink__=<name>`` directories, one grouped aggregation gives
+every sink's metrics, and ``Router.sink`` is the per-sink view.
 """
 
 from __future__ import annotations
@@ -53,46 +55,28 @@ class Route:
     condition: TagCondition | ExprCondition | None = None  # None = unconditional
 
 
+def _discarded_tag(route: Route) -> str | None:
+    c = route.condition
+    return c.key if isinstance(c, TagCondition) and c.discarding_tag else None
+
+
 class Router:
-    """Multicast router over a cached parent DataFrame.
+    """Multicast router: a row matching several conditions is copied to
+    every matching sink (deep-copy semantics of Router.cpp:66-77);
+    unconditional routes receive everything (Router.cpp:50-54)."""
 
-    ``route(df)`` returns ``{sink_name: DataFrame}``. Rows matching
-    multiple conditions appear in every matching sink (deep-copy
-    semantics of Router.cpp:66-77 — in Spark a copy is just another
-    filtered view of the same cached data). Unconditional routes receive
-    everything (Router.cpp:50-54).
-    """
-
-    def __init__(self, routes: list[Route], cache: bool = True):
+    def __init__(self, routes: list[Route]):
         if not routes:
             raise ValueError("at least one route required")
         names = [r.name for r in routes]
         if len(set(names)) != len(names):
             raise ValueError("duplicate sink names")
         self.routes = list(routes)
-        self.cache = cache
 
-    def route(self, df: DataFrame) -> dict[str, DataFrame]:
-        if self.cache and len(self.routes) > 1:
-            df = df.persist()
-        out: dict[str, DataFrame] = {}
-        for r in self.routes:
-            if r.condition is None:
-                out[r.name] = df
-            else:
-                sink_df = df.filter(r.condition.predicate())
-                if isinstance(r.condition, TagCondition) and r.condition.discarding_tag:
-                    sink_df = sink_df.drop(r.condition.key)
-                out[r.name] = sink_df
-        return out
-
-    def route_multicast_exploded(self, df: DataFrame, dest_col: str = "__sink__") -> DataFrame:
-        """Single-pass MULTICAST: one row per (row, matching sink), via an
-        exploded array of matched sink names. Physically superior to the
-        cached-parent fan-out when sinks share a format: one scan, no
-        cache materialization, one (partitioned) write — the multicast
-        amplification (rows × avg match count) happens inside the same
-        codegen stage. Row sets per sink are identical to ``route``."""
+    def route_multicast_exploded(self, df: DataFrame) -> DataFrame:
+        """The routed frame: one row per (row, matching sink), the sink
+        named in ``__sink__``. A ``DiscardingTag`` condition sets its tag
+        to NULL on that sink's copies only; the other copies keep it."""
         matched = F.array(
             *[
                 F.when(
@@ -104,13 +88,26 @@ class Router:
                 for r in self.routes
             ]
         )
-        return df.withColumn(
-            dest_col, F.explode(F.filter(matched, lambda x: x.isNotNull()))
+        out = df.withColumn(
+            "__sink__", F.explode(F.filter(matched, lambda x: x.isNotNull()))
         )
+        for r in self.routes:
+            key = _discarded_tag(r)
+            if key:
+                out = out.withColumn(key, F.when(F.col("__sink__") != r.name, F.col(key)))
+        return out
 
-    def route_exclusive_tagged(self, df: DataFrame, dest_col: str = "__sink__") -> DataFrame:
+    def sink(self, routed: DataFrame, name: str) -> DataFrame:
+        """One sink's rows of the routed frame, without ``__sink__`` and
+        without the tag its condition discards."""
+        (route,) = [r for r in self.routes if r.name == name]
+        out = routed.filter(F.col("__sink__") == name).drop("__sink__")
+        key = _discarded_tag(route)
+        return out.drop(key) if key else out
+
+    def route_exclusive_tagged(self, df: DataFrame) -> DataFrame:
         """Alternative single-pass physical strategy for *exclusive* routes:
-        tag each row with its first matching sink (the Go
+        tag each row with its first matching sink in ``__sink__`` (the Go
         aggregator_logstorerouter semantics —
         plugins/aggregator/logstorerouter/aggregator_router.go:44-60), then
         one partitioned write handles all sinks in a single job. Use when
@@ -120,7 +117,7 @@ class Router:
             pred = F.lit(True) if r.condition is None else r.condition.predicate()
             expr = F.when(pred, F.lit(r.name)).otherwise(expr)
         # reversed() + otherwise chaining makes the FIRST route win
-        return df.withColumn(dest_col, expr)
+        return df.withColumn("__sink__", expr)
 
 
 @dataclass

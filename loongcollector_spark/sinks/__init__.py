@@ -5,5 +5,4 @@ from loongcollector_spark.sinks.writers import (  # noqa: F401
     FileSink,
     json_serialize,
     write_dynamic_topic,
-    write_routed_sinks,
 )

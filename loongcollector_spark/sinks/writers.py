@@ -67,8 +67,9 @@ def write_dynamic_topic(
 ) -> None:
     """flusher_kafka dynamic-topic analogue: rows fan out to per-topic
     directories in ONE write job via ``partitionBy`` (dynamic partition
-    insert). The topic column is typically computed by the router
-    (Router.route_exclusive_tagged) or a fmtstr-style expression."""
+    insert). The topic column is typically the router's ``__sink__``
+    (Router.route_multicast_exploded / route_exclusive_tagged) or a
+    fmtstr-style expression."""
     (
         df.write.format(fmt)
         .mode(mode)
@@ -214,32 +215,6 @@ class BlackholeSink:
 
     def write(self, df: DataFrame, mode: str = "overwrite") -> None:
         df.write.format("noop").mode(mode).save()
-
-
-def write_routed_sinks(
-    sinks: dict[str, DataFrame],
-    root: str,
-    fmt: str = "parquet",
-    order_cols: tuple[str, str] = ("conv_id", "turn_idx"),
-    max_records_per_file: int = 1_000_000,
-) -> dict[str, str]:
-    """Write every routed sink under ``root/<sink>`` with the stable
-    intra-conversation ordering invariant (sortWithinPartitions before
-    write — aggregator_context semantics). Returns sink → path."""
-    paths = {}
-    for name, df in sinks.items():
-        out = df
-        if all(c in df.columns for c in order_cols):
-            out = df.sortWithinPartitions(*order_cols)
-        path = f"{root}/{name}"
-        (
-            out.write.format(fmt)
-            .mode("overwrite")
-            .option("maxRecordsPerFile", max_records_per_file)
-            .save(path)
-        )
-        paths[name] = path
-    return paths
 
 
 def compact_snapshot(

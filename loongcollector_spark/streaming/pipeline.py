@@ -10,7 +10,9 @@ the reference's flushers).
 
 The batch ``TranscriptPipeline.parse/enrich`` transforms are reused
 verbatim — they're pure column expressions, legal on streaming frames;
-the broadcast dict join is stream-static (no state). Custom stateful
+the broadcast dict join is stream-static (no state). Routing is the
+batch routed frame too (``run_single_pass``: a stateless explode, so
+one stream carries every sink in its ``__sink__`` column). Custom stateful
 operator example: per-key token-bucket rate limiting via
 ``applyInPandasWithState`` (the true streaming analogue of
 processor_rate_limit — plugins/processor/ratelimit/processor_rate_limit.go).
@@ -25,7 +27,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from loongcollector_spark.plans.transcript_pipeline import TranscriptPipeline
+from loongcollector_spark.plans.transcript_pipeline import (
+    CONV_PREFIX_LEN,
+    TranscriptPipeline,
+)
 
 
 class StreamingTranscriptPipeline:
@@ -57,16 +62,6 @@ class StreamingTranscriptPipeline:
     def parse_enrich(self, stream: DataFrame) -> DataFrame:
         return self.batch.enrich(self.batch.parse(stream))
 
-    def route(self, enriched: DataFrame) -> dict[str, DataFrame]:
-        """Multicast on a stream: each sink is an independent filtered
-        view; each started query re-reads from the source (per-query
-        checkpoints) — the streaming twin of the cached-parent fan-out."""
-        return self.batch.route(enriched) if not enriched.isStreaming else {
-            name: (enriched if r.condition is None
-                   else enriched.filter(r.condition.predicate()))
-            for name, r in ((r.name, r) for r in self.batch.router.routes)
-        }
-
     def metrics_stream(self, enriched: DataFrame) -> DataFrame:
         """Watermarked per-sink-ready aggregates: (conv_prefix, window) →
         counts/bytes. Late rows beyond the watermark are dropped —
@@ -77,7 +72,7 @@ class StreamingTranscriptPipeline:
             enriched.withWatermark("__evt_ts__", self.late_threshold)
             .groupBy(
                 F.window("__evt_ts__", self.window).alias("ts_window"),
-                F.substring(F.col("conv_id"), 1, 6).alias("conv_prefix"),
+                F.substring(F.col("conv_id"), 1, CONV_PREFIX_LEN).alias("conv_prefix"),
                 F.coalesce(F.col("error_class"), F.lit("")).alias("error_class"),
             )
             .agg(

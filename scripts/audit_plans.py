@@ -82,7 +82,7 @@ def main() -> None:
         ],
     ))
 
-    metrics = pipe.metrics_single_pass(routed)
+    metrics = pipe.metrics(routed)
     p = plan_of(metrics)
     sections.append((
         "per-sink metrics (bounded-key aggregation)",
@@ -138,22 +138,6 @@ def main() -> None:
              "rlike" in p.lower() or "RLIKE" in p),
             ("in-partition sort, no global sort",
              "Sort" in p),
-        ],
-    ))
-
-    fused = pipe.run(t)["__metrics__"]
-    p = plan_of(fused)
-    sections.append((
-        "cached-multicast fused metrics (r5: one exploded agg off the "
-        "cached parent instead of 3 unioned cache scans)",
-        p,
-        [
-            ("single scan: no Union of per-sink aggregations",
-             "Union" not in p),
-            ("reads the persisted parent (InMemoryTableScan)",
-             "InMemoryTableScan" in p),
-            ("partial aggregation before the exchange",
-             "HashAggregate" in p),
         ],
     ))
 

@@ -34,7 +34,7 @@ pipe = tp.TranscriptPipeline()
 
 def run():
     pipe.run_single_pass(corpus).write.format("noop").mode("overwrite").save()
-    pipe.metrics_single_pass(pipe.run_single_pass(corpus)).write.format(
+    pipe.metrics(pipe.run_single_pass(corpus)).write.format(
         "noop").mode("overwrite").save()
 
 run()  # warmup (codegen + JIT)

@@ -10,4 +10,4 @@ exec spark-submit \
   --py-files dist/loongcollector_spark.zip \
   jobs/run_pipeline.py \
   --input "${1:-/root/testdata/sf0.001}" --from-events \
-  --output "${2:-/tmp/lc_submit_out}" --single-pass
+  --output "${2:-/tmp/lc_submit_out}"

@@ -3,17 +3,20 @@ entry path: CollectionConfig → plugin chain → router)."""
 
 from __future__ import annotations
 
+from pyspark.sql import functions as F
+
 from loongcollector_spark.plans.config_pipeline import load_config
 
 
 class TestConfigPipeline:
     def test_yaml_end_to_end(self, spark, transcripts):
         cfg = load_config("/root/repo/configs/transcripts_pipeline.yaml")
-        sinks = cfg.run(transcripts)
-        assert set(sinks) == {"sink_model", "sink_parse_fail", "sink_all"}
-        all_rows = sinks["sink_all"]
+        routed = cfg.run(transcripts)
+        names = {r.name for r in cfg.router.routes}
+        assert names == {"sink_model", "sink_parse_fail", "sink_all"}
+        all_rows = cfg.router.sink(routed, "sink_all")
         assert all_rows.count() == transcripts.count()  # keep-fail + multicast
-        model = sinks["sink_model"].select("role_class").distinct().collect()
+        model = cfg.router.sink(routed, "sink_model").select("role_class").distinct().collect()
         assert [r.role_class for r in model] == ["model"]
         # regex grammar rows parsed; others tagged
         ok = all_rows.filter("error_class = ''")
@@ -31,8 +34,46 @@ processors:
     Include: [conv_id, turn_idx, role]
 """
         )
-        out = cfg.run(transcripts)["default"]
+        routed = cfg.run(transcripts)
+        assert [r.name for r in cfg.router.routes] == ["default"]
+        out = cfg.router.sink(routed, "default")
         assert out.columns == ["conv_id", "turn_idx", "role"]
+        assert out.count() == transcripts.count()
+
+    def test_discarding_tag_flusher(self, spark, transcripts):
+        """DiscardingTag removes the matched tag from that flusher's copy
+        only: NULL on its rows of the routed frame, column gone from its
+        view, values kept on every other sink."""
+        cfg = load_config(
+            """
+flushers:
+  - Name: sink_model
+    Match: {Key: role_class, Value: model, DiscardingTag: true}
+  - Name: sink_all
+"""
+        )
+        from loongcollector_spark.plans.transcript_pipeline import (
+            TranscriptPipeline,
+        )
+
+        pipe = TranscriptPipeline()
+        enriched = pipe.enrich(pipe.parse(transcripts))
+        routed = cfg.run(enriched)
+        by_sink = {
+            r["__sink__"]: (r["n"], r["n_null"])
+            for r in routed.groupBy("__sink__").agg(
+                F.count(F.lit(1)).alias("n"),
+                F.count(F.when(F.col("role_class").isNull(), 1)).alias("n_null"),
+            ).collect()
+        }
+        n_model = enriched.filter("role_class = 'model'").count()
+        assert by_sink["sink_model"] == (n_model, n_model)
+        assert by_sink["sink_all"][1] == enriched.filter("role_class IS NULL").count()
+        model = cfg.router.sink(routed, "sink_model")
+        assert "role_class" not in model.columns and "__sink__" not in model.columns
+        assert model.count() == n_model
+        kept = cfg.router.sink(routed, "sink_all")
+        assert kept.filter("role_class = 'model'").count() == n_model
 
 
 class TestContainerConfig:
@@ -50,7 +91,7 @@ class TestContainerConfig:
         )
         rows = {
             r.off: (r.content, r.n_merged)
-            for r in cfg.run(df)["sink_all"].collect()
+            for r in cfg.router.sink(cfg.run(df), "sink_all").collect()
         }
         assert rows == {0: ("abcd", 2), 2: ("solo", 1)}
 
@@ -61,7 +102,7 @@ class TestAgentLogsConfig:
         regex parser (search), cloud_meta mock tags, event-level
         key-regex filter, regex-md5 desensitize."""
         cfg = load_config("/root/repo/configs/agent_logs_pipeline.yaml")
-        out = cfg.run(transcripts)["sink_all"]
+        out = cfg.router.sink(cfg.run(transcripts), "sink_all")
         rows = out.collect()
         assert rows, "some apsara-grammar rows must parse"
         import hashlib
@@ -98,6 +139,6 @@ class TestJobCliConfigMode:
             "--config", "/root/repo/configs/agent_logs_pipeline.yaml",
         ])
         assert rc == 0
-        back = spark.read.parquet(str(out / "sink_all"))
+        back = spark.read.parquet(str(out / "routed" / "__sink__=sink_all"))
         assert back.count() > 0
         assert back.filter("u_field IS NULL").count() == 0

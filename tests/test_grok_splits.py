@@ -294,6 +294,35 @@ class TestGrokProcessor:
         assert a[2]["proto"] == "tls"  # $ matched before the final \n
         assert a[4]["ip"] is None
 
+    def test_ascii_classes_on_every_engine_path(self, text_df_factory):
+        """``\\w\\d\\s`` are ASCII classes on the jvm engine, the python RE2
+        path and both pandas fallbacks (an RE2-hostile pattern in the
+        Match list, a configured timeout): non-ASCII letters, digits and
+        spaces never match, whichever path runs."""
+        lines = ["naïve 42", "ab 12", "x ٤٢", "plain 7"]
+        want = [("ve", "42"), (None, None), (None, None), ("plain", "7")]
+        kw = dict(
+            SourceKey="content", FullMatch=False, IgnoreParseFailure=True,
+            CustomPatterns={"W": r"\w+", "D": r"\d+"},
+        )
+        plain = [r"%{W:w}\s%{D:n}"]
+        lookahead = plain + [r"(?=zzz)%{W:z}"]
+        engines = {
+            "jvm": Grok(Engine="jvm", Match=plain, **kw),
+            "python_re2": Grok(Engine="python", Match=plain, **kw),
+            "python_lookahead": Grok(Engine="python", Match=lookahead, **kw),
+            "python_timeout": Grok(
+                Engine="python", Match=plain, TimeoutMilliSeconds=1000, **kw
+            ),
+        }
+        assert engines["python_re2"]._re2_patterns() is not None
+        assert engines["python_lookahead"]._re2_patterns() is None
+        assert engines["python_timeout"]._re2_patterns() is None
+        df = text_df_factory(lines)
+        for name, g in engines.items():
+            got = [(r["w"], r["n"]) for r in rows_as_dicts(g(df))]
+            assert got == want, name
+
 
 class TestSplits:
     def test_split_char(self, text_df_factory):

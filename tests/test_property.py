@@ -58,16 +58,16 @@ class TestParseTotality:
         subsets; per-turn text equality is preserved."""
         pipe = TranscriptPipeline()
         df = _df(spark, texts)
-        sinks = pipe.run(df)
+        routed = pipe.run_single_pass(df)
         all_rows = {
             (r["conv_id"], r["turn_idx"]): r["text"]
-            for r in sinks["sink_all"].collect()
+            for r in pipe.router.sink(routed, "sink_all").collect()
         }
         assert len(all_rows) == len(texts)
         orig = {(r["conv_id"], r["turn_idx"]): r["text"] for r in df.collect()}
         assert all_rows == orig  # text equality under the key
         for name in ("sink_model", "sink_errors"):
-            for r in sinks[name].collect():
+            for r in pipe.router.sink(routed, name).collect():
                 assert (r["conv_id"], r["turn_idx"]) in all_rows
 
 

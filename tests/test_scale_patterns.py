@@ -187,7 +187,7 @@ class TestHotConversationSkew:
         assert per_sink["sink_all"] == n  # multicast row conservation
         # bounded aggregation keys: the hot conversation collapses into
         # (prefix, hour, error_class) cells — no reducer hot key
-        m = pipe.metrics_single_pass(routed)
+        m = pipe.metrics(routed)
         assert 0 < m.count() < 2000
 
     def test_metrics_from_snapshot_equals_inline(self, spark, tmp_path):
@@ -214,7 +214,7 @@ class TestHotConversationSkew:
                 "n_bytes", "sink"]
         a = sorted(
             tuple(str(x) for x in r)
-            for r in pipe.metrics_single_pass(routed).select(*cols).collect()
+            for r in pipe.metrics(routed).select(*cols).collect()
         )
         b = sorted(
             tuple(str(x) for x in r) for r in snap.select(*cols).collect()

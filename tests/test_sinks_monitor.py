@@ -18,7 +18,6 @@ from loongcollector_spark.sinks.writers import (
     json_serialize,
     topic_fmtstr,
     write_dynamic_topic,
-    write_routed_sinks,
 )
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -51,14 +50,17 @@ class TestSerializer:
         back = spark.read.parquet(str(tmp_path / "topics"))
         assert back.count() == 3
 
-    def test_write_routed_sinks_order_invariant(self, spark, transcripts, tmp_path):
+    def test_routed_write_order_invariant(self, spark, transcripts, tmp_path):
         router = Router([
             Route("model_only", TagCondition("role", "assistant")),
             Route("all", None),
         ])
-        sinks = router.route(transcripts)
-        paths = write_routed_sinks(sinks, str(tmp_path / "sinks"))
-        back = spark.read.parquet(paths["all"])
+        routed = router.route_multicast_exploded(transcripts)
+        write_dynamic_topic(
+            routed.sortWithinPartitions("conv_id", "turn_idx"),
+            str(tmp_path / "routed"), topic_col="__sink__",
+        )
+        back = spark.read.parquet(str(tmp_path / "routed" / "__sink__=all"))
         # per-turn text equality under stable (conv_id, turn_idx) order
         orig = transcripts.orderBy("conv_id", "turn_idx").select("conv_id", "turn_idx", "text")
         got = back.orderBy("conv_id", "turn_idx").select("conv_id", "turn_idx", "text")
@@ -209,12 +211,12 @@ class TestStreaming:
         replayed = {"done": False}
 
         def handle(batch_df, batch_id):
-            sinks = pipe.route(pipe.enrich(pipe.parse(batch_df)))
+            routed = pipe.run_single_pass(batch_df)
             unit = f"epoch={batch_id}"
             for sink in pipe.SINKS:
                 if unit in ck.committed_units(sink):
                     continue  # skip-committed: replayed epochs no-op
-                rows = sinks[sink]
+                rows = pipe.router.sink(routed, sink)
                 rows.write.mode("overwrite").parquet(
                     f"{out_root}/{sink}/{unit}"
                 )
@@ -252,7 +254,7 @@ class TestStreaming:
             len(ck.committed_units(s)) > n_phase1[s] for s in pipe.SINKS
         )
 
-        batch_sinks = pipe.route(pipe.enrich(pipe.parse(full)))
+        batch_routed = pipe.run_single_pass(full)
         cols = ["conv_id", "turn_idx", "role", "text", "error_class"]
         streamed_all = None
         for sink in pipe.SINKS:
@@ -265,24 +267,25 @@ class TestStreaming:
             )
             want = sorted(
                 tuple(str(x) for x in r)
-                for r in batch_sinks[sink].select(*cols).collect()
+                for r in pipe.router.sink(batch_routed, sink)
+                .select(*cols)
+                .collect()
             )
             assert got == want, f"{sink}: stream != batch after resume"
-        # metrics over the streamed union == batch metrics
+        # metrics over the streamed union (re-routed from sink_all, which
+        # carries every row) == batch metrics, every sink
         streamed_all = spark.read.option(
             "recursiveFileLookup", "true"
         ).parquet(f"{out_root}/sink_all")
         got_m = sorted(
             tuple(str(x) for x in r)
             for r in pipe.metrics(
-                {"sink_all": streamed_all}
+                pipe.router.route_multicast_exploded(streamed_all)
             ).collect()
         )
         want_m = sorted(
             tuple(str(x) for x in r)
-            for r in pipe.metrics(
-                {"sink_all": batch_sinks["sink_all"]}
-            ).collect()
+            for r in pipe.metrics(batch_routed).collect()
         )
         assert got_m == want_m
 

@@ -1,7 +1,8 @@
 """Similarity search over embedding columns (array<float>).
 
-* brute-force cosine top-k — the exact baseline: one numpy pass per
-  Arrow batch against the collected query matrix under the JVM fold
+* brute-force cosine top-k — the exact baseline: the query side is
+  collected once and cut into matrix blocks; one numpy pass per Arrow
+  batch of the corpus per block (``mapInArrow``) under the JVM fold
   law, window top-k. int8 top-k (`quantized_topk`) is the same pass
   with an int8 candidate law.
 * LSH-bucketed ANN — the scale path: random-hyperplane signatures
@@ -10,10 +11,16 @@
   join on signature prefix, exact re-rank within buckets. At 100 TB the
   bucket join replaces the cross join; recall is tuned by H and the
   number of probe permutations.
+* IVF ANN (KMeans or data-pivot cells) — exact re-rank in probed cells.
 * embedding-cosine near-dup — same machinery, threshold instead of top-k.
+
+All of them follow one degenerate-vector rule (stated in :func:`_scored`):
+:func:`_vectors` is its numpy form, :func:`_rule_norm` its Column form.
 """
 
 from __future__ import annotations
+
+import functools
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -36,23 +43,31 @@ def cosine(a: Column, b: Column) -> Column:
     return F.when(d > 0, dot(a, b) / d).otherwise(F.lit(0.0))
 
 
-def _cos_hoisted(a_vec: str, a_norm: str, b_vec: str, b_norm: str) -> Column:
-    """:func:`cosine` with pre-projected norms — same doubles
-    (``norm(a)*norm(b)`` either way), but every join site that scores
-    pairs should project norms per VECTOR before the join instead of
-    folding them per PAIR: |left|+|right| evaluations instead of
-    |left|×|right| (measured 2.5× on brute-force top-k at sf0.1)."""
-    d = F.col(a_norm) * F.col(b_norm)
+def _rule_norm(vec: Column, d: int | Column) -> Column:
+    """The degenerate-vector rule as a Column, the twin of
+    :func:`_vectors`: the fold-law norm of ``vec`` where the vector is
+    usable, else NULL. Usable means size ``d`` (an int or a Column), no
+    NULL element (its square makes the fold NULL) and a norm that is
+    finite and > 0 (Spark orders NaN above +inf, so ``< inf`` drops it)."""
+    n = norm(vec)
+    return F.when((F.size(vec) == d) & (n > 0) & (n < float("inf")), n)
+
+
+def _pair_cos(a_vec: str, a_norm: str, b_vec: str, b_norm: str) -> Column:
+    """:func:`cosine` of a pair whose norms were projected per VECTOR by
+    :func:`_rule_norm` before the join, so a join scores |left|+|right|
+    norm folds instead of |left|×|right| (measured 2.5× on brute-force
+    top-k at sf0.1). A pair with a NULL norm scores 0.0."""
+    an, bn = F.col(a_norm), F.col(b_norm)
     return F.when(
-        d > 0, dot(F.col(a_vec), F.col(b_vec)) / d
+        an.isNotNull() & bn.isNotNull(), dot(F.col(a_vec), F.col(b_vec)) / (an * bn)
     ).otherwise(F.lit(0.0))
 
 
 # --- exact and int8 top-k: one scorer ------------------------------------
 
-# query matrices above this many bytes (rows × d × itemsize,
-# summed over the float matrix and, for quantized_topk, the int8 codes
-# held as int64) keep the fold path
+# bytes of one query block's matrices (rows × d × itemsize, summed over
+# the float matrix and, for quantized_topk, the int8 codes held as int64)
 _MAX_QUERY_MATRIX_BYTES = 64 << 20
 # score cells (corpus rows × queries) per numpy block in a Python worker
 _BLOCK_CELLS = 1 << 22
@@ -75,7 +90,8 @@ def _fold_dot(a, b):
 def _vectors(vecs, dim: int):
     """(V, ok, norm) for an Arrow list array of vectors: V is the n × dim
     matrix in the element type, ``norm`` the fold-law norm and ``ok`` the
-    rows that are not degenerate; degenerate rows of V are zeroed."""
+    rows usable under the degenerate-vector rule (the twin of
+    :func:`_rule_norm`); unusable rows of V are zeroed."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -121,104 +137,19 @@ def _cos(num, nn, qn, mask):
         return np.where(mask, num / (nn * qn), 0.0)
 
 
-def _fold_scored(c: DataFrame, q: DataFrame, quantized: bool):
-    """The kernel's output computed per pair by JVM folds over a broadcast
-    cross join — the path for an empty or over-cap query side. The
-    dimension d (longest query vector) is an aggregate of the query side."""
-
-    def side(df: DataFrame, vec: str, p: str) -> DataFrame:
-        nrm = norm(F.col(vec))
-        df = df.withColumn(f"__{p}n__", F.when((nrm > 0) & (nrm < float("inf")), nrm))
-        if quantized:
-            df = quantize_int8(df, vec).withColumn(
-                f"__{p}i__", F.sqrt(_int_dot(F.col("q"), F.col("q")))
-            ).withColumnRenamed("q", f"__{p}q__")
-        return df
-
-    q = q.crossJoin(q.agg(F.max(F.size("qvec")).alias("__d__")))
-    pairs = side(c, "nvec", "n").crossJoin(F.broadcast(side(q, "qvec", "q")))
-    ok = (
-        F.col("__nn__").isNotNull()
-        & F.col("__qn__").isNotNull()
-        & (F.size("nvec") == F.col("__d__"))
-        & (F.size("qvec") == F.col("__d__"))
-    )
-    sim = F.when(
-        ok, dot(F.col("nvec"), F.col("qvec")) / (F.col("__nn__") * F.col("__qn__"))
-    ).otherwise(F.lit(0.0))
-    if not quantized:
-        return pairs.select("nid", "qid", sim.alias("cosine_sim"))
-    approx = F.when(
-        ok,
-        _int_dot(F.col("__nq__"), F.col("__qq__"))
-        / (F.col("__ni__") * F.col("__qi__")),
-    ).otherwise(F.lit(0.0))
-    return pairs.select("nid", "qid", approx.alias("approx"), sim.alias("sim"))
-
-
-def _scored(c: DataFrame, q: DataFrame, keep: int, quantized: bool) -> DataFrame:
-    """Score every (corpus ``nid``/``nvec``, query ``qid``/``qvec``) pair
-    in one numpy pass per Arrow batch (``mapInArrow``), pruned to the
-    per-batch top ``keep`` per query by the candidate law. Top-k merges
-    exactly, so a window over the survivors picks the same rows as over
-    all pairs.
-
-    * ``quantized=False``: the law is the float cosine; emits
-      ``(nid, qid, cosine_sim)``.
-    * ``quantized=True``: the law is the int8 cosine (:func:`quantize_int8`
-      codes, exact integer dot); emits ``(nid, qid, approx, sim)`` where
-      ``sim`` is the float cosine of the kept rows.
-
-    Both float cosines are the same :func:`_fold_dot` law as
-    :func:`cosine`, so scores equal the fold path's bit for bit.
-
-    Degenerate-vector rule, the same on both paths: the dimension d is
-    that of the longest query vector, and a vector that is NULL, holds a
-    NULL element, has a length other than d, or whose fold-law norm is
-    zero, NaN or infinite (all-zero, NaN-containing, overflowing) makes
-    every pair it is in score 0.0, for the int8 score and the float
-    cosine alike.
-
-    Runs one eager collect of the query side (one Spark job, as Arrow) to
-    build the query matrix. The job's single task sees the whole query
-    side and passes its rows on only when their matrices fit
-    ``_MAX_QUERY_MATRIX_BYTES``, so an over-cap query side never reaches
-    the driver; it, like an empty one, is scored by :func:`_fold_scored`
-    instead."""
+def _block_kernel(qids, qvecs, dim: int, keep: int, quantized: bool):
+    """The ``mapInArrow`` function that scores corpus batches against one
+    block of the query side (``qids``/``qvecs`` Arrow arrays, dimension
+    ``dim`` of the whole side)."""
     import numpy as np
     import pyarrow as pa
-    import pyarrow.compute as pc
-    from pyspark.sql.pandas.types import to_arrow_type
 
-    elem = to_arrow_type(q.schema["qvec"].dataType.elementType)
-    itemsize = elem.bit_width // 8 + (8 if quantized else 0)
-    # after coalesce(1) the partition id is constant, so this window spans
-    # the whole query side in one task with no exchange
-    whole = Window.partitionBy(F.spark_partition_id())
-    t = (
-        q.coalesce(1)
-        .select(
-            "qid",
-            "qvec",
-            F.count(F.lit(1)).over(whole).alias("__n__"),
-            F.greatest(F.max(F.size("qvec")).over(whole), F.lit(0)).alias("__d__"),
-        )
-        .filter(F.col("__n__") * F.col("__d__") * itemsize <= _MAX_QUERY_MATRIX_BYTES)
-        .select("qid", "qvec")
-        .toArrow()
-    )
-    if t.num_rows == 0:
-        return _fold_scored(c, q, quantized)
-    qvecs = t.column("qvec").combine_chunks()
-    dim = pc.max(pc.list_value_length(qvecs)).as_py() or 0
-    qids = t.column("qid").combine_chunks()
+    qids = pa.concat_arrays([qids])  # compact: a pickled slice ships its parent's buffers
     Q, q_ok, qn = _vectors(qvecs, dim)
     if quantized:
         Qc, qi = _int8_codes(Q, q_ok)
     nq = len(qids)
     block = max(1, _BLOCK_CELLS // nq)
-    nid_t = c.schema["nid"].dataType.simpleString()
-    qid_t = q.schema["qid"].dataType.simpleString()
 
     def score(rb):
         V, ok, nn = _vectors(rb.column("nvec"), dim)
@@ -254,8 +185,62 @@ def _scored(c: DataFrame, q: DataFrame, keep: int, quantized: bool) -> DataFrame
             for lo in range(0, rb.num_rows, block):
                 yield score(rb.slice(lo, block))
 
+    return kernel
+
+
+def _scored(c: DataFrame, q: DataFrame, keep: int, quantized: bool) -> DataFrame:
+    """Score every (corpus ``nid``/``nvec``, query ``qid``/``qvec``) pair
+    in one numpy pass per Arrow batch (``mapInArrow``), pruned to the
+    per-batch top ``keep`` per query by the candidate law. Top-k merges
+    exactly, so a window over the survivors picks the same rows as over
+    all pairs.
+
+    * ``quantized=False``: the law is the float cosine; emits
+      ``(nid, qid, cosine_sim)``.
+    * ``quantized=True``: the law is the int8 cosine (:func:`quantize_int8`
+      codes, exact integer dot); emits ``(nid, qid, approx, sim)`` where
+      ``sim`` is the float cosine of the kept rows.
+
+    Both float cosines are the same :func:`_fold_dot` law as
+    :func:`cosine`, so scores equal the JVM fold's bit for bit.
+
+    Degenerate-vector rule (:func:`_vectors`; :func:`_rule_norm` states
+    it for the JVM scorers): the dimension d is that of the longest query
+    vector, and a vector that is NULL, holds a NULL element, has a length
+    other than d, or whose fold-law norm is zero, NaN or infinite
+    (all-zero, NaN-containing, overflowing) makes every pair it is in
+    score 0.0, for the int8 score and the float cosine alike.
+
+    Building the plan collects the whole query side to the driver (one
+    Spark job, as Arrow), as a broadcast of it would. The side is cut
+    into blocks whose matrices fit ``_MAX_QUERY_MATRIX_BYTES``; each
+    block is one ``mapInArrow`` over the corpus and the blocks are
+    unioned, so a side over the cap scans the corpus once per block.
+    Each ``qid`` lives in one block, so the top-k still merges exactly.
+    An empty query side yields a typed empty frame and no Python worker."""
+    import pyarrow.compute as pc
+
+    t = q.toArrow()
+    qids = t.column("qid").combine_chunks()
+    qvecs = t.column("qvec").combine_chunks()
+    dim = pc.max(pc.list_value_length(qvecs)).as_py() or 0
+    itemsize = qvecs.type.value_type.bit_width // 8 + (8 if quantized else 0)
+    rows = max(1, _MAX_QUERY_MATRIX_BYTES // max(1, dim * itemsize))
     scores = "approx double, sim double" if quantized else "cosine_sim double"
-    return c.mapInArrow(kernel, f"nid {nid_t}, qid {qid_t}, {scores}")
+    schema = (
+        f"nid {c.schema['nid'].dataType.simpleString()}, "
+        f"qid {q.schema['qid'].dataType.simpleString()}, {scores}"
+    )
+    blocks = [
+        c.mapInArrow(
+            _block_kernel(qids[lo:lo + rows], qvecs[lo:lo + rows], dim, keep, quantized),
+            schema,
+        )
+        for lo in range(0, len(qids), rows)
+    ]
+    if not blocks:
+        return c.sparkSession.createDataFrame([], schema)
+    return functools.reduce(DataFrame.union, blocks)
 
 
 def brute_force_topk(
@@ -274,9 +259,10 @@ def brute_force_topk(
     Scoring is :func:`_scored`: a numpy pass per Arrow batch under the
     exact JVM fold law, pruned to the per-batch top ``k`` before the
     ranking exchange. Building the plan runs one eager collect of the
-    query side (the query matrix); an empty or over-cap query side is
-    scored by a broadcast cross join of JVM folds with the same scores.
-    Degenerate vectors score 0.0 (the rule in :func:`_scored`)."""
+    whole query side to the driver; a side whose matrix is over
+    ``_MAX_QUERY_MATRIX_BYTES`` is scored in blocks, each scanning the
+    corpus once. Degenerate vectors score 0.0 (the rule in
+    :func:`_scored`)."""
     c = corpus.select(
         F.col(corpus_id).alias("nid"), F.col(corpus_vec).alias("nvec")
     )
@@ -337,6 +323,29 @@ def with_hyperplane_sig(
     )
 
 
+def _bucketed(
+    df: DataFrame, key: str, vec: str, dim: int, n_planes: int, max_bucket: int | None = None
+) -> DataFrame:
+    """``df`` plus the hyperplane signature ``sig`` of ``vec`` and its
+    norm under the degenerate-vector rule at dimension ``dim``
+    (``__n__``, :func:`_rule_norm`), projected before any join.
+
+    With ``max_bucket``, each signature bucket keeps its ``max_bucket``
+    smallest ``key`` rows — a hot bucket (identical, near-zero or
+    boilerplate vectors; with n_planes=8 there are only 256 buckets)
+    otherwise makes the bucket join quadratic in it. Same guard as
+    minhash_lsh_candidates (dedup.py)."""
+    df = with_hyperplane_sig(df, vec, "sig", dim, n_planes).withColumn(
+        "__n__", _rule_norm(F.col(vec), dim)
+    )
+    if max_bucket is None:
+        return df
+    wb = Window.partitionBy("sig").orderBy(key)
+    return df.withColumn("__rn__", F.row_number().over(wb)).filter(
+        F.col("__rn__") <= max_bucket
+    ).drop("__rn__")
+
+
 def lsh_ann_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -351,37 +360,34 @@ def lsh_ann_topk(
 ) -> DataFrame:
     """Approximate top-k: join on hyperplane-signature bucket, exact
     cosine re-rank inside buckets. Scale path for when the query set is
-    too large to broadcast-cross-join.
+    too large to collect.
 
     ``max_bucket`` caps the corpus rows per signature bucket (kept by
-    smallest nid) — a degenerate bucket (near-zero or boilerplate
-    embeddings; with n_planes=8 there are only 256 buckets) otherwise
-    makes the bucket join quadratic in the hot bucket. Same guard as
-    minhash_lsh_candidates (dedup.py)."""
-    c = with_hyperplane_sig(
-        corpus.select(
-            F.col(corpus_id).alias("nid"), F.col(corpus_vec).alias("nvec")
-        ),
-        "nvec", "sig", dim, n_planes,
-    ).withColumn("__nn__", norm(F.col("nvec")))
-    wb = Window.partitionBy("sig").orderBy("nid")
-    c = c.withColumn("__rn__", F.row_number().over(wb)).filter(
-        F.col("__rn__") <= max_bucket
-    ).drop("__rn__")
-    q = with_hyperplane_sig(
-        queries.select(
-            F.col(query_id).alias("qid"), F.col(query_vec).alias("qvec")
-        ),
-        "qvec", "sig", dim, n_planes,
-    ).withColumn("__qn__", norm(F.col("qvec")))
+    smallest nid; see :func:`_bucketed`). Degenerate vectors, with d =
+    ``dim``, score 0.0 (the rule in :func:`_scored`)."""
+    c = _bucketed(
+        corpus.select(F.col(corpus_id).alias("nid"), F.col(corpus_vec).alias("nvec")),
+        "nid", "nvec", dim, n_planes, max_bucket,
+    )
+    q = _bucketed(
+        queries.select(F.col(query_id).alias("qid"), F.col(query_vec).alias("qvec")),
+        "qid", "qvec", dim, n_planes,
+    ).withColumnRenamed("__n__", "__qn__")
     scored = c.join(q, "sig").withColumn(
-        "cosine_sim", _cos_hoisted("nvec", "__nn__", "qvec", "__qn__")
+        "cosine_sim", _pair_cos("nvec", "__n__", "qvec", "__qn__")
     )
     w = Window.partitionBy("qid").orderBy(F.desc("cosine_sim"), F.asc("nid"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("qid", "nid", "cosine_sim", "rank")
+    )
+
+
+def _ivf_side(df: DataFrame, id_col: str, vec_col: str, key: str, vec: str) -> DataFrame:
+    """(``key``, ``vec`` as array<double>) of an IVF input."""
+    return df.select(
+        F.col(id_col).alias(key), F.col(vec_col).cast("array<double>").alias(vec)
     )
 
 
@@ -401,44 +407,53 @@ def ivf_topk(
     ``n_probe`` nearest centroids, exact cosine re-rank inside probed
     cells. The coarse quantizer trains once (seeded, deterministic); at
     100 TB the assignment is a broadcast of the tiny centroid table and
-    the search touches n_probe/n_clusters of the data."""
+    the search touches n_probe/n_clusters of the data.
+
+    KMeans trains on the corpus rows that are usable under the
+    degenerate-vector rule (d = the longest query vector, as in
+    :func:`_scored`). The other rows join cell 0: they score 0.0 against
+    every query, and a full probe (``n_probe == n_clusters``) still
+    equals :func:`brute_force_topk`. With no usable row (or no query)
+    nothing is trained and cell 0 is the only cell."""
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    corp = corpus.select(
-        F.col(corpus_id).alias("nid"),
-        F.col(corpus_vec).cast("array<double>").alias("nvec"),
-    ).withColumn("features", array_to_vector(F.col("nvec")))
-    model = KMeans(k=n_clusters, seed=seed, featuresCol="features").fit(corp)
-    assigned = model.transform(corp).withColumnRenamed("prediction", "cell")
-
-    centroids = [
-        (i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())
-    ]
-    cent_df = F.broadcast(
-        corpus.sparkSession.createDataFrame(
-            centroids, "cell int, cvec array<double>"
-        )
+    q = _ivf_side(queries, query_id, query_vec, "qid", "qvec")
+    d = q.select(F.max(F.size("qvec"))).scalar()
+    corp = _ivf_side(corpus, corpus_id, corpus_vec, "nid", "nvec").withColumn(
+        "__nn__", _rule_norm(F.col("nvec"), d)
     )
-    q = queries.select(
-        F.col(query_id).alias("qid"),
-        F.col(query_vec).cast("array<double>").alias("qvec"),
+    usable = corp.filter(F.col("__nn__").isNotNull()).withColumn(
+        "features", array_to_vector(F.col("nvec"))
     )
-    return _ivf_probe_rerank(assigned, cent_df, q, k, n_probe)
+    assigned = corp.filter(F.col("__nn__").isNull()).withColumn("cell", F.lit(0))
+    centers = [[]]  # an empty centroid is unusable: its cell scores 0.0
+    if not usable.isEmpty():
+        model = KMeans(k=n_clusters, seed=seed, featuresCol="features").fit(usable)
+        centers = model.clusterCenters()
+        assigned = model.transform(usable).select(
+            "nid", "nvec", "__nn__", F.col("prediction").alias("cell")
+        ).unionByName(assigned)
+    cent = corpus.sparkSession.createDataFrame(
+        [(i, [float(x) for x in c]) for i, c in enumerate(centers)],
+        "cell int, cvec array<double>",
+    )
+    cent = F.broadcast(cent.withColumn("__cn__", _rule_norm(F.col("cvec"), d)))
+    return _ivf_probe_rerank(assigned, cent, q, d, k, n_probe)
 
 
 def _ivf_probe_rerank(
-    assigned: DataFrame, cent_df: DataFrame, q: DataFrame, k: int, n_probe: int
+    assigned: DataFrame, cent: DataFrame, q: DataFrame, d: Column, k: int, n_probe: int
 ) -> DataFrame:
     """Shared IVF search: rank centroids per query (broadcast join), keep
     the ``n_probe`` nearest cells, exact cosine re-rank inside probed
-    cells. ``assigned`` = (nid, nvec, cell); ``cent_df`` = broadcastable
-    (cell, cvec); ``q`` = (qid, qvec). Norms are projected per vector
-    before every pair-scoring join (see :func:`_cos_hoisted`)."""
-    q = q.withColumn("__qn__", norm(F.col("qvec")))
-    cent_n = F.broadcast(cent_df.withColumn("__cn__", norm(F.col("cvec"))))
-    qc = q.crossJoin(cent_n).withColumn(
-        "c_sim", _cos_hoisted("qvec", "__qn__", "cvec", "__cn__")
+    cells. ``assigned`` = (nid, nvec, __nn__, cell); ``cent`` =
+    broadcastable (cell, cvec, __cn__); ``q`` = (qid, qvec); norms are
+    :func:`_rule_norm` at dimension ``d``, projected per vector before
+    every pair-scoring join (see :func:`_pair_cos`)."""
+    q = q.withColumn("__qn__", _rule_norm(F.col("qvec"), d))
+    qc = q.crossJoin(cent).withColumn(
+        "c_sim", _pair_cos("qvec", "__qn__", "cvec", "__cn__")
     )
     wq = Window.partitionBy("qid").orderBy(F.desc("c_sim"), F.asc("cell"))
     probes = (
@@ -446,13 +461,8 @@ def _ivf_probe_rerank(
         .filter(F.col("c_rank") <= n_probe)
         .select("qid", "qvec", "__qn__", "cell")
     )
-    scored = probes.join(
-        assigned.select("nid", "nvec", "cell").withColumn(
-            "__nn__", norm(F.col("nvec"))
-        ),
-        "cell",
-    ).withColumn(
-        "cosine_sim", _cos_hoisted("nvec", "__nn__", "qvec", "__qn__")
+    scored = probes.join(assigned.select("nid", "nvec", "__nn__", "cell"), "cell").withColumn(
+        "cosine_sim", _pair_cos("nvec", "__nn__", "qvec", "__qn__")
     )
     w = Window.partitionBy("qid").orderBy(F.desc("cosine_sim"), F.asc("nid"))
     return (
@@ -483,32 +493,30 @@ def ivf_topk_pivot(
 
     Same scale shape as ``ivf_topk``: assignment is a broadcast of the
     tiny pivot table against the corpus (one pass, no corpus shuffle),
-    and the search touches ~n_probe/n_pivots of the data."""
-    corp = corpus.select(
-        F.col(corpus_id).alias("nid"),
-        F.col(corpus_vec).cast("array<double>").alias("nvec"),
+    and the search touches ~n_probe/n_pivots of the data. Degenerate
+    vectors, pivots included, score 0.0 (d = the longest query vector,
+    the rule in :func:`_scored`)."""
+    q = _ivf_side(queries, query_id, query_vec, "qid", "qvec")
+    d = q.select(F.max(F.size("qvec"))).scalar()
+    corp = _ivf_side(corpus, corpus_id, corpus_vec, "nid", "nvec").withColumn(
+        "__nn__", _rule_norm(F.col("nvec"), d)
     )
-    cent_df = F.broadcast(
+    cent = F.broadcast(
         corp.filter(F.col("nid") % pivot_mod == 0).select(
-            F.col("nid").alias("cell"), F.col("nvec").alias("cvec")
+            F.col("nid").alias("cell"), F.col("nvec").alias("cvec"),
+            F.col("__nn__").alias("__cn__"),
         )
     )
-    corp = corp.withColumn("__nn__", norm(F.col("nvec")))
-    cent_n = F.broadcast(cent_df.withColumn("__cn__", norm(F.col("cvec"))))
-    ac = corp.crossJoin(cent_n).withColumn(
-        "a_sim", _cos_hoisted("nvec", "__nn__", "cvec", "__cn__")
+    ac = corp.crossJoin(cent).withColumn(
+        "a_sim", _pair_cos("nvec", "__nn__", "cvec", "__cn__")
     )
     wa = Window.partitionBy("nid").orderBy(F.desc("a_sim"), F.asc("cell"))
     assigned = (
         ac.withColumn("a_rank", F.row_number().over(wa))
         .filter(F.col("a_rank") == 1)
-        .select("nid", "nvec", "cell")
+        .select("nid", "nvec", "__nn__", "cell")
     )
-    q = queries.select(
-        F.col(query_id).alias("qid"),
-        F.col(query_vec).cast("array<double>").alias("qvec"),
-    )
-    return _ivf_probe_rerank(assigned, cent_df, q, k, n_probe)
+    return _ivf_probe_rerank(assigned, cent, q, d, k, n_probe)
 
 
 def cosine_near_dup_pairs(
@@ -524,18 +532,14 @@ def cosine_near_dup_pairs(
     exact cosine verify (id_a < id_b).
 
     ``max_bucket`` bounds each signature bucket before the self-join
-    (keep the max_bucket smallest ids) so one hot bucket — identical or
-    near-zero vectors all hashing to the same signature — cannot blow the
-    join up quadratically. Candidate pairs per bucket are then at most
-    max_bucket^2/2 regardless of skew."""
-    base = with_hyperplane_sig(
+    (keep the max_bucket smallest ids; see :func:`_bucketed`), so
+    candidate pairs per bucket are at most max_bucket^2/2 regardless of
+    skew. A degenerate vector (the rule in :func:`_scored`, d = ``dim``)
+    scores 0.0 with every other."""
+    base = _bucketed(
         df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")),
-        "v", "sig", dim, n_planes,
-    ).withColumn("__n__", norm(F.col("v")))
-    wb = Window.partitionBy("sig").orderBy("id")
-    base = base.withColumn("__rn__", F.row_number().over(wb)).filter(
-        F.col("__rn__") <= max_bucket
-    ).drop("__rn__")
+        "id", "v", dim, n_planes, max_bucket,
+    )
     left = base.select(
         "sig", F.col("id").alias("id_a"), F.col("v").alias("v_a"),
         F.col("__n__").alias("__na__"),
@@ -547,7 +551,7 @@ def cosine_near_dup_pairs(
     return (
         left.join(right, "sig")
         .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("cosine_sim", _cos_hoisted("v_a", "__na__", "v_b", "__nb__"))
+        .withColumn("cosine_sim", _pair_cos("v_a", "__na__", "v_b", "__nb__"))
         .filter(F.col("cosine_sim") >= threshold)
         .select("id_a", "id_b", "cosine_sim")
     )
@@ -578,17 +582,6 @@ def quantize_int8(
     return df.withColumn("q_scale", scale).withColumn("q", q)
 
 
-def _int_dot(a: Column, b: Column) -> Column:
-    """Dot product of two int arrays, accumulated in doubles — every
-    partial is an exact integer < 2^53, so the result is exact and
-    ORDER-INDEPENDENT (unlike float dot products)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x * y).cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
 def quantized_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -616,9 +609,10 @@ def quantized_topk(
     It emits light ``(nid, qid, approx, sim)`` rows, and the two windows
     on ``qid`` (by ``approx``, then by ``sim``) share one exchange; no
     vector crosses it. Building the plan runs one eager collect of the
-    query side; an empty or over-cap query side is scored by JVM folds
-    over a broadcast cross join with the same scores. Degenerate vectors
-    score 0.0 in both stages (the rule in :func:`_scored`).
+    whole query side to the driver; a side whose matrices are over
+    ``_MAX_QUERY_MATRIX_BYTES`` is scored in blocks, each scanning the
+    corpus once. Degenerate vectors score 0.0 in both stages (the rule
+    in :func:`_scored`).
     """
     c = corpus.select(
         F.col(corpus_id).alias("nid"), F.col(corpus_vec).alias("nvec")

@@ -280,6 +280,7 @@ def main() -> None:
         token_window_chunks,
     )
     from loongcollector_spark.functions.similarity import (  # noqa: E402
+        brute_force_topk,
         quantized_topk,
     )
     from loongcollector_spark.functions.textstats import tfidf_topk  # noqa: E402
@@ -327,20 +328,28 @@ def main() -> None:
     qset = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
     )
-    p = plan_of(quantized_topk(emb, qset, k=10, candidates=30))
-    sections.append((
-        "int8-quantized two-stage ANN (r5)",
-        p,
-        [
-            ("query side broadcast — the corpus never shuffles for "
-             "candidate generation",
-             "BroadcastNestedLoopJoin" in p or "BroadcastExchange" in p),
-            ("per-vector norms hoisted out of the cross join (no norm "
-             "fold on the pair side: aggregate appears in projections "
-             "before the join)",
-             "InPandas" not in p),
-        ],
-    ))
+    for title, frame, windows in (
+        ("exact cosine top-k (numpy kernel)",
+         brute_force_topk(emb, qset, k=10), 1),
+        ("int8-quantized two-stage ANN (numpy kernel)",
+         quantized_topk(emb, qset, k=10, candidates=30), 2),
+    ):
+        p = plan_of(frame)
+        sections.append((
+            title,
+            p,
+            [
+                ("ONE MapInArrow over the ONE corpus scan (the query side "
+                 "was collected while the plan was built; no vector "
+                 "crosses an exchange)",
+                 n_nodes(p, r"\(\d+\) MapInArrow") == 1
+                 and n_nodes(p, r"\(\d+\) Scan parquet") == 1),
+                ("no broadcast join", "Broadcast" not in p),
+                (f"one Exchange shared by the {windows} qid window(s)",
+                 n_nodes(p, r"\(\d+\) Exchange") == 1
+                 and n_nodes(p, r"\(\d+\) Window\b") == windows),
+            ],
+        ))
 
     scan = (
         spark.read.parquet(f"{SF}/events.parquet")

@@ -1,4 +1,5 @@
-"""Vector top-k scorers: the degenerate-vector rule on both scoring paths,
+"""Vector scorers: one degenerate-vector rule on every scorer (the numpy
+kernel and the JVM re-ranks), the blocked query side of the numpy kernel,
 one float re-rank law for exact and int8 top-k, and the functions layer's
 generated-class working set staying inside the codegen cache."""
 
@@ -12,7 +13,14 @@ from pyspark.sql import functions as F
 
 from loongcollector_spark.functions import similarity
 from loongcollector_spark.functions.dedup import dedup_clusters, minhash_lsh_candidates
-from loongcollector_spark.functions.similarity import brute_force_topk, quantized_topk
+from loongcollector_spark.functions.similarity import (
+    brute_force_topk,
+    cosine_near_dup_pairs,
+    ivf_topk,
+    ivf_topk_pivot,
+    lsh_ann_topk,
+    quantized_topk,
+)
 from tests.conftest import SF_DIR
 
 DIM = 4
@@ -69,25 +77,57 @@ def _frames(spark, case: str):
     return corpus, queries, _reference(f32, f32)
 
 
+def _ranked(out, score: str) -> dict:
+    return {(r.qid, r.nid): (r[score], r.rank) for r in out.collect()}
+
+
+def _scores(scorer: str, corpus, queries, n: int) -> dict:
+    """(qid, nid) -> (score, rank) from one scorer, every pair ranked
+    (``lsh`` ranks only the pairs that share a bucket); ``near_dup`` maps
+    (id_a, id_b) -> (score, None) for every pair id_a < id_b."""
+    if scorer == "brute":
+        return _ranked(brute_force_topk(corpus, queries, k=n), "cosine_sim")
+    if scorer == "int8":
+        rows = quantized_topk(corpus, queries, k=n, candidates=n).collect()
+        assert all(r.approx_r == 0.0 for r in rows if BAD_ID in (r.qid, r.nid))
+        return {(r.qid, r.nid): (r.sim_r, r.rank) for r in rows}
+    if scorer in ("lsh_full", "lsh"):
+        planes = 0 if scorer == "lsh_full" else 3
+        return _ranked(lsh_ann_topk(corpus, queries, dim=DIM, k=n, n_planes=planes), "cosine_sim")
+    if scorer == "ivf":
+        return _ranked(ivf_topk(corpus, queries, k=n, n_clusters=2, n_probe=2), "cosine_sim")
+    if scorer == "ivf_pivot":
+        out = ivf_topk_pivot(corpus, queries, k=n, pivot_mod=1, n_probe=n)
+        return _ranked(out, "cosine_sim")
+    out = cosine_near_dup_pairs(corpus, dim=DIM, threshold=-1.0, n_planes=0)
+    return {(r.id_a, r.id_b): (r.cosine_sim, None) for r in out.collect()}
+
+
+# (scorer, statement of the rule it runs under)
+SCORERS = [
+    ("brute", "numpy"),
+    ("int8", "numpy"),
+    ("lsh_full", "jvm"),
+    ("lsh", "jvm"),
+    ("ivf", "jvm"),
+    ("ivf_pivot", "jvm"),
+    ("near_dup", "jvm"),
+]
+
+
 @pytest.mark.parametrize("case", sorted(DEGENERATE))
-@pytest.mark.parametrize("path", ["numpy", "fold"])
-@pytest.mark.parametrize("scorer", ["brute", "int8"])
-def test_degenerate_vectors_score_zero(spark, monkeypatch, scorer, path, case):
-    if path == "fold":
-        monkeypatch.setattr(similarity, "_MAX_QUERY_MATRIX_BYTES", 0)
+@pytest.mark.parametrize("scorer,path", SCORERS)
+def test_degenerate_vectors_score_zero(spark, scorer, path, case):
     corpus, queries, ref = _frames(spark, case)
     n = len(GOOD) + 1
-    if scorer == "brute":
-        rows = brute_force_topk(corpus, queries, k=n).collect()
-        got = {(r.qid, r.nid): (r.cosine_sim, r.rank) for r in rows}
-        tol = 1e-6
-    else:
-        rows = quantized_topk(corpus, queries, k=n, candidates=n).collect()
-        got = {(r.qid, r.nid): (r.sim_r, r.rank) for r in rows}
-        tol = 1e-5
-        for r in rows:
-            if BAD_ID in (r.qid, r.nid):
-                assert r.approx_r == 0.0, r
+    got = _scores(scorer, corpus, queries, n)
+    tol = 1e-5 if scorer == "int8" else 1e-6
+    if scorer == "near_dup":
+        ref = {(a, b): s for (a, b), s in ref.items() if a < b}
+    if scorer == "lsh":
+        # bucketed: a subset of the pairs, every vector's self-match kept
+        assert set(got) <= set(ref) and {(i, i) for i in GOOD} <= set(got)
+        ref = {key: ref[key] for key in got}
     assert set(got) == set(ref)
     for key, want in ref.items():
         score, _ = got[key]
@@ -95,10 +135,12 @@ def test_degenerate_vectors_score_zero(spark, monkeypatch, scorer, path, case):
             assert score == 0.0, (key, score)
         else:
             assert abs(score - want) <= tol, (key, score, want)
+    if scorer == "near_dup":
+        return
     # ranking: score desc, then nid asc (0.0 ties included)
     for qid in {q for q, _ in ref}:
         order = sorted((nid for q, nid in ref if q == qid), key=lambda nid: got[qid, nid][1])
-        assert [got[qid, nid][1] for nid in order] == list(range(1, n + 1))
+        assert [got[qid, nid][1] for nid in order] == list(range(1, len(order) + 1))
         scores = [got[qid, nid][0] for nid in order]
         assert scores == sorted(scores, reverse=True)
         for a, b in zip(order, order[1:]):
@@ -106,34 +148,111 @@ def test_degenerate_vectors_score_zero(spark, monkeypatch, scorer, path, case):
                 assert a < b
 
 
+@pytest.mark.parametrize("case", ["nan", "inf"])
+def test_nan_and_inf_vectors_never_rank_first(spark, case):
+    """A vector with a NaN or inf element shares the bucket or cell of
+    every query; it never outranks an exact self-match, nor passes a
+    near-duplicate threshold."""
+    corpus, queries, _ = _frames(spark, case)
+    for out in (
+        lsh_ann_topk(corpus, queries, dim=DIM, k=1, n_planes=0),
+        ivf_topk_pivot(corpus, queries, k=1, pivot_mod=1, n_probe=1),
+    ):
+        top1 = {r.qid: r.nid for r in out.collect()}
+        assert {qid: top1[qid] for qid in GOOD} == {qid: qid for qid in GOOD}
+    dups = cosine_near_dup_pairs(corpus, dim=DIM, threshold=0.95, n_planes=0)
+    assert [r for r in dups.collect() if BAD_ID in (r.id_a, r.id_b)] == []
+
+
+def _jvm_cosines(corpus, queries) -> dict:
+    """(qid, nid) -> :func:`similarity.cosine` over a cross join."""
+    pairs = corpus.crossJoin(queries).select(
+        "qid", "vec_id", similarity.cosine(F.col("embedding"), F.col("qvec")).alias("c")
+    )
+    return {(r.qid, r.vec_id): r.c for r in pairs.collect()}
+
+
 @pytest.mark.parametrize("scorer", ["brute", "int8"])
 def test_numpy_and_fold_paths_agree_bit_for_bit(spark, monkeypatch, scorer):
+    """The numpy kernel agrees bit for bit with the JVM fold law
+    (:func:`similarity.cosine` over a cross join), whether the query side
+    is one block or, over the byte cap, several: blocked rows equal
+    one-block rows, with the dimension taken from the whole side (the
+    short vector's block holds no vector of full length)."""
     vecs = {**GOOD, **{10 + i: v for i, v in enumerate(DEGENERATE.values())}}
     corpus = spark.createDataFrame(list(vecs.items()), "vec_id long, embedding array<float>")
     queries = spark.createDataFrame(list(vecs.items()), "qid long, qvec array<float>")
+    n = len(vecs)
 
-    def run():
+    def frame():
         if scorer == "brute":
-            out = brute_force_topk(corpus, queries, k=len(vecs))
+            return brute_force_topk(corpus, queries, k=n)
+        return quantized_topk(corpus, queries, k=n, candidates=n)
+
+    one = sorted(tuple(r) for r in frame().collect())
+    # two query rows per block: 5 blocks, one of them (NULL, short)
+    itemsize = 4 + (8 if scorer == "int8" else 0)
+    monkeypatch.setattr(similarity, "_MAX_QUERY_MATRIX_BYTES", 2 * DIM * itemsize)
+    blocked = frame()
+    assert blocked._jdf.queryExecution().executedPlan().toString().count("MapInArrow") == 5
+    rows = blocked.collect()
+    assert sorted(tuple(r) for r in rows) == one
+    jvm = _jvm_cosines(corpus, queries)
+    for r in rows:
+        score = r.cosine_sim if scorer == "brute" else r.sim_r
+        if r.qid in GOOD and r.nid in GOOD:
+            want = jvm[r.qid, r.nid]
+            assert score == (want if scorer == "brute" else round(want, 5)), r
         else:
-            out = quantized_topk(corpus, queries, k=len(vecs), candidates=len(vecs))
-        return sorted(tuple(r) for r in out.collect())
+            assert score == 0.0, r
 
-    fast = run()
-    # a cap below the query matrix: the fold path scores it, and the
-    # query side's collect returns no rows to the driver
-    monkeypatch.setattr(similarity, "_MAX_QUERY_MATRIX_BYTES", 64)
-    collected = []
-    to_arrow = type(queries).toArrow
 
-    def spy(df):
-        t = to_arrow(df)
-        collected.append(t.num_rows)
-        return t
+def test_building_the_plan_runs_one_job(spark):
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    qs = emb.filter(F.col("vec_id") < 5).select(
+        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
+    )
+    sc = spark.sparkContext
+    jobs = {}
+    try:
+        for name, make in (
+            ("brute", lambda: brute_force_topk(emb, qs, k=10)),
+            ("int8", lambda: quantized_topk(emb, qs, k=10, candidates=30)),
+        ):
+            sc.setJobGroup(f"plan-build-{name}", "build the top-k plan")
+            make()
+            jobs[name] = len(sc.statusTracker().getJobIdsForGroup(f"plan-build-{name}"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert jobs == {"brute": 1, "int8": 1}
 
-    monkeypatch.setattr(type(queries), "toArrow", spy)
-    assert run() == fast
-    assert collected == [0]
+
+def test_empty_query_side_returns_typed_empty_frames(spark):
+    corpus, queries, _ = _frames(spark, "zero")
+    for make in (
+        lambda q: brute_force_topk(corpus, q, k=3),
+        lambda q: quantized_topk(corpus, q, k=3, candidates=5),
+    ):
+        empty = make(queries.limit(0))
+        assert empty.schema == make(queries).schema
+        assert "MapInArrow" not in empty._jdf.queryExecution().executedPlan().toString()
+        assert empty.collect() == []
+
+
+def test_ivf_with_no_usable_corpus_row_trains_nothing(spark):
+    """No usable row to train KMeans on: one cell, every pair scores 0.0
+    as in brute force, and an empty query side yields no rows."""
+    corpus = spark.createDataFrame(
+        [(10 + i, v) for i, v in enumerate(DEGENERATE.values())],
+        "vec_id long, embedding array<float>",
+    )
+    queries = spark.createDataFrame(list(GOOD.items()), "qid long, qvec array<float>")
+    n = len(DEGENERATE)
+    ivf = sorted(ivf_topk(corpus, queries, k=n, n_clusters=2, n_probe=2).collect())
+    assert ivf == sorted(brute_force_topk(corpus, queries, k=n).collect())
+    assert {r.cosine_sim for r in ivf} == {0.0}
+    assert ivf_topk(corpus, queries.limit(0), k=n, n_clusters=2, n_probe=2).collect() == []
 
 
 def test_int8_rerank_is_the_brute_force_law(spark):

@@ -188,87 +188,3 @@ class BatchedResumableRunner:
             for r in stats:
                 processed.setdefault(sink, []).append(r["u"])
         return processed
-
-
-class ResumableRunner:
-    """Run a per-unit pipeline with skip-committed semantics.
-
-    ``unit_col`` must be a stable, enumerable partition of the input
-    (e.g. ``date_trunc('day', ts)`` stringified, or a pmod bucket of
-    conv_id). Units already committed for a sink are skipped; interrupted
-    units re-run idempotently (their output dir is overwritten before the
-    checkpoint row is appended).
-
-    At 10^12-row scale units are table partitions and this loop runs a
-    handful of units per job — the anti-join is a metadata operation,
-    never a data shuffle.
-    """
-
-    def __init__(
-        self,
-        spark: SparkSession,
-        checkpoint: CheckpointTable,
-        output_root: str,
-        unit_col: str = "unit",
-    ):
-        self.spark = spark
-        self.checkpoint = checkpoint
-        self.output_root = output_root
-        self.unit_col = unit_col
-
-    def run(
-        self,
-        df: DataFrame,
-        sinks: dict[str, DataFrame] | None = None,
-        transform=None,
-        run_id: str | None = None,
-    ) -> dict[str, list[str]]:
-        """Process every unit of ``df`` not yet committed.
-
-        ``transform(df_unit) -> dict[sink, DataFrame]`` is applied per
-        remaining unit. Returns {sink: [units processed]}.
-        """
-        from pyspark.sql import Observation
-
-        run_id = run_id or uuid.uuid4().hex[:12]
-        units = [
-            r.u
-            for r in df.select(F.col(self.unit_col).alias("u")).distinct().collect()
-        ]
-        committed: dict[str, set[str]] = {}
-        processed: dict[str, list[str]] = {}
-        for unit in sorted(units):
-            unit_df = df.filter(F.col(self.unit_col) == unit)
-            outs = transform(unit_df) if transform else {"default": unit_df}
-            for sink, out in outs.items():
-                if sink not in committed:
-                    committed[sink] = self.checkpoint.committed_units(sink)
-                if str(unit) in committed[sink]:
-                    continue
-                path = f"{self.output_root}/{sink}/unit={unit}"
-                out = out.withColumn(
-                    "__lineage__",
-                    F.concat_ws(
-                        ":",
-                        F.lit(run_id),
-                        F.lit(unit),
-                        F.spark_partition_id().cast("string"),
-                    ),
-                )
-                # stats ride the write action itself (no second scan)
-                obs = Observation(f"{sink}:{unit}")
-                aggs = [F.count(F.lit(1)).alias("n")]
-                if "text" in out.columns:
-                    aggs.append(
-                        F.coalesce(
-                            F.sum(F.octet_length(F.col("text"))), F.lit(0)
-                        ).alias("b")
-                    )
-                out = out.observe(obs, *aggs)
-                out.write.mode("overwrite").parquet(path)
-                stats = obs.get
-                self.checkpoint.commit(
-                    run_id, str(unit), sink, stats["n"], stats.get("b", 0)
-                )
-                processed.setdefault(sink, []).append(str(unit))
-        return processed

@@ -39,8 +39,11 @@ def norm(a: Column) -> Column:
 
 
 def cosine(a: Column, b: Column) -> Column:
-    d = norm(a) * norm(b)
-    return F.when(d > 0, dot(a, b) / d).otherwise(F.lit(0.0))
+    """Cosine of two vector Columns under the degenerate-vector rule:
+    each side is judged by :func:`_rule_norm` at the other side's size,
+    and the pair scores by the :func:`_pair_cos` law (0.0 when either
+    side is unusable)."""
+    return _pair_cos(a, _rule_norm(a, F.size(b)), b, _rule_norm(b, F.size(a)))
 
 
 def _rule_norm(vec: Column, d: int | Column) -> Column:
@@ -53,15 +56,18 @@ def _rule_norm(vec: Column, d: int | Column) -> Column:
     return F.when((F.size(vec) == d) & (n > 0) & (n < float("inf")), n)
 
 
-def _pair_cos(a_vec: str, a_norm: str, b_vec: str, b_norm: str) -> Column:
-    """:func:`cosine` of a pair whose norms were projected per VECTOR by
-    :func:`_rule_norm` before the join, so a join scores |left|+|right|
-    norm folds instead of |left|×|right| (measured 2.5× on brute-force
-    top-k at sf0.1). A pair with a NULL norm scores 0.0."""
-    an, bn = F.col(a_norm), F.col(b_norm)
-    return F.when(
-        an.isNotNull() & bn.isNotNull(), dot(F.col(a_vec), F.col(b_vec)) / (an * bn)
-    ).otherwise(F.lit(0.0))
+def _pair_cos(a_vec, a_norm, b_vec, b_norm) -> Column:
+    """:func:`cosine` of a pair whose :func:`_rule_norm` norms are given
+    (Columns or column names). The re-ranks project the norms per VECTOR
+    before the join, so a join scores |left|+|right| norm folds instead
+    of |left|×|right| (measured 2.5× on brute-force top-k at sf0.1). A
+    pair with a NULL norm scores 0.0."""
+    av, an, bv, bn = (
+        F.col(c) if isinstance(c, str) else c for c in (a_vec, a_norm, b_vec, b_norm)
+    )
+    return F.when(an.isNotNull() & bn.isNotNull(), dot(av, bv) / (an * bn)).otherwise(
+        F.lit(0.0)
+    )
 
 
 # --- exact and int8 top-k: one scorer ------------------------------------

@@ -327,6 +327,19 @@ def _scan_open_state(u, v, p0: bool):
     return out
 
 
+def _chunk_entries(f0, f1, b0, b1, p0: bool):
+    """Entry state and event-id offset of each chunk of one group, in chunk
+    order. Chunk j maps its entry state p to ``f1[j] if p else f0[j]`` and
+    opens ``b1[j] if p else b0[j]`` events: the recurrence of
+    :func:`_scan_open_state` with u=f1, v=f0. So the entry states are one
+    scan and the offsets an exclusive cumsum of the events opened."""
+    import numpy as np
+
+    entry = _scan_open_state(f1, f0, p0)
+    step = np.where(entry, b1, b0)
+    return entry, np.cumsum(step) - step
+
+
 # ChunkRows="auto": a group must exceed this many rows before the
 # 3-shuffle chunk-parallel FSM beats the single-task plain path (the
 # crossover measured in BENCH.md sits between a 400k-row and a 4M-row
@@ -1075,21 +1088,16 @@ class MergeMultilineLog(Processor):
             import pandas as pd
 
             pdf = pdf.sort_values("__chunk__")
-            state, off = p0, 0
-            ent, offs = [], []
-            for f0, f1, b0, b1 in zip(
-                pdf["f0"], pdf["f1"], pdf["b0"], pdf["b1"]
-            ):
-                ent.append(bool(state))
-                offs.append(off)
-                off += int(b1 if state else b0)
-                state = bool(f1 if state else f0)
+            entry, off = _chunk_entries(
+                pdf["f0"].to_numpy(dtype=bool), pdf["f1"].to_numpy(dtype=bool),
+                pdf["b0"].to_numpy(), pdf["b1"].to_numpy(), p0,
+            )
             return pd.DataFrame(
                 {
-                    gk: [key[0]] * len(ent),
+                    gk: [key[0]] * len(entry),
                     "__chunk__": pdf["__chunk__"].to_numpy(),
-                    "__entry__": ent,
-                    "__off__": offs,
+                    "__entry__": entry,
+                    "__off__": off,
                 }
             )
 

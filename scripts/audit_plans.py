@@ -1,21 +1,28 @@
 """Dump the physical plans of the headline queries with shape assertions
 → PLANS.md. The artifact the 100TB review reads: where filters pushed,
 what broadcast, where the (few) exchanges are.
+
+A section titled ``[leaf <name>]`` audits a frame of that bench leaf,
+built by ``bench_leaves.py`` over the sf0.001 inputs (the sf transcripts
+stand in for the generated corpus). The other sections audit operators
+that no leaf writes as such. The Spark master is
+``local[SPARK_GRAFT_CPUS]`` (default: the cores this process may run on).
 """
 
 from __future__ import annotations
 
-import contextlib
-import io
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from bench import canary_width  # noqa: E402
+from bench_leaves import LEAVES, Inputs, plan_of  # noqa: E402
 from loongcollector_spark.session import get_spark  # noqa: E402
-from loongcollector_spark.plans import transcript_pipeline as tp  # noqa: E402
 from loongcollector_spark.sources.transcripts import (  # noqa: E402
     transcripts_from_events,
 )
@@ -23,28 +30,27 @@ from loongcollector_spark.sources.transcripts import (  # noqa: E402
 SF = "/root/testdata/sf0.001"
 
 
-def plan_of(df) -> str:
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
-
-
 def n_nodes(plan: str, pattern: str) -> int:
     return len(re.findall(pattern, plan.split("== Initial Plan ==")[0]))
 
 
 def main() -> None:
-    spark = get_spark(master="local[8]")
-    pipe = tp.TranscriptPipeline()
+    spark = get_spark(master=f"local[{canary_width()}]")
     t = transcripts_from_events(spark, SF)
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    inp = Inputs(
+        corpus=t, trans=t, docs=docs,
+        emb=spark.read.parquet(f"{SF}/embeddings.parquet"),
+    )
+
+    def leaf(name: str, frame: int = 0) -> str:
+        return plan_of(list(LEAVES[name](inp))[frame])
 
     sections = []
 
-    parsed = pipe.parse(t)
-    p = plan_of(parsed)
+    p = leaf("parse_dispatch")
     sections.append((
-        "parse (anchored 5-grammar dispatch)",
+        "parse (anchored 5-grammar dispatch) [leaf parse_dispatch]",
         p,
         [
             ("single Exchange (only the turn_idx window of the transcript "
@@ -56,10 +62,9 @@ def main() -> None:
         ],
     ))
 
-    enriched = pipe.enrich(parsed)
-    p = plan_of(enriched)
+    p = leaf("enrich_broadcast_join")
     sections.append((
-        "enrich (dict-map lookups)",
+        "enrich (dict-map lookups) [leaf enrich_broadcast_join]",
         p,
         [
             ("tiny enum dicts fold to literal-map projections — NO join "
@@ -70,10 +75,9 @@ def main() -> None:
         ],
     ))
 
-    routed = pipe.run_single_pass(t)
-    p = plan_of(routed)
+    p = leaf("pipeline_end_to_end", 0)
     sections.append((
-        "single-pass multicast route (exploded)",
+        "single-pass multicast route (exploded) [leaf pipeline_end_to_end]",
         p,
         [
             ("Generate/explode present", "Generate explode" in p or "Generate" in p),
@@ -82,10 +86,9 @@ def main() -> None:
         ],
     ))
 
-    metrics = pipe.metrics(routed)
-    p = plan_of(metrics)
+    p = leaf("pipeline_end_to_end", 1)
     sections.append((
-        "per-sink metrics (bounded-key aggregation)",
+        "per-sink metrics (bounded-key aggregation) [leaf pipeline_end_to_end]",
         p,
         [
             ("partial aggregation before the exchange (map-side combine)",
@@ -93,20 +96,10 @@ def main() -> None:
         ],
     ))
 
-    from loongcollector_spark.operators.grok import Grok  # noqa: E402
-
-    wide = Grok(
-        SourceKey="text",
-        Match=[
-            "\\[%{INT:tsv}\\]\t\\[%{LOGLEVEL:lvl}\\]\t\\[%{INT:n}\\]\t"
-            "\\[%{UNIXPATH:src}:%{INT:line}\\]\tuser:%{USERNAME:usr}\t"
-            "etype:%{WORD:etype}"
-        ],
-        IgnoreParseFailure=True,
-    )(t)
-    p = plan_of(wide)
+    p = leaf("grok_jvm_wide")
     sections.append((
-        "wide grok (7-alias, single-execution replace+split path)",
+        "wide grok (7-alias, single-execution replace+split path) "
+        "[leaf grok_jvm_wide]",
         p,
         [
             ("regexp_replace single-extract present (not per-alias "
@@ -117,17 +110,10 @@ def main() -> None:
         ],
     ))
 
-    from loongcollector_spark.operators.splits import (  # noqa: E402
-        MergeMultilineLog,
-    )
-
-    fsm = MergeMultilineLog(
-        SourceKey="text", GroupKey="conv_id", OrderKey="turn_idx",
-        StartPattern=r"^\{", EndPattern=r"\|",
-    )(t)
-    p = plan_of(fsm)
+    p = leaf("multiline_fsm")
     sections.append((
-        "multiline merge (vectorized scan FSM, partition-level pandas)",
+        "multiline merge (vectorized scan FSM, partition-level pandas) "
+        "[leaf multiline_fsm]",
         p,
         [
             ("exactly one Exchange for the group-key repartition "
@@ -149,7 +135,6 @@ def main() -> None:
         pack_sequences,
     )
 
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
     p = plan_of(hash_sample(docs, 0.25))
     sections.append((
         "deterministic hash sample (md5 hex-prefix threshold)",
@@ -189,10 +174,6 @@ def main() -> None:
         ],
     ))
 
-    from loongcollector_spark.functions import textstats  # noqa: E402
-    from loongcollector_spark.functions.packing import (  # noqa: E402
-        context_window_stats,
-    )
     from loongcollector_spark.functions.sessions import (  # noqa: E402
         consecutive_runs,
         sessionize,
@@ -209,16 +190,10 @@ def main() -> None:
             ("no Python nodes", "InPandas" not in p),
         ],
     ))
-    p = plan_of(
-        context_window_stats(
-            t.withColumn(
-                "n_tokens", textstats.bpe_ish_token_count(F.col("text"))
-            ),
-            budget=128,
-        )
-    )
+    p = leaf("context_window_stats_2m")
     sections.append((
-        "context-window assembly (cumsum + RANGE frame, r5)",
+        "context-window assembly (cumsum + RANGE frame, r5) "
+        "[leaf context_window_stats_2m]",
         p,
         [
             ("one conv-key Exchange (+ derivation): the RANGE window "
@@ -242,14 +217,10 @@ def main() -> None:
         ],
     ))
 
-    from loongcollector_spark.functions.convstats import (  # noqa: E402
-        conversation_fingerprint_xor,
-        turn_order_audit,
-    )
-
-    p = plan_of(turn_order_audit(t))
+    p = leaf("conversation_stats_audit_quality", 0)
     sections.append((
-        "turn-order audit (conversation integrity gate, r5)",
+        "turn-order audit (conversation integrity gate, r5) "
+        "[leaf conversation_stats_audit_quality]",
         p,
         [
             ("one conv-key Exchange (+ derivation): the lag window and "
@@ -258,9 +229,10 @@ def main() -> None:
             ("no Python nodes", "InPandas" not in p),
         ],
     ))
-    p = plan_of(conversation_fingerprint_xor(t))
+    p = leaf("conversation_fingerprint_xor")
     sections.append((
-        "conversation fingerprint, XOR-fold scale variant (r5)",
+        "conversation fingerprint, XOR-fold scale variant (r5) "
+        "[leaf conversation_fingerprint_xor]",
         p,
         [
             ("bit_xor partial-aggregates MAP-SIDE (a hot conversation "
@@ -275,20 +247,9 @@ def main() -> None:
         ],
     ))
 
-    from loongcollector_spark.functions.lm import bigram_lm_score  # noqa: E402
-    from loongcollector_spark.functions.packing import (  # noqa: E402
-        token_window_chunks,
-    )
-    from loongcollector_spark.functions.similarity import (  # noqa: E402
-        brute_force_topk,
-        quantized_topk,
-    )
-    from loongcollector_spark.functions.textstats import tfidf_topk  # noqa: E402
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    p = plan_of(tfidf_topk(docs, k=5))
+    p = leaf("tfidf_topk_docs")
     sections.append((
-        "tf-idf top-k keywords (r5)",
+        "tf-idf top-k keywords (r5) [leaf tfidf_topk_docs]",
         p,
         [
             ("ONE corpus pass: df via window over the tf table, not a "
@@ -297,9 +258,9 @@ def main() -> None:
             ("no Python nodes", "InPandas" not in p),
         ],
     ))
-    p = plan_of(bigram_lm_score(docs))
+    p = leaf("lm_bigram_ppl_docs")
     sections.append((
-        "bigram LM pseudo-perplexity (r5)",
+        "bigram LM pseudo-perplexity (r5) [leaf lm_bigram_ppl_docs]",
         p,
         [
             ("2 parquet scans total: history counts via window over the "
@@ -312,9 +273,9 @@ def main() -> None:
             ("no Python nodes", "InPandas" not in p),
         ],
     ))
-    p = plan_of(token_window_chunks(docs, 128, 16))
+    p = leaf("token_chunks_docs")
     sections.append((
-        "token-window chunker (r5)",
+        "token-window chunker (r5) [leaf token_chunks_docs]",
         p,
         [
             ("ZERO Exchanges — chunking runs at scan speed",
@@ -322,21 +283,13 @@ def main() -> None:
             ("no Python nodes", "InPandas" not in p),
         ],
     ))
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet").withColumn(
-        "embedding", F.col("embedding").cast("array<double>")
-    )
-    qset = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
-    )
-    for title, frame, windows in (
-        ("exact cosine top-k (numpy kernel)",
-         brute_force_topk(emb, qset, k=10), 1),
-        ("int8-quantized two-stage ANN (numpy kernel)",
-         quantized_topk(emb, qset, k=10, candidates=30), 2),
+    for title, name, windows in (
+        ("exact cosine top-k (numpy kernel)", "ann_brute_float", 1),
+        ("int8-quantized two-stage ANN (numpy kernel)", "ann_quantized_int8", 2),
     ):
-        p = plan_of(frame)
+        p = leaf(name)
         sections.append((
-            title,
+            f"{title} [leaf {name}]",
             p,
             [
                 ("ONE MapInArrow over the ONE corpus scan (the query side "
@@ -379,7 +332,7 @@ def main() -> None:
             ok_all &= ok
             out.append(f"- {'✅' if ok else '❌'} {desc}")
         out.append("\n```\n" + plan.strip()[:4000] + "\n```\n")
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print("PLANS.md written; all checks pass:", ok_all)
 

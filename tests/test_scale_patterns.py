@@ -562,6 +562,26 @@ class TestHotConversationSkew:
                 )
                 assert a == b, (mode, treatment)
 
+    def test_chunk_entries_equal_the_sequential_fold(self):
+        """The chunked path's composition (one scan + an exclusive cumsum)
+        equals folding the chunk transfer functions left to right."""
+        import numpy as np
+
+        from loongcollector_spark.operators.splits import _chunk_entries
+
+        rng = np.random.default_rng(7)
+        for n in range(1, 30):
+            f0, f1 = rng.random(n) < 0.5, rng.random(n) < 0.5
+            b0, b1 = rng.integers(0, 4, n), rng.integers(0, 4, n)
+            for p0 in (False, True):
+                state, off, want = p0, 0, []
+                for j in range(n):
+                    want.append((state, off))
+                    off += int(b1[j] if state else b0[j])
+                    state = bool(f1[j] if state else f0[j])
+                entry, offs = _chunk_entries(f0, f1, b0, b1, p0)
+                assert list(zip(entry.tolist(), offs.tolist())) == want
+
 
 class TestKeySkewStats:
     def test_hot_key_detected(self, spark):

@@ -304,14 +304,17 @@ class TestMultimodal:
 
 class TestCheckpointResume:
     def test_skip_committed_units(self, spark, tmp_path):
-        from loongcollector_spark.checkpoint import CheckpointTable, ResumableRunner
+        from loongcollector_spark.checkpoint import (
+            BatchedResumableRunner,
+            CheckpointTable,
+        )
 
         df = spark.createDataFrame(
             [(f"conv{i}", i, "u1" if i < 3 else "u2", "t") for i in range(6)],
             "conv_id string, turn_idx int, unit string, text string",
         )
         cp = CheckpointTable(spark, str(tmp_path / "cp"))
-        runner = ResumableRunner(spark, cp, str(tmp_path / "out"))
+        runner = BatchedResumableRunner(spark, cp, str(tmp_path / "out"))
         first = runner.run(df, transform=lambda d: {"s1": d})
         assert sorted(first["s1"]) == ["u1", "u2"]
         # second run: everything committed → nothing processed

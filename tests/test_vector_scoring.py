@@ -1,7 +1,8 @@
 """Vector scorers: one degenerate-vector rule on every scorer (the numpy
-kernel and the JVM re-ranks), the blocked query side of the numpy kernel,
-one float re-rank law for exact and int8 top-k, and the functions layer's
-generated-class working set staying inside the codegen cache."""
+kernel, the JVM re-ranks and the public ``cosine``), the blocked query
+side of the numpy kernel, one float re-rank law for exact and int8 top-k,
+and the functions layer's generated-class working set staying inside the
+codegen cache."""
 
 from __future__ import annotations
 
@@ -84,7 +85,9 @@ def _ranked(out, score: str) -> dict:
 def _scores(scorer: str, corpus, queries, n: int) -> dict:
     """(qid, nid) -> (score, rank) from one scorer, every pair ranked
     (``lsh`` ranks only the pairs that share a bucket); ``near_dup`` maps
-    (id_a, id_b) -> (score, None) for every pair id_a < id_b."""
+    (id_a, id_b) -> (score, None) for every pair id_a < id_b, and
+    ``cosine`` (:func:`similarity.cosine` over a cross join) scores every
+    pair unranked."""
     if scorer == "brute":
         return _ranked(brute_force_topk(corpus, queries, k=n), "cosine_sim")
     if scorer == "int8":
@@ -99,6 +102,8 @@ def _scores(scorer: str, corpus, queries, n: int) -> dict:
     if scorer == "ivf_pivot":
         out = ivf_topk_pivot(corpus, queries, k=n, pivot_mod=1, n_probe=n)
         return _ranked(out, "cosine_sim")
+    if scorer == "cosine":
+        return {key: (c, None) for key, c in _jvm_cosines(corpus, queries).items()}
     out = cosine_near_dup_pairs(corpus, dim=DIM, threshold=-1.0, n_planes=0)
     return {(r.id_a, r.id_b): (r.cosine_sim, None) for r in out.collect()}
 
@@ -112,6 +117,7 @@ SCORERS = [
     ("ivf", "jvm"),
     ("ivf_pivot", "jvm"),
     ("near_dup", "jvm"),
+    ("cosine", "jvm"),
 ]
 
 
@@ -128,6 +134,10 @@ def test_degenerate_vectors_score_zero(spark, scorer, path, case):
         # bucketed: a subset of the pairs, every vector's self-match kept
         assert set(got) <= set(ref) and {(i, i) for i in GOOD} <= set(got)
         ref = {key: ref[key] for key in got}
+    if scorer == "cosine" and case == "short":
+        # d is the other side's size: two short vectors are a usable pair
+        assert got.pop((BAD_ID, BAD_ID))[0] == pytest.approx(1.0)
+        ref.pop((BAD_ID, BAD_ID))
     assert set(got) == set(ref)
     for key, want in ref.items():
         score, _ = got[key]
@@ -135,7 +145,7 @@ def test_degenerate_vectors_score_zero(spark, scorer, path, case):
             assert score == 0.0, (key, score)
         else:
             assert abs(score - want) <= tol, (key, score, want)
-    if scorer == "near_dup":
+    if scorer in ("near_dup", "cosine"):
         return
     # ranking: score desc, then nid asc (0.0 ties included)
     for qid in {q for q, _ in ref}:

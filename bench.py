@@ -32,6 +32,11 @@ import time
 
 from pyspark.sql import functions as F
 
+import bench_leaves as bl
+from loongcollector_spark.session import get_spark, local_cores
+
+REPO = os.path.dirname(os.path.abspath(__file__))
+
 
 def noop_write(df) -> None:
     df.write.format("noop").mode("overwrite").save()
@@ -66,10 +71,6 @@ CANARY_DEGRADED_RATIO = 1.3
 CANARY_PARALLEL_EFFECTIVE_MIN_FRAC = 0.5
 
 
-def canary_width() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
-
-
 def _canary_loop(_):
     acc = 0
     for i in range(10_000_000):
@@ -101,7 +102,7 @@ def run_canary(spark) -> dict:
     # processes (fork pool; warm rep discarded — pool spin-up)
     from concurrent.futures import ProcessPoolExecutor
 
-    width = canary_width()
+    width = local_cores()
     with ProcessPoolExecutor(width) as ex:
         list(ex.map(_canary_loop, range(width)))
         par_best = float("inf")
@@ -135,26 +136,28 @@ def run_canary(spark) -> dict:
 def main() -> None:
     """Time every leaf of ``bench_leaves.LEAVES``; ``bench.py plans <tag>
     [names...]`` instead writes each named leaf's formatted plans to
-    ``plans/<tag>/<name>.txt`` and times nothing."""
+    ``plans/<tag>/<name>.txt`` under the repo and times nothing."""
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = canary_width()
+    cpus = local_cores()
     bench_rows = int(os.environ.get("SPARK_GRAFT_BENCH_ROWS", "2000000"))
     reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "5"))
 
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-    import bench_leaves as bl
-    from loongcollector_spark.session import get_spark
-
+    # Python workers inherit the JVM's environment, which the session
+    # copies from this process: they import the package from any directory
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        filter(None, [REPO, os.environ.get("PYTHONPATH")])
+    )
     spark = get_spark(app_name="lc_bench", master=f"local[{cpus}]")
     inp = bl.load_inputs(spark, sf_dir, bench_rows, cpus)
 
     if sys.argv[1:2] == ["plans"]:
-        tag = sys.argv[2]
-        os.makedirs(f"plans/{tag}", exist_ok=True)
+        out = os.path.join(REPO, "plans", sys.argv[2])
+        os.makedirs(out, exist_ok=True)
         for name in sys.argv[3:] or bl.LEAVES:
-            with open(f"plans/{tag}/{name}.txt", "w") as f:
+            path = os.path.join(out, f"{name}.txt")
+            with open(path, "w") as f:
                 f.write("\n".join(bl.plan_of(df) for df in bl.LEAVES[name](inp)))
-            print(f"wrote plans/{tag}/{name}.txt")
+            print(f"wrote {path}")
         return
 
     timings: dict[str, float] = {}

@@ -83,7 +83,12 @@ def bigram_lm_score(
     add_k: float = 0.5,
 ) -> DataFrame:
     """Per-document pseudo-perplexity under the corpus's own add-k
-    bigram model: ``(id, n_bigrams, avg_nll, pseudo_ppl)``."""
+    bigram model: ``(id, n_bigrams, avg_nll, pseudo_ppl)``.
+
+    Building the plan runs one Spark job when adaptive execution is on
+    (the session default): the vocabulary's ``localCheckpoint`` takes the
+    RDD of an adaptive plan, which executes its unigram-count shuffle
+    stage, one full token pass."""
     stream = bigram_stream(df, id_col=id_col, text_col=text_col)
 
     # vocabulary from RAW unigram counts (no frame markers)
@@ -101,8 +106,9 @@ def bigram_lm_score(
     # the V aggregate — the DataFrame API has no common-subplan reuse,
     # so without materialization Spark re-runs the unigram count five
     # times. The vocab table itself is tiny (min_count-filtered
-    # distinct tokens): localCheckpoint it once (lazy — materializes on
-    # first use) so every branch reads the cached blocks. Measured:
+    # distinct tokens): localCheckpoint it once (its blocks materialize
+    # on first use; under AQE the count's shuffle stage runs now, see the
+    # docstring) so every branch reads the cached blocks. Measured:
     # 7 parquet scans → 2 in the physical plan.
     vocab = (
         uni.filter(F.col("count") >= min_count)

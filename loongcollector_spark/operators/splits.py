@@ -681,8 +681,7 @@ class MergeMultilineLog(Processor):
                 "MergeMultilineLog is a batch operator; for streams use "
                 "loongcollector_spark.streaming.pipeline."
                 "ForeachBatchMultilineMerge (cross-trigger, batch-equal, "
-                "all modes) or stateful_multiline_merge (start-pattern, "
-                "applyInPandasWithState)"
+                "all modes)"
             )
         if self.chunk_rows is not None:
             return self._call_fsm_chunked(df)

@@ -12,6 +12,19 @@ import os
 from pyspark.sql import SparkSession
 
 
+def local_cores() -> int:
+    """Cores for a local master: ``$SPARK_GRAFT_CPUS``, else the cores this
+    process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
+def _partitions(master: str) -> int:
+    """The default shuffle width: the master's core count, at least 8; 32
+    when the master names none."""
+    cores = master.partition("[")[2].rstrip("]*")
+    return max(int(cores), 8) if cores.isdigit() else 32
+
+
 def get_spark(
     app_name: str = "loongcollector_spark",
     master: str | None = None,
@@ -20,23 +33,24 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with the engine's standard configs.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32).
-    On a real cluster the caller passes no master and spark-submit decides.
+    ``master`` defaults to ``local[local_cores()]``, except when
+    spark-submit launched this driver (it exports ``PYSPARK_GATEWAY_PORT``
+    to the Python process): then spark-submit's ``--master`` stands.
+    ``shuffle_partitions`` defaults to :func:`_partitions` of the master.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    master = master or f"local[{cpus}]"
-    if shuffle_partitions is None:
-        try:
-            n = int(master.split("[")[1].rstrip("]*")) if "[" in master else 32
-        except ValueError:
-            n = 32
-        shuffle_partitions = max(n, 8)
-
+    if master is None and "PYSPARK_GATEWAY_PORT" not in os.environ:
+        master = f"local[{local_cores()}]"
+    builder = SparkSession.builder.appName(app_name)
+    if master is not None:
+        builder = builder.master(master)
+        if shuffle_partitions is None:
+            shuffle_partitions = _partitions(master)
+    if shuffle_partitions is not None:
+        builder = builder.config(
+            "spark.sql.shuffle.partitions", str(shuffle_partitions)
+        )
     builder = (
-        SparkSession.builder.appName(app_name)
-        .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
+        builder.config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
@@ -62,4 +76,10 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    if shuffle_partitions is None:
+        # spark-submit's master is known only once the session exists
+        spark.conf.set(
+            "spark.sql.shuffle.partitions",
+            str(_partitions(spark.sparkContext.master)),
+        )
     return spark

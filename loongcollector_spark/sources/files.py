@@ -46,10 +46,9 @@ def read_text_files(
     apply :func:`per_file_line_offsets` inside ``foreachBatch`` (where the
     frame is a plain batch DataFrame) — or use
     ``streaming.pipeline.ForeachBatchMultilineMerge``, which does exactly
-    that plus cross-trigger carry so the merge equals the batch operator
-    even when a logical file spans triggers, or
-    ``streaming.stateful_multiline_merge`` (start-pattern only). Feeding
-    this column to the batch ``MergeMultilineLog`` raises.
+    that plus cross-trigger carry so the merge equals the batch operator,
+    in every pattern mode, even when a logical file spans triggers.
+    Feeding this column to the batch ``MergeMultilineLog`` raises.
     """
     reader = spark.readStream if stream else spark.read
     opts = {"recursiveFileLookup": str(recursive).lower()}

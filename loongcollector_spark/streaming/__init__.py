@@ -2,5 +2,4 @@
 
 from loongcollector_spark.streaming.pipeline import (  # noqa: F401
     StreamingTranscriptPipeline,
-    stateful_rate_limit,
 )

@@ -12,20 +12,19 @@ The batch ``TranscriptPipeline.parse/enrich`` transforms are reused
 verbatim — they're pure column expressions, legal on streaming frames;
 the broadcast dict join is stream-static (no state). Routing is the
 batch routed frame too (``run_single_pass``: a stateless explode, so
-one stream carries every sink in its ``__sink__`` column). Custom stateful
-operator example: per-key token-bucket rate limiting via
-``applyInPandasWithState`` (the true streaming analogue of
-processor_rate_limit — plugins/processor/ratelimit/processor_rate_limit.go).
+one stream carries every sink in its ``__sink__`` column).
+
+Every operator here either wraps a batch operator unmodified or is pinned
+to its batch operator by a differential test; each docstring states the
+law (over a replayed stream, the batch result over the union of its
+micro-batches, up to what the docstring names).
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from loongcollector_spark.plans.transcript_pipeline import (
     CONV_PREFIX_LEN,
@@ -164,140 +163,6 @@ class StreamingTranscriptPipeline:
             .trigger(availableNow=True)
             .start()
         )
-
-
-_RL_STATE = T.StructType([T.StructField("seen", T.LongType())])
-
-
-def stateful_rate_limit(
-    df: DataFrame,
-    key_cols: list[str],
-    limit: int,
-    output_schema: str | T.StructType | None = None,
-):
-    """Streaming token-bucket: at most ``limit`` rows pass per key over
-    the stream lifetime (reset via state timeout in production configs).
-    applyInPandasWithState — the engine's custom-stateful-operator
-    extension point (the reference's Go-plugin ABI analogue).
-    """
-    out_schema = output_schema or df.schema
-
-    def fn(
-        key, pdfs: Iterator["pd.DataFrame"], state: GroupState  # noqa: F821
-    ) -> Iterator["pd.DataFrame"]:
-        seen = state.get[0] if state.exists else 0
-        for pdf in pdfs:
-            if seen >= limit:
-                break
-            take = pdf.iloc[: max(0, limit - seen)]
-            seen += len(take)
-            if len(take):
-                yield take
-        state.update((seen,))
-
-    return df.groupBy(*key_cols).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=_RL_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-_ML_STATE = T.StructType(
-    [
-        T.StructField("pending_order", T.LongType()),
-        T.StructField("pending_text", T.StringType()),
-        T.StructField("n_pending", T.LongType()),
-    ]
-)
-
-
-def stateful_multiline_merge(
-    df: DataFrame,
-    group_col: str,
-    order_col: str,
-    source_col: str,
-    start_pattern: str,
-    timeout_ms: int = 0,
-):
-    """Streaming start-pattern multiline merge — the true streaming
-    analogue of MergeMultilineLog's fast path (the reference merges
-    multiline *as the file tails*, not per batch).
-
-    State per group = the currently-open logical event (first order,
-    accumulated text, line count). Each micro-batch continues the merge:
-    a line matching ``start_pattern`` closes the open event (emitting it)
-    and opens a new one; other lines append. Leading lines with no open
-    event emit as singles (single_line treatment). With ``timeout_ms`` >
-    0 the open event flushes after that much processing-time idleness —
-    the streaming replacement for end-of-input flush.
-
-    Output: (group, source, order, n_merged) — identical shape to the
-    batch operator, so batch == streaming equivalence is testable
-    row-for-row (modulo the still-open tail event).
-    """
-    import re as _re
-
-    out_schema = T.StructType(
-        [
-            df.schema[group_col],
-            T.StructField(source_col, T.StringType()),
-            T.StructField(order_col, T.LongType()),
-            T.StructField("n_merged", T.LongType()),
-        ]
-    )
-    rx = _re.compile(start_pattern)
-
-    def fn(key, pdfs, state: GroupState):
-        import pandas as pd
-
-        gval = key[0]
-        cols = [group_col, source_col, order_col, "n_merged"]
-        if state.hasTimedOut:
-            po, pt, n = state.get
-            state.remove()
-            yield pd.DataFrame([[gval, pt, po, n]], columns=cols)
-            return
-        # pending = (first_order, [pieces], n_lines) — list-accumulate +
-        # join so a long open event costs O(total bytes), not quadratic
-        pending = None
-        if state.exists:
-            po, pt, n = state.get
-            pending = (po, [pt], n)
-        out = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values(order_col)
-            for o, t in zip(pdf[order_col], pdf[source_col]):
-                text = "" if t is None else t
-                if rx.search(text):
-                    if pending is not None:
-                        out.append(
-                            [gval, "\n".join(pending[1]), pending[0], pending[2]]
-                        )
-                    pending = (int(o), [text], 1)
-                elif pending is not None:
-                    pending[1].append(text)
-                    pending = (pending[0], pending[1], pending[2] + 1)
-                else:
-                    out.append([gval, text, int(o), 1])
-        if pending is not None:
-            state.update((pending[0], "\n".join(pending[1]), pending[2]))
-            if timeout_ms > 0:
-                state.setTimeoutDuration(timeout_ms)
-        yield pd.DataFrame(out, columns=cols)
-
-    return df.groupBy(group_col).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=_ML_STATE,
-        outputMode="append",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if timeout_ms > 0
-            else GroupStateTimeout.NoTimeout
-        ),
-    )
 
 
 class ForeachBatchMultilineMerge:

@@ -5,7 +5,7 @@ what broadcast, where the (few) exchanges are.
 A section titled ``[leaf <name>]`` audits a frame of that bench leaf,
 built by ``bench_leaves.py`` over the sf0.001 inputs (the sf transcripts
 stand in for the generated corpus). The other sections audit operators
-that no leaf writes as such. The Spark master is
+that no leaf writes as such. The Spark master is ``get_spark``'s default,
 ``local[SPARK_GRAFT_CPUS]`` (default: the cores this process may run on).
 """
 
@@ -20,7 +20,6 @@ sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from bench import canary_width  # noqa: E402
 from bench_leaves import LEAVES, Inputs, plan_of  # noqa: E402
 from loongcollector_spark.session import get_spark  # noqa: E402
 from loongcollector_spark.sources.transcripts import (  # noqa: E402
@@ -35,7 +34,12 @@ def n_nodes(plan: str, pattern: str) -> int:
 
 
 def main() -> None:
-    spark = get_spark(master=f"local[{canary_width()}]")
+    # Python workers inherit the JVM's environment, which the session
+    # copies from this process: they import the package from any directory
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        filter(None, [REPO, os.environ.get("PYTHONPATH")])
+    )
+    spark = get_spark()
     t = transcripts_from_events(spark, SF)
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     inp = Inputs(

@@ -2,17 +2,21 @@
 
 Runs every ``__spark_entry__.queries()`` entry at sf=0.01 (override with
 argv[1]) and compares row count + sorted stringified values against the
-matching ``oracle_sql()`` in DuckDB over the same parquet tables.
+matching ``oracle_sql()`` in DuckDB over the same parquet tables. The
+Spark master is ``get_spark``'s default, ``local[SPARK_GRAFT_CPUS]``
+(default: the cores this process may run on).
 """
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import __spark_entry__ as entry_mod  # noqa: E402
 from loongcollector_spark.session import get_spark  # noqa: E402
@@ -36,7 +40,12 @@ def norm(v) -> str:
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:]) or None
-    spark = get_spark(master="local[16]")
+    # Python workers inherit the JVM's environment, which the session
+    # copies from this process: they import the package from any directory
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        filter(None, [REPO, os.environ.get("PYTHONPATH")])
+    )
+    spark = get_spark()
     con = duckdb.connect()
     for t in TABLES:
         con.execute(

@@ -566,7 +566,7 @@ class TestFileSources:
             SourceKey="content", GroupKey="_file_", OrderKey="_offset_",
             StartPattern=r"^START",
         )
-        with _pytest.raises(ValueError, match="stateful_multiline_merge"):
+        with _pytest.raises(ValueError, match="ForeachBatchMultilineMerge"):
             merger(s)
 
         # supported path: re-derive dense offsets per micro-batch, merge

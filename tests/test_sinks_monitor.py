@@ -168,16 +168,15 @@ class TestStreaming:
         pipe = StreamingTranscriptPipeline()
         q = pipe.start_to_memory(spark, src_path, name="lc_test_stream")
         assert q.awaitTermination(600), "query did not finish"
-        got = spark.sql(
-            "SELECT count(*) AS n, sum(CASE WHEN error_class='' THEN 1 ELSE 0 END) AS ok "
-            "FROM lc_test_stream"
-        ).collect()[0]
         batch = pipe.batch.enrich(
             pipe.batch.parse(spark.read.parquet(src_path))
         )
-        b_n = batch.count()
-        b_ok = batch.filter(F.col("error_class") == "").count()
-        assert got.n == b_n and got.ok == b_ok
+        got = sorted(
+            tuple(str(x) for x in r)
+            for r in spark.table("lc_test_stream").select(*batch.columns).collect()
+        )
+        want = sorted(tuple(str(x) for x in r) for r in batch.collect())
+        assert got == want and len(got) == 1000
 
     def test_streaming_flagship_resume_end_to_end(self, spark, tmp_path):
         """VERDICT r4 #8 (stretch): the FULL flagship parse → enrich →
@@ -331,28 +330,6 @@ class TestStreaming:
         )
         assert got == want and got
 
-    def test_stateful_rate_limit(self, spark, tmp_path):
-        from loongcollector_spark.sources.transcripts import transcripts_from_events
-        from loongcollector_spark.streaming.pipeline import stateful_rate_limit
-
-        src_path = str(tmp_path / "rl_src")
-        transcripts_from_events(spark, SF_DIR).write.parquet(src_path)
-        static = spark.read.parquet(src_path)
-        stream = spark.readStream.schema(static.schema).parquet(src_path)
-        limited = stateful_rate_limit(stream, ["role"], limit=5)
-        q = (
-            limited.writeStream.format("memory")
-            .queryName("lc_rl_stream")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(600), "query did not finish"
-        counts = spark.sql(
-            "SELECT role, count(*) AS n FROM lc_rl_stream GROUP BY role"
-        ).collect()
-        assert counts and all(r.n <= 5 for r in counts)
-
 
 class TestSaltedAgg:
     def test_salted_equals_plain(self, spark, transcripts):
@@ -374,13 +351,22 @@ class TestSaltedAgg:
         assert a == b
 
     def test_watermarked_metrics_stream(self, spark, tmp_path):
+        """Every (window, conv_prefix, error_class) row of the stream
+        equals the same groupBy over the batch frame. Retention covers
+        the corpus span, so the 4 triggers (random time order) drop no
+        row as late."""
+        from loongcollector_spark.plans.transcript_pipeline import CONV_PREFIX_LEN
         from loongcollector_spark.sources.transcripts import transcripts_from_events
         from loongcollector_spark.streaming.pipeline import StreamingTranscriptPipeline
 
         src_path = str(tmp_path / "wm_src")
-        transcripts_from_events(spark, SF_DIR).write.parquet(src_path)
-        pipe = StreamingTranscriptPipeline(window="1 hour")
-        stream = pipe.read_stream(spark, src_path)
+        transcripts_from_events(spark, SF_DIR).repartition(4).write.parquet(
+            src_path
+        )
+        pipe = StreamingTranscriptPipeline(
+            late_threshold="3650 days", window="1 hour"
+        )
+        stream = pipe.read_stream(spark, src_path, max_files=1)
         metrics = pipe.metrics_stream(pipe.parse_enrich(stream))
         q = (
             metrics.writeStream.format("memory")
@@ -390,76 +376,28 @@ class TestSaltedAgg:
             .start()
         )
         assert q.awaitTermination(600), "query did not finish"
-        got = spark.sql(
-            "SELECT sum(n_rows) AS n FROM lc_wm_metrics"
-        ).collect()[0]
-        assert got.n == 1000  # every turn lands in exactly one window
 
+        def rows(df):
+            return sorted(
+                (str(r["ts_window"]), r["conv_prefix"], r["error_class"],
+                 r["n_rows"], r["n_bytes"])
+                for r in df.collect()
+            )
 
-class TestStatefulMultilineMerge:
-    def test_stream_equals_batch_minus_open_tail(self, spark, tmp_path):
-        """Streaming start-pattern merge == batch MergeMultilineLog on the
-        same rows, except the still-open tail event per group (no
-        end-of-input in a stream; flushed by timeout in production)."""
-        from loongcollector_spark.operators.splits import MergeMultilineLog
-        from loongcollector_spark.streaming.pipeline import (
-            stateful_multiline_merge,
+        batch = pipe.batch.enrich(pipe.batch.parse(spark.read.parquet(src_path)))
+        want = rows(
+            batch.groupBy(
+                F.window(F.col("ts").cast("timestamp"), "1 hour").alias("ts_window"),
+                F.substring("conv_id", 1, CONV_PREFIX_LEN).alias("conv_prefix"),
+                F.coalesce("error_class", F.lit("")).alias("error_class"),
+            ).agg(
+                F.count(F.lit(1)).alias("n_rows"),
+                F.sum(F.octet_length("text")).alias("n_bytes"),
+            )
         )
-
-        rows = []
-        for g in ("f1", "f2"):
-            for i in range(12):
-                txt = (
-                    f"2024-01-0{(i % 3) + 1} start {g}-{i}"
-                    if i % 3 == 0
-                    else f"  cont {g}-{i}"
-                )
-                rows.append((g, i, txt))
-        # leading unmatched rows for f3 (emit as singles)
-        rows += [("f3", 0, "orphan a"), ("f3", 1, "orphan b"),
-                 ("f3", 2, "2024-01-01 start f3")]
-        src_path = str(tmp_path / "ml_src")
-        spark.createDataFrame(
-            rows, "src string, off long, content string"
-        ).repartition(1).write.parquet(src_path)
-
-        static = spark.read.parquet(src_path)
-        stream = spark.readStream.schema(static.schema).parquet(src_path)
-        merged = stateful_multiline_merge(
-            stream, "src", "off", "content", r"\d{4}-\d{2}-\d{2}"
-        )
-        q = (
-            merged.writeStream.format("memory")
-            .queryName("lc_ml_stream")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(600), "query did not finish"
-        got = {
-            (r.src, r.off): (r.content, r.n_merged)
-            for r in spark.sql("SELECT * FROM lc_ml_stream").collect()
-        }
-
-        batch = MergeMultilineLog(
-            SourceKey="content",
-            StartPattern=r"\d{4}-\d{2}-\d{2}",
-            GroupKey="src",
-            OrderKey="off",
-        )(static)
-        b_rows = batch.collect()
-        # drop the last (open) event per group — the stream hasn't flushed it
-        last_per_group = {}
-        for r in b_rows:
-            if r.src not in last_per_group or r.off > last_per_group[r.src]:
-                last_per_group[r.src] = r.off
-        expected = {
-            (r.src, r.off): (r.content, r.n_merged)
-            for r in b_rows
-            if r.off != last_per_group[r.src]
-        }
-        assert got == expected
-        assert any(k[0] == "f3" for k in got)  # orphans emitted as singles
+        got = rows(spark.table("lc_wm_metrics"))
+        assert got == want
+        assert sum(r[3] for r in got) == 1000  # every turn in one window
 
 
 class TestFlusherHttp:
@@ -648,10 +586,10 @@ class TestDictMapNonStringSource:
 
 
 class TestForeachBatchMultilineMerge:
-    """VERDICT r3 #4: one logical file split across two triggers must
-    merge identically to the batch operator over the concatenated input
-    — including an event that SPANS the trigger boundary — for the FSM
-    modes the stateful start-only path can't express."""
+    """VERDICT r3 #4: one logical file split across triggers must merge
+    identically to the batch operator over the concatenated input —
+    including an event that SPANS the trigger boundary — in every
+    pattern mode and unmatched treatment."""
 
     def _drive(self, spark, tmp_path, merger, chunks):
         import os
@@ -782,125 +720,112 @@ class TestForeachBatchMultilineMerge:
         assert first == again == [("g", 0, "S one\ncont")]
         assert os.path.isdir(str(tmp_path / "carry" / "epoch=0"))
 
-    def test_merge_treatment_startless_prefix_spans_triggers(
-        self, spark, tmp_path
-    ):
-        """'merge' treatment: lines before the first start marker arrive
-        across several triggers; they must merge into ONE event exactly
-        as the batch operator does on the concatenation — not emit once
-        per trigger (ADVICE r4 medium)."""
-        from loongcollector_spark.operators.splits import MergeMultilineLog
-        from loongcollector_spark.streaming.pipeline import (
-            ForeachBatchMultilineMerge,
-        )
-
-        merger = MergeMultilineLog(
-            SourceKey="content", GroupKey="grp", OrderKey="off",
-            StartPattern=r"^S", UnmatchedContentTreatment="merge",
-        )
-        chunks = [["x a", "x b"], ["x c", "S d"], ["x e", "S f"]]
-        fbm = ForeachBatchMultilineMerge(
-            merger,
-            carry_dir=str(tmp_path / "carry_m"),
-            out_dir=str(tmp_path / "out_m"),
-        )
-        for bid, chunk in enumerate(chunks):
-            fbm.process_batch(
-                spark.createDataFrame(
-                    [("g", i, ln) for i, ln in enumerate(chunk)],
-                    "grp string, off long, content string",
-                ),
-                bid,
-            )
-        fbm.flush(spark)
-        got = sorted(
-            (r.grp, r.off, r.content, r.n_merged)
-            for r in fbm.results(spark).collect()
-        )
-        lines = [ln for chunk in chunks for ln in chunk]
-        want = sorted(
-            (r.grp, r.off, r.content, r.n_merged)
-            for r in merger(
-                spark.createDataFrame(
-                    [("g", i, ln) for i, ln in enumerate(lines)],
-                    "grp string, off long, content string",
-                )
-            ).collect()
-        )
-        assert got == want
-        # the start-less prefix really merged into one 3-line event
-        assert ("g", 0, "x a\nx b\nx c", 3) in got
-
     def test_chunked_equals_batch_all_modes_differential(self, spark, tmp_path):
-        """Differential sweep: for every pattern mode x treatment x a
-        deterministic family of line sequences and chunk splits, feeding
-        the chunks through process_batch + flush equals the batch
-        operator on the concatenation — including discarded tails,
-        events spanning chunk borders, and groups idle in a trigger."""
+        """Differential sweep: per pattern mode x treatment, ONE merger
+        runs process_batch once per trigger over a frame of many groups,
+        then flush; the emitted rows equal the batch operator over each
+        group's concatenated lines. Each merger's groups: 4 seeded random
+        14-line sequences cut at random trigger borders, one more absent
+        from the middle trigger, a NULL line, non-ASCII text, and start,
+        continue and end markers found mid-line (a search match in every
+        mode but Start-only, which anchors its pattern). 'merge' adds a
+        start-less prefix spanning triggers. Every fourth merger also
+        gets an empty trigger."""
         import itertools
         import random
+        from concurrent.futures import ThreadPoolExecutor
 
         from loongcollector_spark.operators.splits import MergeMultilineLog
         from loongcollector_spark.streaming.pipeline import (
             ForeachBatchMultilineMerge,
         )
 
+        schema = "grp string, off long, content string"
+        # unanchored patterns: each marker letter leads its alphabet line
+        # and appears nowhere else in it, so only the "mid" group tells a
+        # search from an anchored match
         modes = [
-            dict(StartPattern=r"^S"),
-            dict(StartPattern=r"^S", EndPattern=r"^E"),
-            dict(StartPattern=r"^S", ContinuePattern=r"^c"),
-            dict(StartPattern=r"^S", ContinuePattern=r"^c", EndPattern=r"^E"),
-            dict(ContinuePattern=r"^c", EndPattern=r"^E"),
-            dict(EndPattern=r"^E"),
+            dict(StartPattern="S"),
+            dict(StartPattern="S", EndPattern="E"),
+            dict(StartPattern="S", ContinuePattern="c"),
+            dict(StartPattern="S", ContinuePattern="c", EndPattern="E"),
+            dict(ContinuePattern="c", EndPattern="E"),
+            dict(EndPattern="E"),
         ]
         rng = random.Random(1234)
         alphabet = ["S alpha", "c cont", "E end", "x plain"]
-        case = 0
+
+        def sequence():
+            return [f"{rng.choice(alphabet)} {i}" for i in range(14)]
+
+        def cut(lines):
+            c1 = rng.randrange(1, len(lines) - 1)
+            c2 = rng.randrange(c1 + 1, len(lines))
+            return [lines[:c1], lines[c1:c2], lines[c2:]]
+
+        def rows_of(df):
+            return sorted(
+                ((r.grp, r.off, r.content, r.n_merged) for r in df.collect()),
+                key=repr,
+            )
+
         combos = list(itertools.product(modes, ["single_line", "discard"]))
         # 'merge' (start-only scoped): a start-less prefix must stay
         # carried across triggers, not emit per trigger (ADVICE r4)
-        combos.append((dict(StartPattern=r"^S"), "merge"))
+        combos.append((dict(StartPattern="S"), "merge"))
+        cases = []
         for mode, treatment in combos:
+            groups = {f"r{j}": cut(sequence()) for j in range(4)}
+            absent = sequence()
+            c = rng.randrange(1, len(absent))
+            groups["absent"] = [absent[:c], [], absent[c:]]
+            groups["null"] = [["S n0", None], ["c n2", None, "E n4"],
+                              [None, "x n6"]]
+            groups["uni"] = [["S naïve ٤٢", "naïve ٤٢"], ["c naïve", "E ٤٢"],
+                             ["naïve ٤٢ x"]]
+            groups["mid"] = [["S head", "x S mid-line"], ["x c mid", "x E mid"],
+                             ["x S again", "plain"]]
+            if treatment == "merge":
+                groups["g"] = [["x a", "x b"], ["x c", "S d"], ["x e", "S f"]]
+            cases.append((mode, treatment, groups))
+
+        def run(k):
+            mode, treatment, groups = cases[k]
             merger = MergeMultilineLog(
                 SourceKey="content", GroupKey="grp", OrderKey="off",
                 UnmatchedContentTreatment=treatment, **mode,
             )
-            for trial in range(2):
-                case += 1
-                lines = [
-                    f"{rng.choice(alphabet)} {i}" for i in range(14)
-                ]
-                cut1 = rng.randrange(1, 13)
-                cut2 = rng.randrange(cut1 + 1, 14)
-                chunks = [lines[:cut1], lines[cut1:cut2], lines[cut2:]]
-                fbm = ForeachBatchMultilineMerge(
-                    merger,
-                    carry_dir=str(tmp_path / f"c{case}"),
-                    out_dir=str(tmp_path / f"o{case}"),
-                )
-                for bid, chunk in enumerate(chunks):
-                    fbm.process_batch(
-                        spark.createDataFrame(
-                            [("g", i, ln) for i, ln in enumerate(chunk)],
-                            "grp string, off long, content string",
-                        ),
-                        bid,
-                    )
-                fbm.flush(spark)
-                got = sorted(
-                    (r.grp, r.off, r.content, r.n_merged)
-                    for r in fbm.results(spark).collect()
-                )
-                want = sorted(
-                    (r.grp, r.off, r.content, r.n_merged)
-                    for r in merger(
-                        spark.createDataFrame(
-                            [("g", i, ln) for i, ln in enumerate(lines)],
-                            "grp string, off long, content string",
-                        )
-                    ).collect()
-                )
-                assert got == want, (mode, treatment, trial, lines, chunks)
+            triggers = [
+                [(g, i, ln) for g, chunks in groups.items()
+                 for i, ln in enumerate(chunks[t])]
+                for t in range(3)
+            ]
+            if k % 4 == 0:
+                triggers.insert(1, [])
+            fbm = ForeachBatchMultilineMerge(
+                merger,
+                carry_dir=str(tmp_path / f"c{k}"),
+                out_dir=str(tmp_path / f"o{k}"),
+            )
+            for bid, rows in enumerate(triggers):
+                fbm.process_batch(spark.createDataFrame(rows, schema), bid)
+            fbm.flush(spark)
+            want = merger(spark.createDataFrame(
+                [(g, i, ln) for g, chunks in groups.items()
+                 for i, ln in enumerate(sum(chunks, []))],
+                schema,
+            ))
+            return rows_of(fbm.results(spark)), rows_of(want)
+
+        # the mergers share nothing: run them as concurrent Spark jobs
+        with ThreadPoolExecutor(4) as pool:
+            results = list(pool.map(run, range(len(cases))))
+        assert len(results) == 13
+        for (mode, treatment, groups), (got, want) in zip(cases, results):
+            assert got == want, (mode, treatment, groups)
+            if treatment == "merge":
+                # the start-less prefix really merged into one 3-line event
+                assert ("g", 0, "x a\nx b\nx c", 3) in got
 
 
 class TestStreamingSessionWindow:

@@ -720,6 +720,55 @@ class TestForeachBatchMultilineMerge:
         assert first == again == [("g", 0, "S one\ncont")]
         assert os.path.isdir(str(tmp_path / "carry" / "epoch=0"))
 
+    def test_merge_treatment_startless_prefix_spans_triggers(
+        self, spark, tmp_path
+    ):
+        """'merge' treatment: lines before the first start marker arrive
+        across several triggers; they must merge into ONE event exactly
+        as the batch operator does on the concatenation — not emit once
+        per trigger (ADVICE r4 medium)."""
+        from loongcollector_spark.operators.splits import MergeMultilineLog
+        from loongcollector_spark.streaming.pipeline import (
+            ForeachBatchMultilineMerge,
+        )
+
+        merger = MergeMultilineLog(
+            SourceKey="content", GroupKey="grp", OrderKey="off",
+            StartPattern=r"^S", UnmatchedContentTreatment="merge",
+        )
+        chunks = [["x a", "x b"], ["x c", "S d"], ["x e", "S f"]]
+        fbm = ForeachBatchMultilineMerge(
+            merger,
+            carry_dir=str(tmp_path / "carry_m"),
+            out_dir=str(tmp_path / "out_m"),
+        )
+        for bid, chunk in enumerate(chunks):
+            fbm.process_batch(
+                spark.createDataFrame(
+                    [("g", i, ln) for i, ln in enumerate(chunk)],
+                    "grp string, off long, content string",
+                ),
+                bid,
+            )
+        fbm.flush(spark)
+        got = sorted(
+            (r.grp, r.off, r.content, r.n_merged)
+            for r in fbm.results(spark).collect()
+        )
+        lines = [ln for chunk in chunks for ln in chunk]
+        want = sorted(
+            (r.grp, r.off, r.content, r.n_merged)
+            for r in merger(
+                spark.createDataFrame(
+                    [("g", i, ln) for i, ln in enumerate(lines)],
+                    "grp string, off long, content string",
+                )
+            ).collect()
+        )
+        assert got == want
+        # the start-less prefix really merged into one 3-line event
+        assert ("g", 0, "x a\nx b\nx c", 3) in got
+
     def test_chunked_equals_batch_all_modes_differential(self, spark, tmp_path):
         """Differential sweep: per pattern mode x treatment, ONE merger
         runs process_batch once per trigger over a frame of many groups,

@@ -945,7 +945,9 @@ def q_merge_multiline_skew_chunked(spark, sf_dir):
     and config as merge_multiline_continue_end — shares its oracle, so
     the driver value-checks that transfer-function composition +
     cross-chunk event stitching equals the closed-form SQL. ChunkRows=40
-    forces real multi-chunk conversations at sf0.01."""
+    forces real multi-chunk conversations at sf0.01: conversations over
+    40 turns take the chunk path, chunked by their turn_idx range, and
+    the rest the plain path, routed inside the one plan."""
     from loongcollector_spark.operators.splits import MergeMultilineLog
 
     t = _transcripts(spark, sf_dir)
@@ -968,12 +970,13 @@ def q_merge_multiline_skew_chunked(spark, sf_dir):
 
 
 def q_merge_multiline_auto_chunked(spark, sf_dir):
-    """ChunkRows='auto' (VERDICT r4 #5): one metadata-sized group-count
-    probe routes chunked-vs-plain and sizes ChunkRows. Same input/config
-    as merge_multiline_continue_end, so it shares that closed-form
-    oracle — at sf scale the probe picks the plain path and the value
-    check pins that the routing is semantically free; the chunked route
-    is differentially pinned in tests/test_scale_patterns.py."""
+    """ChunkRows='auto' (VERDICT r4 #5): the per-group counts, read
+    inside the plan, route each conversation chunked-vs-plain and size
+    its chunks. Same input/config as merge_multiline_continue_end, so it
+    shares that closed-form oracle — at sf scale no conversation passes
+    the threshold, every row takes the plain path and the value check
+    pins that the routing is semantically free; the chunked route is
+    differentially pinned in tests/test_scale_patterns.py."""
     from loongcollector_spark.operators.splits import MergeMultilineLog
 
     t = _transcripts(spark, sf_dir)
@@ -1074,17 +1077,21 @@ def q_streaming_parse_enrich(spark, sf_dir):
     drained with availableNow into a memory sink and must produce the
     SAME rows as the batch oracle (arrival-time semantics, no late data
     in a bounded drain)."""
+    import shutil
     import tempfile
     import uuid
 
     from loongcollector_spark.streaming.pipeline import StreamingTranscriptPipeline
 
     src = tempfile.mkdtemp(prefix="lc_stream_src_")
-    _transcripts(spark, sf_dir).write.mode("overwrite").parquet(src)
     name = "lc_q_stream_" + uuid.uuid4().hex[:8]
-    pipe = StreamingTranscriptPipeline()
-    q = pipe.start_to_memory(spark, src, name=name)
-    q.awaitTermination(300)
+    try:
+        _transcripts(spark, sf_dir).write.mode("overwrite").parquet(src)
+        q = StreamingTranscriptPipeline().start_to_memory(spark, src, name=name)
+        q.awaitTermination(300)
+    finally:
+        # the memory sink holds the rows; the ended query reads no source
+        shutil.rmtree(src, ignore_errors=True)
     return spark.table(name).select(
         "conv_id", "turn_idx", "role", "tool", "grammar", "etype",
         "error_class", "tool_class", "role_class",

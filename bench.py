@@ -142,11 +142,6 @@ def main() -> None:
     bench_rows = int(os.environ.get("SPARK_GRAFT_BENCH_ROWS", "2000000"))
     reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "5"))
 
-    # Python workers inherit the JVM's environment, which the session
-    # copies from this process: they import the package from any directory
-    os.environ["PYTHONPATH"] = os.pathsep.join(
-        filter(None, [REPO, os.environ.get("PYTHONPATH")])
-    )
     spark = get_spark(app_name="lc_bench", master=f"local[{cpus}]")
     inp = bl.load_inputs(spark, sf_dir, bench_rows, cpus)
 

@@ -340,10 +340,11 @@ def _chunk_entries(f0, f1, b0, b1, p0: bool):
     return entry, np.cumsum(step) - step
 
 
-# ChunkRows="auto": a group must exceed this many rows before the
-# 3-shuffle chunk-parallel FSM beats the single-task plain path (the
-# crossover measured in BENCH.md sits between a 400k-row and a 4M-row
-# hot group; 1M is the conservative middle).
+# ChunkRows="auto": a group takes the 3-shuffle chunk-parallel FSM once
+# it exceeds this many rows, in chunks of max(this // 4, ceil(n / (2 *
+# defaultParallelism))) rows from its own count n. The crossover over the
+# single-task plain path (BENCH.md, measured at local[32]) sits between a
+# 400k-row and a 4M-row hot group; 1M is the conservative middle.
 _AUTO_MIN_GROUP = 1_000_000
 
 
@@ -611,14 +612,13 @@ class MergeMultilineLog(Processor):
       inherently sequential per group, so it runs partition-level via
       Arrow: one shuffle on GroupKey, then the vectorized numpy scan
       (:func:`_merge_block_vectorized`) over whole sorted partitions.
-    * ``ChunkRows`` set — groups larger than ChunkRows take the
-      chunk-parallel transfer-function path (:meth:`_chunked_core`), the
-      rest one of the plans above. Routing needs the group sizes, so
-      building the plan runs eager metadata jobs: an int ChunkRows runs
-      one aggregate collect; ``'auto'`` checkpoints the group sizes and
-      reads their max, then runs that collect only if it chunks. With
-      ``ChunkRows=None`` (the default) building the plan starts no
-      Spark job.
+    * ``ChunkRows`` set — groups larger than ChunkRows (``'auto'``:
+      larger than ``_AUTO_MIN_GROUP``) take the chunk-parallel
+      transfer-function path (:meth:`_chunked_core`), the rest one of
+      the plans above. The route reads the group sizes as data inside
+      the plan (:meth:`_call_fsm_chunked`).
+
+    Building any of these plans starts no Spark job.
 
     Every Continue/End plan derives from one statement of the per-mode
     law (:func:`_mode_uv` + :func:`_mode_line_flags`), pinned against the
@@ -847,91 +847,48 @@ class MergeMultilineLog(Processor):
     def _call_fsm_chunked(self, df: DataFrame) -> DataFrame:
         """Skew-routed FSM: groups larger than ``ChunkRows`` take the
         chunk-parallel machinery (:meth:`_chunked_core`); everything else
-        keeps the single-pass partition-level path. The same split AQE
-        makes for skew joins — only skewed groups pay the extra shuffles,
-        and a corpus of many small conversations costs one extra
-        map-side-partial count. A group of exactly ChunkRows rows is one
-        chunk, so routing small groups to the plain path is semantically
-        free (pinned by the differential tests).
+        keeps the single-pass plan (:meth:`_plain`). The same split AQE
+        makes for skew joins — only skewed groups pay the extra shuffles.
+        A group of at most ChunkRows rows is one chunk, so routing small
+        groups to the plain path is semantically free (pinned by the
+        differential tests).
 
-        ``ChunkRows="auto"``: one metadata-sized probe over the group
-        counts (already computed for routing) picks the plan — if no
-        group exceeds ``_AUTO_MIN_GROUP`` rows the whole input takes the
-        plain path (the 3-shuffle chunked machinery only pays off once a
-        single group dwarfs a task); otherwise ChunkRows is sized so the
-        largest group splits into ~2 chunks per core, floored so chunks
-        stay big enough to amortize the per-chunk scans.
+        The route is data inside the one plan: the per-group stats
+        (count, min and max of OrderKey) are filtered to the big groups,
+        each with its chunk size C, broadcast and left-joined once;
+        unmatched rows take the plain path, matched rows the chunk path.
+        Building the plan runs no Spark job, and with no big group the
+        chunk branch is simply empty.
 
-        Chunk ids: when every big group's numeric OrderKey is provably
-        DENSE (max - min + 1 == count, checked on the metadata-sized
-        stats), chunk id is the shuffle-free ``floor((order - min) /
-        ChunkRows)``; sparse or non-numeric order keys fall back to a
-        per-group row_number window (ADVICE r4: raw sparse order values
-        would fragment a hot group into near-per-row chunks)."""
-        from pyspark.sql import types as T
-
-        g, okey = self.group_key, self.order_key
-        in_schema = dict(zip(df.schema.names, df.schema.fields))
-        numeric_ok = isinstance(in_schema[okey].dataType, T.NumericType)
-        aggs = [F.count(F.lit(1)).alias("__n__")]
-        if numeric_ok:
-            aggs += [F.min(okey).alias("__mn__"), F.max(okey).alias("__mx__")]
-        chunk_rows = self.chunk_rows
-        if chunk_rows == "auto":
-            # auto needs TWO passes over the per-group stats (global max
-            # to pick the plan, then the big-group filter), so the
-            # group-sizes table is materialized once (localCheckpoint)
-            sizes = df.groupBy(g).agg(*aggs).localCheckpoint(eager=True)
-            row = sizes.agg(F.max("__n__").alias("m")).collect()[0]
-            max_n = row["m"] or 0
-            if max_n <= _AUTO_MIN_GROUP:
-                chunk_rows = None
-            else:
-                par = df.sparkSession.sparkContext.defaultParallelism
-                chunk_rows = max(
-                    _AUTO_MIN_GROUP // 4, -(-max_n // (2 * max(par, 1)))
-                )
-            big_stats = sizes.filter(F.col("__n__") > chunk_rows) if chunk_rows else None
+        ``ChunkRows="auto"``: a group is big past ``_AUTO_MIN_GROUP``
+        rows, and its chunk size comes from its own count — ~2 chunks
+        per core, floored so chunks stay big enough to amortize the
+        per-chunk scans."""
+        n = F.count(F.lit(1))
+        if self.chunk_rows == "auto":
+            par = max(df.sparkSession.sparkContext.defaultParallelism, 1)
+            least = _AUTO_MIN_GROUP
+            C = F.greatest(F.lit(_AUTO_MIN_GROUP // 4), F.ceil(n / (2 * par)))
         else:
-            # explicit ChunkRows: ONE metadata job — aggregate, keep only
-            # the big groups (bounded by the skew count), collect. No
-            # checkpoint write, and no re-scan to build the routing list.
-            big_stats = df.groupBy(g).agg(*aggs).filter(
-                F.col("__n__") > chunk_rows
-            )
-        if chunk_rows is None:
-            return self._plain(df)
-        stat_rows = big_stats.limit(100_001).collect()
-        if not stat_rows:
-            # no group exceeds ChunkRows → the 3-shuffle machinery (and
-            # the routing joins) buy nothing; run the plain path whole
-            return self._plain(df)
-        group_mins = None
-        if numeric_ok and len(stat_rows) <= 100_000 and all(
-            r["__mx__"] - r["__mn__"] + 1 == r["__n__"] for r in stat_rows
-        ):
-            group_mins = {r[g]: r["__mn__"] for r in stat_rows}
-        if len(stat_rows) <= 100_000:
-            # routing list rebuilt driver-side: the joins broadcast a
-            # literal frame instead of recomputing the aggregation
-            big = F.broadcast(
-                df.sparkSession.createDataFrame(
-                    [[r[g]] for r in stat_rows],
-                    T.StructType([in_schema[g]]),
-                )
-            )
-        else:  # pathological ChunkRows: fall back to the dataframe route
-            big = F.broadcast(big_stats.select(g))
-        small_df = df.join(big, g, "left_anti")
-        big_df = df.join(big, g, "left_semi")
-        return self._plain(small_df).unionByName(
-            self._chunked_core(big_df, chunk_rows, group_mins)
-        )
+            least, C = self.chunk_rows, F.lit(self.chunk_rows)
+        # one struct column: every branch reads all of it, so the stats
+        # are aggregated and broadcast once (the other reads reuse it)
+        big = df.groupBy(self.group_key).agg(
+            F.struct(
+                n.alias("n"),
+                F.min(self.order_key).alias("mn"),
+                F.max(self.order_key).alias("mx"),
+                C.alias("C"),
+            ).alias("__st__")
+        ).filter(F.col("__st__.n") > least)
+        routed = df.join(F.broadcast(big), self.group_key, "left")
+        st = F.col("__st__")
+        return self._plain(
+            routed.filter(st.isNull()).select(*df.columns)
+        ).unionByName(self._chunked_core(routed.filter(st.isNotNull())))
 
-    def _chunked_core(
-        self, df: DataFrame, chunk_rows: int, group_mins: dict | None = None
-    ) -> DataFrame:
-        """Skew-parallel FSM: wall-clock bounded by ``ChunkRows`` and the
+    def _chunked_core(self, df: DataFrame) -> DataFrame:
+        """Skew-parallel FSM: wall-clock bounded by the chunk size and the
         largest single EVENT, not the largest GROUP.
 
         The plain paths shuffle each group to one partition, so one hot
@@ -941,7 +898,9 @@ class MergeMultilineLog(Processor):
         group is a FUNCTION {False,True} → {False,True} of its entry
         state. So:
 
-        1. chunk by ``floor(order / ChunkRows)``; per (group, chunk)
+        1. chunk each group into ~``ceil(n / C)`` chunks (``df`` carries
+           the struct ``__st__``: the group's count n, OrderKey range
+           mn .. mx and chunk size C); per (group, chunk)
            compute in parallel the transfer pair (state-after for entry
            False/True) + boundary counts for both entries — two
            vectorized scans, no data movement beyond the chunk shuffle;
@@ -965,7 +924,6 @@ class MergeMultilineLog(Processor):
         import numpy as np
         from pyspark.sql import types as T
 
-        C = int(chunk_rows)
         gk, okey = self.group_key, self.order_key
         in_schema = dict(zip(df.schema.names, df.schema.fields))
         has_s, has_c, has_e = self._mode()
@@ -975,58 +933,30 @@ class MergeMultilineLog(Processor):
         no_lines = np.zeros(0, dtype=bool)
         _, _, p0 = _mode_uv(no_lines, no_lines, no_lines, has_s, has_c, has_e)
 
-        # chunk id = floor(dense per-group ordinal / ChunkRows). With
-        # proven-dense numeric OrderKeys (group_mins from the caller's
-        # metadata probe) the ordinal is the shuffle-free arithmetic
-        # (order - group_min); otherwise a per-group row_number window —
-        # NEVER the raw order value: sparse OrderKeys (byte offsets,
-        # timestamps) would fragment a hot group into near-per-row
-        # chunks and explode the driver-collected metadata tables
-        # (ADVICE r4). The window costs one extra hash exchange on
-        # GroupKey; the big-group side is the skewed minority.
-        if group_mins is not None:
-            if len(group_mins) <= 64:
-                mn_expr = F.coalesce(
-                    F.try_element_at(
-                        F.create_map(
-                            *[
-                                x
-                                for k, v in group_mins.items()
-                                for x in (F.lit(k), F.lit(v))
-                            ]
-                        ),
-                        F.col(gk),
-                    )
-                    if group_mins
-                    else F.lit(0),
-                    F.lit(0),
-                )
-            else:
-                mins_df = F.broadcast(
-                    df.sparkSession.createDataFrame(
-                        list(group_mins.items()), [gk, "__grp_mn__"]
-                    )
-                )
-                df = df.join(mins_df, gk, "left")
-                mn_expr = F.coalesce(F.col("__grp_mn__"), F.lit(0))
-            ordinal = F.col(okey) - mn_expr
+        # Chunk ids are monotone in OrderKey, so each chunk is a run of
+        # the group's order (NULL keys sort first, into chunk 0, as on the
+        # plain path). A numeric OrderKey maps its range linearly onto
+        # ceil(n / C) chunks: no window, dense keys get chunks of at most
+        # C rows and sparse keys (byte offsets, timestamps) do not
+        # fragment a hot group into near-per-row chunks (ADVICE r4);
+        # clustered keys may put more than C rows into one chunk. Other
+        # key types chunk a per-group row_number ordinal.
+        mn, C = F.col("__st__.mn"), F.col("__st__.C")
+        if isinstance(in_schema[okey].dataType, T.NumericType):
+            chunk = F.floor(
+                (F.col(okey) - mn).cast("double") * F.ceil(F.col("__st__.n") / C)
+                / (F.col("__st__.mx") - mn + 1).cast("double")
+            )
         else:
-            w_ord = Window.partitionBy(gk).orderBy(okey)
-            ordinal = F.row_number().over(w_ord) - 1
+            ordinal = F.row_number().over(Window.partitionBy(gk).orderBy(okey))
+            chunk = F.floor((ordinal - 1) / C)
+        # Each chunk pass requires clustering on (group, chunk), which an
+        # input already clustered by GroupKey alone satisfies: always the
+        # case after the row_number window. Hash the chunks apart
+        # explicitly, or a hot group's chunks would share one task.
         flagged = self._flagged(
-            df, F.floor(ordinal / C).cast("long").alias("__chunk__")
-        )
-        # r6: the flagged projection feeds TWO chunk passes (meta +
-        # records) and the DataFrame API has no common-subplan reuse, so
-        # without help the scan + regex flags + big-group semi-join run
-        # twice AND each groupBy().applyInPandas adds its own exchange.
-        # One explicit (group, chunk) repartition fixes both: the two
-        # consumers canonicalize to the SAME exchange (ReuseExchange —
-        # scan+flags run once, the shuffle is written once and read
-        # twice) and both applyInPandas calls see their required
-        # clustering already satisfied (no further exchange). Plan diff
-        # vs r5: 3 big-side exchanges → 1 reused.
-        flagged = flagged.repartition(F.col(gk), F.col("__chunk__"))
+            df, F.coalesce(chunk.cast("long"), F.lit(0)).alias("__chunk__")
+        ).repartition(gk, "__chunk__")
         gfield = in_schema[gk]
         ofield = in_schema[okey]
 
@@ -1045,7 +975,7 @@ class MergeMultilineLog(Processor):
         def meta_fn(key, pdf):
             import pandas as pd
 
-            pdf = pdf.sort_values(okey)
+            pdf = pdf.sort_values(okey, na_position="first")
             s = pdf["__s__"].to_numpy(dtype=bool)
             c = pdf["__c__"].to_numpy(dtype=bool)
             e = pdf["__e__"].to_numpy(dtype=bool)
@@ -1117,7 +1047,7 @@ class MergeMultilineLog(Processor):
             import numpy as np
             import pandas as pd
 
-            pdf = pdf.sort_values(okey)
+            pdf = pdf.sort_values(okey, na_position="first")
             s = pdf["__s__"].to_numpy(dtype=bool)
             c = pdf["__c__"].to_numpy(dtype=bool)
             e = pdf["__e__"].to_numpy(dtype=bool)
@@ -1136,14 +1066,15 @@ class MergeMultilineLog(Processor):
                 member = member | unmatched
                 unmatched = np.zeros(len(member), dtype=bool)
             # direct (single-emitted) lines get a unique NEGATIVE event
-            # id, -(global dense position + 1), so the assembly folds
-            # them into the same (group, event) groupBy as merged events
-            # (member events have evt >= 0, so the id spaces never meet)
-            gpos = int(key[1]) * C + np.arange(len(pdf), dtype=np.int64)
+            # id from (chunk, position in chunk) — a chunk holds < 2^32
+            # rows, whatever its size — so the assembly folds them into
+            # the same (group, event) groupBy as merged events (member
+            # events have evt >= 0, so the id spaces never meet)
+            pos = (int(key[1]) << 32) + np.arange(len(pdf), dtype=np.int64)
             evt = np.where(
                 member,
                 int(pdf["__off__"].iloc[0]) + np.cumsum(boundary),
-                -(gpos + 1),
+                -(pos + 1),
             )
             # direct lines are complete 1-line events
             ok = ~member | (True if close_ok is None else close_ok)

@@ -25,6 +25,17 @@ def _partitions(master: str) -> int:
     return max(int(cores), 8) if cores.isdigit() else 32
 
 
+def _export_source_root() -> None:
+    """Put the directory this package was imported from first on
+    ``PYTHONPATH``, once. The JVM a new session starts copies this
+    process's environment, and its Python workers inherit it: they then
+    import the package the driver imported, from any working directory."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    paths = [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if root not in paths:
+        os.environ["PYTHONPATH"] = os.pathsep.join([root, *paths])
+
+
 def get_spark(
     app_name: str = "loongcollector_spark",
     master: str | None = None,
@@ -37,7 +48,10 @@ def get_spark(
     spark-submit launched this driver (it exports ``PYSPARK_GATEWAY_PORT``
     to the Python process): then spark-submit's ``--master`` stands.
     ``shuffle_partitions`` defaults to :func:`_partitions` of the master.
+    Python workers import the package from where the driver did
+    (:func:`_export_source_root`).
     """
+    _export_source_root()
     if master is None and "PYSPARK_GATEWAY_PORT" not in os.environ:
         master = f"local[{local_cores()}]"
     builder = SparkSession.builder.appName(app_name)

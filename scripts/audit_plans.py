@@ -34,11 +34,6 @@ def n_nodes(plan: str, pattern: str) -> int:
 
 
 def main() -> None:
-    # Python workers inherit the JVM's environment, which the session
-    # copies from this process: they import the package from any directory
-    os.environ["PYTHONPATH"] = os.pathsep.join(
-        filter(None, [REPO, os.environ.get("PYTHONPATH")])
-    )
     spark = get_spark()
     t = transcripts_from_events(spark, SF)
     docs = spark.read.parquet(f"{SF}/documents.parquet")
@@ -128,6 +123,39 @@ def main() -> None:
              "rlike" in p.lower() or "RLIKE" in p),
             ("in-partition sort, no global sort",
              "Sort" in p),
+        ],
+    ))
+
+    # Adaptive execution reuses the stats broadcast at run time; the
+    # static plan shows the same reuse before execution.
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        p = leaf("multiline_fsm_skew_chunked")
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
+    chunk_exchanges = re.findall(
+        r"\) Exchange\nInput \[\d+\]: \[([^\]]*)\]\n"
+        r"Arguments: hashpartitioning\(conv_id#\d+, __chunk__#", p
+    )
+    sections.append((
+        "chunked multiline merge (routed inside the plan, static plan) "
+        "[leaf multiline_fsm_skew_chunked]",
+        p,
+        [
+            ("one broadcast of the big-group stats; the plain path and "
+             "both chunk passes join it (two ReusedExchange)",
+             len(re.findall(r"\) BroadcastExchange\nInput \[\d+\]: "
+                            r"\[[^\]]*__st__", p)) == 1
+             and len(re.findall(r"\) ReusedExchange \[Reuses operator id: "
+                                r"\d+\]\nOutput \[\d+\]: \[[^\]]*__st__",
+                                p)) == 2),
+            ("regex flags (rlike) evaluated below both (group, chunk) "
+             "exchanges", len(chunk_exchanges) == 2
+             and all("__s__" in cols for cols in chunk_exchanges)),
+            ("numeric OrderKey: chunk ids from the group's key range, no "
+             "Window over (conv_id, turn_idx)",
+             not re.search(r"windowspecdefinition\(conv_id#\d+, turn_idx#",
+                           p)),
         ],
     ))
 

@@ -40,11 +40,6 @@ def norm(v) -> str:
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:]) or None
-    # Python workers inherit the JVM's environment, which the session
-    # copies from this process: they import the package from any directory
-    os.environ["PYTHONPATH"] = os.pathsep.join(
-        filter(None, [REPO, os.environ.get("PYTHONPATH")])
-    )
     spark = get_spark()
     con = duckdb.connect()
     for t in TABLES:

@@ -51,12 +51,10 @@ PINNED = [
 
 # Spark jobs a leaf runs while its frames are built, before any is
 # written; every other leaf runs none. The real parquet write; the
-# chunked merge's routing metadata; the bigram LM's vocabulary checkpoint
-# under adaptive execution; the ANN query-side collect; the
-# connected-components rounds.
+# bigram LM's vocabulary checkpoint under adaptive execution; the ANN
+# query-side collect; the connected-components rounds.
 PLAN_JOBS = dict.fromkeys(PINNED, 0) | {
     "pipeline_write_readback": 2,
-    "multiline_fsm_skew_chunked": 2,
     "lm_bigram_ppl_docs": 1,
     "ann_brute_float": 1,
     "ann_quantized_int8": 1,

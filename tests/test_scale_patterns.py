@@ -10,6 +10,30 @@ import pytest
 from pyspark.sql import functions as F
 
 
+def _pandas_rows(df, column: str) -> int:
+    """Rows returned by the grouped-pandas stages of ``df``'s executed
+    plan whose output has ``column``, read from their SQL metrics after
+    an action on ``df``. A stage that adaptive execution pruned as empty
+    returned none."""
+
+    def walk(node):
+        yield node
+        if node.getClass().getSimpleName().endswith("QueryStageExec"):
+            yield from walk(node.plan())
+        kids = node.children()
+        for i in range(kids.size()):
+            yield from walk(kids.apply(i))
+
+    total = 0
+    for node in walk(df._jdf.queryExecution().executedPlan().executedPlan()):
+        out = node.output()
+        if node.nodeName() == "FlatMapGroupsInPandas" and column in [
+            out.apply(i).name() for i in range(out.size())
+        ]:
+            total += node.metrics().apply("pythonNumRowsReceived").value()
+    return total
+
+
 class TestBucketedJoin:
     """Bucketing: pre-shuffle both sides of a recurring join on the join
     key at WRITE time — subsequent joins are shuffle-free (the batch
@@ -291,10 +315,11 @@ class TestHotConversationSkew:
         assert len(plain) > 8_000
 
     def test_chunked_sparse_orderkey_no_fragmentation(self, spark):
-        """Chunk ids come from the dense per-group ordinal, NOT the raw
-        order value (ADVICE r4): with byte-offset-like sparse OrderKeys
-        (stride 1000) the group must still split into #rows/ChunkRows
-        chunks — and produce the plain path's output."""
+        """Chunk ids map the group's OrderKey range onto ceil(#rows /
+        ChunkRows) chunks, NOT raw order value / ChunkRows (ADVICE r4):
+        with byte-offset-like sparse OrderKeys (stride 1000) the group
+        must still split into #rows/ChunkRows chunks — and produce the
+        plain path's output."""
         from pyspark.sql import functions as F
 
         from loongcollector_spark.operators.splits import MergeMultilineLog
@@ -315,26 +340,16 @@ class TestHotConversationSkew:
             (r.src, r.off): (r.content, r.n_merged)
             for r in MergeMultilineLog(**kw)(df).collect()
         }
-        chunked_op = MergeMultilineLog(ChunkRows=512, **kw)
+        out = MergeMultilineLog(ChunkRows=512, **kw)(df)
         chunked = {
             (r.src, r.off): (r.content, r.n_merged)
-            for r in chunked_op(df).collect()
+            for r in out.collect()
         }
         assert chunked == plain
-        # the chunk-id expression yields #rows/ChunkRows chunks, not
-        # order-span/ChunkRows (~5000 under the old floor(off/C) scheme)
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("src").orderBy("off")
-        n_chunks = (
-            df.withColumn(
-                "ck", F.floor((F.row_number().over(w) - 1) / 512)
-            )
-            .select("ck")
-            .distinct()
-            .count()
-        )
-        assert n_chunks == -(-n // 512)
+        # the operator's meta stage returns one row per chunk: #rows /
+        # ChunkRows chunks, not one per row as under a floor(off / C)
+        # scheme
+        assert _pandas_rows(out, "f0") == -(-n // 512)
         # a non-numeric OrderKey under 'discard', where whole chunks
         # emit nothing: the chunked path must still type its output
         lines = ["x", "x", "x", "x", "S", "E", "x", "x"]
@@ -357,9 +372,9 @@ class TestHotConversationSkew:
             ] == want
 
     def test_chunked_auto_routes_by_skew(self, spark, monkeypatch):
-        """ChunkRows='auto': below the hot-group threshold the plan is
-        the plain path (no chunk machinery); above it, auto picks a
-        ChunkRows and matches the plain path's output exactly."""
+        """ChunkRows='auto': below the hot-group threshold no row takes
+        the chunk machinery; above it, auto sizes the group's chunks from
+        its own count and matches the plain path's output exactly."""
         from pyspark.sql import functions as F
 
         from loongcollector_spark.operators import splits as splits_mod
@@ -381,20 +396,25 @@ class TestHotConversationSkew:
             for r in MergeMultilineLog(**kw)(df).collect()
         }
         auto = MergeMultilineLog(ChunkRows="auto", **kw)
-        # default threshold (1M): 3k-row group stays on the plain path —
-        # the plan contains no chunk-metadata python stages
-        plan = auto(df)._jdf.queryExecution().executedPlan().toString()
-        assert plan.count("FlatMapGroupsInPandas") == 0
+        # default threshold (1M): the 3k-row group stays on the plain
+        # path — the chunk stages return no row
+        out = auto(df)
         assert {
             (r.src, r.off): (r.content, r.n_merged)
-            for r in auto(df).collect()
+            for r in out.collect()
         } == plain
-        # force the chunked route: tiny threshold → auto-sized chunks
+        assert _pandas_rows(out, "f0") == 0
+        # force the chunked route: tiny threshold → auto-sized chunks of
+        # max(200 // 4, ceil(3000 / (2 * parallelism))) rows
         monkeypatch.setattr(splits_mod, "_AUTO_MIN_GROUP", 200)
+        out = auto(df)
         assert {
             (r.src, r.off): (r.content, r.n_merged)
-            for r in auto(df).collect()
+            for r in out.collect()
         } == plain
+        par = spark.sparkContext.defaultParallelism
+        size = max(50, -(-3000 // (2 * par)))
+        assert _pandas_rows(out, "f0") == -(-3000 // size)
 
     def test_plain_fsm_equals_reference_all_modes(self, spark):
         """The Spark FSM plan must equal the per-row reference
@@ -461,9 +481,9 @@ class TestHotConversationSkew:
                 assert got == sorted(want), (mode, treatment)
 
     def test_default_plans_start_no_job(self, spark):
-        """Building the Continue/End and start-only plans (ChunkRows
-        unset) runs no Spark action; ChunkRows does (its routing
-        metadata job), which also shows the job count is live."""
+        """Building the Continue/End and start-only plans, unchunked or
+        chunked (an int ChunkRows or 'auto'), runs no Spark action; the
+        marker job shows the job count is live."""
         import time
 
         from loongcollector_spark.operators.splits import MergeMultilineLog
@@ -475,19 +495,19 @@ class TestHotConversationSkew:
         )
         kw = dict(SourceKey="content", GroupKey="src", OrderKey="off")
         cases = {
-            "continue_end": (dict(ContinuePattern="^c", EndPattern="^E"), False),
-            "start_end": (dict(StartPattern="^S", EndPattern="^E"), False),
-            "start_only": (dict(StartPattern="S"), False),
-            "start_only_merge": (
-                dict(StartPattern="S", UnmatchedContentTreatment="merge"),
-                False,
+            "continue_end": dict(ContinuePattern="^c", EndPattern="^E"),
+            "start_end": dict(StartPattern="^S", EndPattern="^E"),
+            "start_only": dict(StartPattern="S"),
+            "start_only_merge": dict(
+                StartPattern="S", UnmatchedContentTreatment="merge"
             ),
-            "chunked": (
-                dict(StartPattern="^S", EndPattern="^E", ChunkRows=2), True
+            "chunked": dict(StartPattern="^S", EndPattern="^E", ChunkRows=2),
+            "chunked_auto": dict(
+                StartPattern="^S", EndPattern="^E", ChunkRows="auto"
             ),
         }
         try:
-            for name, (mode, _) in cases.items():
+            for name, mode in cases.items():
                 sc.setJobGroup(f"plan_build_{name}", name)
                 MergeMultilineLog(**kw, **mode)(df)
             # the listener bus is ordered: once this marker job is
@@ -505,15 +525,16 @@ class TestHotConversationSkew:
         ):
             time.sleep(0.1)
         assert tracker.getJobIdsForGroup("plan_build_marker")
-        for name, (_, runs_job) in cases.items():
+        for name in cases:
             jobs = tracker.getJobIdsForGroup(f"plan_build_{name}")
-            assert bool(jobs) == runs_job, (name, jobs)
+            assert not jobs, (name, jobs)
 
     def test_multiline_fsm_chunked_modes_differential(self, spark):
         """Chunk-parallel == plain across every FSM mode and treatment on
         a seeded multi-group sequence with nulls (transfer-function
         composition, boundary-count offsets, and end-of-input treatment
-        all pinned)."""
+        all pinned), plus a group whose clustered OrderKeys put more
+        than ChunkRows rows into one chunk."""
         import random
 
         from loongcollector_spark.operators.splits import MergeMultilineLog
@@ -526,6 +547,13 @@ class TestHotConversationSkew:
                     (g, i, rng.choice(["S a", "c b", "E c", "x d", None]))
                 )
         rows += [("tiny", 0, "S t"), ("tiny", 1, "c t")]
+        # 51 rows → 8 chunks over the key range 0..1900: keys 0-39 all
+        # fall in chunk 0 (40 rows > ChunkRows), so unmatched-line ids of
+        # chunk * ChunkRows + position would collide with chunks 4 and 5;
+        # the NULL key sorts first, as on the plain path
+        rows += [("clu", None, "S n")] + [
+            ("clu", o, "x d") for o in [*range(40), *range(1000, 2000, 100)]
+        ]
         df = spark.createDataFrame(
             rows, "src string, off long, content string"
         )
@@ -553,12 +581,12 @@ class TestHotConversationSkew:
                     UnmatchedContentTreatment=treatment, ChunkRows=7, **mode,
                 )
                 a = sorted(
-                    (r.src, r.off, r.content, r.n_merged)
-                    for r in plain(df).collect()
+                    ((r.src, r.off, r.content, r.n_merged)
+                     for r in plain(df).collect()), key=repr,
                 )
                 b = sorted(
-                    (r.src, r.off, r.content, r.n_merged)
-                    for r in chunk(df).collect()
+                    ((r.src, r.off, r.content, r.n_merged)
+                     for r in chunk(df).collect()), key=repr,
                 )
                 assert a == b, (mode, treatment)
 

@@ -38,3 +38,30 @@ def test_spark_submit_master_stands(tmp_path):
         env=env, capture_output=True, text=True, timeout=300,
     )
     assert "PROBE local[2] 8" in out.stdout, out.stderr[-3000:]
+
+
+def test_workers_import_the_package_the_driver_imported(tmp_path):
+    """A driver that finds the package by ``sys.path`` alone, started
+    outside the repo, runs a Python-UDF stage: ``get_spark`` hands the
+    package's source root to the Python workers."""
+    probe = tmp_path / "probe.py"
+    probe.write_text(
+        "import sys\n"
+        f"sys.path.insert(0, {REPO!r})\n"
+        "from loongcollector_spark.operators.splits import MergeMultilineLog\n"
+        "from loongcollector_spark.session import get_spark\n"
+        "s = get_spark(master='local[1]')\n"
+        "df = s.createDataFrame([('g', 0, 'c a'), ('g', 1, 'E b')],"
+        " 'src string, off long, content string')\n"
+        "op = MergeMultilineLog(SourceKey='content', GroupKey='src',"
+        " OrderKey='off', ContinuePattern='^c', EndPattern='^E')\n"
+        "print('PROBE', [tuple(r) for r in op(df).collect()])\n"
+        "s.stop()\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(PYSPARK_PYTHON=sys.executable, SPARK_GRAFT_DRIVER_MEM="1g")
+    out = subprocess.run(
+        [sys.executable, str(probe)], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=300,
+    )
+    assert "PROBE [('g', 'c a\\nE b', 0, 2)]" in out.stdout, out.stderr[-3000:]

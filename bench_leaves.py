@@ -43,9 +43,10 @@ from loongcollector_spark.sources.transcripts import (
 
 PIPE = TranscriptPipeline()
 LEAVES: dict[str, Callable[[Inputs], Iterator[DataFrame]]] = {}
-# multi-stage leaves: min-of-2 reps plus the sweep keeps wall time sane
+# multi-stage leaves and the row-by-row grok deadline path: min-of-2 reps
+# plus the sweep keeps wall time sane
 MAX_REPS = dict.fromkeys(
-    ["minhash_lsh_candidates"]
+    ["minhash_lsh_candidates", "grok_python_dispatch"]
     + [f"minhash_stage_{s}" for s in ("signature", "banded_capped", "pairs")],
     2,
 )
@@ -164,8 +165,8 @@ def shardhash_repartition(i):
 
 
 # wide grok: a 7-alias full-match pattern over the apsara-style grammar;
-# the JVM engine's replace+split single extract vs the python engine's
-# Arrow-batched Series.str.extract
+# the JVM path's replace+split single extract vs the per-log deadline
+# path, grok's one Python path (the regex module, row by row)
 WIDE_MATCH = [
     "\\[%{INT:ts}\\]\t\\[%{LOGLEVEL:lvl}\\]\t\\[%{INT:n}\\]\t"
     "\\[%{UNIXPATH:src}:%{INT:line}\\]\tuser:%{USERNAME:usr}\t"
@@ -180,8 +181,10 @@ def grok_jvm_wide(i):
 
 @leaf
 def grok_python_dispatch(i):
+    # a deadline far above any row's match time: it only selects the path
     yield Grok(
-        SourceKey="text", Match=WIDE_MATCH, Engine="python", IgnoreParseFailure=True
+        SourceKey="text", Match=WIDE_MATCH, TimeoutMilliSeconds=1000,
+        IgnoreParseFailure=True,
     )(i.corpus)
 
 

@@ -6,21 +6,18 @@ compiler :239-332 (recursive expansion with topological ordering and cycle
 detection over a built-in pattern library).
 
 Spark-first design: the grok → regex compilation happens ONCE on the
-driver (pure Python, below); execution is either
-* ``Engine='jvm'`` — whole-stage codegen. Multi-alias FULL-MATCH
-  patterns run the regex ONCE per claiming row (``regexp_replace`` with a
-  ``$1\\x01$2…`` template + split); single-alias or non-anchored
-  patterns use ``F.regexp_extract`` per alias, or
-* ``Engine='python'`` — one Arrow-batched UDF. When every compiled
-  pattern is RE2-expressible (no lookarounds/backrefs — see
-  ``_re2_translate``) the batch runs native vectorized
-  ``pyarrow.compute.extract_regex`` (r6, guide §4.2); otherwise a pandas
-  ``Series.str.extract`` per pattern (needed when the compiled regex uses
-  Perl-isms RE2 lacks, or a per-log match timeout is configured).
-  Every path reads ``\\w\\d\\s\\b`` as ASCII classes, the sets RE2, the
-  JVM and Go ``regexp`` (the reference runtime) use: the pandas and
-  timeout paths compile with the ASCII flag, so which path a Match list
-  takes never changes what it matches.
+driver (pure Python, below). Execution has one path per config:
+* by default, whole-stage codegen. Multi-alias FULL-MATCH patterns run the
+  regex ONCE per claiming row (``regexp_replace`` with a ``$1\\x01$2…``
+  template + split); single-alias or non-anchored patterns use
+  ``F.regexp_extract`` per alias;
+* with ``TimeoutMilliSeconds > 0``, one Arrow-batched UDF that runs each
+  row through the ``regex`` module under the per-log deadline. No JVM
+  regex can stop a match at a deadline, so the config, not a knob,
+  selects this path.
+Both paths read ``\\w\\d\\s\\b`` as ASCII classes, the sets the JVM and Go
+``regexp`` (the reference runtime) use: the deadline path compiles with
+the ASCII flag, so a deadline never changes what a Match list matches.
 
 Multi-pattern dispatch (Match list) = chained ``CASE WHEN rlike`` — the
 anchored-dispatch pattern, identical to the reference's first-match-wins.
@@ -35,12 +32,11 @@ from __future__ import annotations
 
 import re
 
-import pyarrow as pa  # noqa: F401 — resolves arrow_udf type hints
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from loongcollector_spark.operators.base import ParserOptions, Processor, register
+from loongcollector_spark.operators.base import Processor, register
 
 # Standard grok base patterns (public de-facto set used by logstash/grok
 # implementations everywhere).
@@ -135,86 +131,6 @@ DEFAULT_PATTERNS: dict[str, str] = {
 _GROK_REF = re.compile(r"%\{(\w+)(?::([\w\[\]."  r"@-]+))?\}")
 
 
-def _re2_translate(rx: str) -> str | None:
-    """Translate a Python-``re``-compiled grok regex into an RE2 pattern
-    whose capture groups are named ``g1..gN``, or return ``None`` when the
-    pattern uses a construct RE2 lacks or whose semantics silently differ.
-
-    Rejected outright: lookarounds/atomic groups/conditionals (any ``(?``
-    other than ``(?:`` or ``(?flags``), backreferences, ``\\Z``/``\\G`` and
-    python-only escapes, and ``$`` anywhere but the very end (RE2's ``$``
-    is end-of-text while python's also matches before one trailing
-    newline — the trailing ``$`` is rewritten to ``(?:\\n)?$`` to keep that
-    semantics). Perl classes (``\\w``/``\\d``/``\\s``/``\\b``) pass through
-    and are ASCII under RE2 — the same sets ``java.util.regex`` (the
-    ``jvm`` engine), Go ``regexp`` (the reference runtime) and the
-    ASCII-flagged pandas path use."""
-    out: list[str] = []
-    i, n = 0, len(rx)
-    group = 0
-    in_class = False
-    while i < n:
-        c = rx[i]
-        if c == "\\":
-            if i + 1 >= n:
-                return None
-            nxt = rx[i + 1]
-            if nxt.isdigit() or nxt in "ZGuUN":
-                return None
-            out.append(rx[i : i + 2])
-            i += 2
-            continue
-        if in_class:
-            if c == "]":
-                in_class = False
-            out.append(c)
-            i += 1
-            continue
-        if c == "[":
-            in_class = True
-            out.append(c)
-            i += 1
-            if i < n and rx[i] == "^":
-                out.append("^")
-                i += 1
-            if i < n and rx[i] == "]":
-                # python treats a leading ']' as a literal; RE2 needs it
-                # escaped to mean the same thing
-                out.append("\\]")
-                i += 1
-            continue
-        if c == "(":
-            if rx.startswith("(?", i):
-                if rx.startswith("(?:", i):
-                    out.append("(?:")
-                    i += 3
-                    continue
-                j = i + 2
-                k = j
-                while k < n and rx[k] in "ims":
-                    k += 1
-                if k > j and k < n and rx[k] in "):":
-                    out.append(rx[i : k + 1])
-                    i = k + 1
-                    continue
-                return None
-            group += 1
-            out.append(f"(?P<g{group}>")
-            i += 1
-            continue
-        if c == "$":
-            if i == n - 1:
-                out.append("(?:\n)?$")
-                i += 1
-                continue
-            return None
-        out.append(c)
-        i += 1
-    if in_class:
-        return None
-    return "".join(out)
-
-
 class GrokCompileError(ValueError):
     pass
 
@@ -290,26 +206,25 @@ class Grok(Processor):
         CustomPatterns: dict[str, str] | None = None,
         KeepSource: bool = True,
         IgnoreParseFailure: bool = False,
-        Engine: str = "jvm",
         FullMatch: bool = True,
         ErrorClassKey: str | None = None,
         TimeoutMilliSeconds: int = 0,
         MaxSourceLength: int | None = None,
     ) -> None:
-        """``TimeoutMilliSeconds`` mirrors processor_grok.go:47,149 (per-log
-        match deadline, timed-out rows are treated as unmatched); it applies
-        to the python engine only (the ``regex`` module's per-call timeout
-        replaces Go's regexp2 MatchTimeout). ``MaxSourceLength`` is the
-        engine-agnostic guard: rows longer than the bound are treated as
-        unmatched without ever entering the regex — the JVM engine has no
-        timeout facility, so a length bound is its backtracking protection.
+        """``TimeoutMilliSeconds`` mirrors processor_grok.go:47,149: a
+        per-log match deadline, timed-out rows are treated as unmatched.
+        Setting it selects the deadline path (the ``regex`` module's
+        per-call timeout replaces Go's regexp2 MatchTimeout); ``0`` keeps
+        the JVM path. ``MaxSourceLength`` guards both paths: rows longer
+        than the bound are treated as unmatched without ever entering the
+        regex — the JVM path has no timeout facility, so a length bound is
+        its backtracking protection.
         """
         if not Match:
             raise GrokCompileError("Match must be non-empty")
         self.source_key = SourceKey
         self.keep_source = KeepSource
         self.ignore_parse_failure = IgnoreParseFailure
-        self.engine = Engine
         self.error_class_key = ErrorClassKey
         self.timeout_ms = int(TimeoutMilliSeconds)
         self.max_source_length = MaxSourceLength
@@ -332,8 +247,8 @@ class Grok(Processor):
                     self.all_keys.append(a)
 
     def __call__(self, df: DataFrame) -> DataFrame:
-        if self.engine == "python":
-            return self._call_python(df)
+        if self.timeout_ms > 0:
+            return self._call_deadline(df)
         src = F.col(self.source_key)
         length_ok = (
             F.length(src) <= F.lit(self.max_source_length)
@@ -402,136 +317,19 @@ class Grok(Processor):
                         val = per_group
                     expr = F.when(is_first, val).otherwise(expr)
             df = df.withColumn(key, expr)
-        if tmp_cols:
-            df = df.drop(*tmp_cols)
-        if self.error_class_key:
-            df = df.withColumn(
-                self.error_class_key,
-                F.when(any_match, F.lit("")).otherwise(F.lit("grok_parse_fail")),
-            )
-        elif not self.ignore_parse_failure:
-            df = df.filter(any_match)
-        if not self.keep_source:
-            df = df.drop(self.source_key)
-        return df
+        return self._finish(df, any_match, tmp_cols)
 
-    def _re2_patterns(self) -> list[tuple[str, list[str]]] | None:
-        """The python engine's RE2 fast path: every Match pattern must
-        translate cleanly (see ``_re2_translate``) and compile under the
-        worker-side engine (probed here on the driver). ``None`` → the
-        pandas ``str.extract`` path. Timeout configs stay on the pandas
-        path: the per-log deadline is a backtracking-engine concept and
-        the ``regex`` module owns it."""
-        if self.timeout_ms > 0:
-            return None
-        pats: list[tuple[str, list[str]]] = []
-        for rx, aliases in self.compiled:
-            rx2 = _re2_translate(rx)
-            if rx2 is None:
-                return None
-            pats.append((rx2, aliases))
-        try:
-            import pyarrow as pa
-            import pyarrow.compute as pc
-
-            probe = pa.array(["x"], type=pa.string())
-            for rx2, aliases in pats:
-                if aliases:
-                    pc.extract_regex(probe, pattern=rx2)
-                else:
-                    pc.match_substring_regex(probe, rx2)
-        except Exception:
-            return None
-        return pats
-
-    def _call_python_re2(
-        self, df: DataFrame, pats: list[tuple[str, list[str]]]
-    ) -> DataFrame:
-        """Arrow-batched RE2 extraction (guide §4.2): one ArrowEvalPython
-        node, ``pyarrow.compute.extract_regex`` per Match pattern —
-        native vectorized RE2 instead of per-row python-``re``
-        backtracking (measured ~6× on the counting swaps this round; the
-        same engine gap applies to extraction). First-match-wins and the
-        non-participating-group → '' law are identical to the pandas
-        path (masks below mirror its ``remaining`` bookkeeping)."""
-        all_keys = self.all_keys
-        max_len = self.max_source_length
-        fields = [T.StructField("__ok__", T.BooleanType())] + [
-            T.StructField(k, T.StringType()) for k in all_keys
-        ]
-        out_type = T.StructType(fields)
-
-        @F.arrow_udf(out_type)
-        def extract(arr: pa.Array) -> pa.Array:
-            import numpy as np
-            import pyarrow as pa
-            import pyarrow.compute as pc
-
-            if isinstance(arr, pa.ChunkedArray):
-                arr = arr.combine_chunks()
-            n = len(arr)
-            eligible = pc.is_valid(arr).to_numpy(zero_copy_only=False)
-            if max_len is not None:
-                ln_ok = pc.fill_null(
-                    pc.less_equal(pc.utf8_length(arr), max_len), False
-                )
-                eligible &= ln_ok.to_numpy(zero_copy_only=False)
-            ok = np.zeros(n, dtype=bool)
-            cols = {k: np.full(n, None, dtype=object) for k in all_keys}
-            remaining = eligible.copy()
-            for rx2, aliases in pats:
-                if not remaining.any():
-                    break
-                if aliases:
-                    ext = pc.extract_regex(arr, pattern=rx2)
-                    hit = pc.is_valid(ext).to_numpy(zero_copy_only=False)
-                    take = remaining & hit
-                    if take.any():
-                        for gi, alias in enumerate(aliases):
-                            # matched row + non-participating group = ''
-                            # (Go FindStringSubmatch / JVM regexp_extract)
-                            vals = pc.fill_null(
-                                ext.field(f"g{gi + 1}"), ""
-                            ).to_numpy(zero_copy_only=False)
-                            cols[alias][take] = vals[take]
-                else:
-                    hit = pc.fill_null(
-                        pc.match_substring_regex(arr, rx2), False
-                    ).to_numpy(zero_copy_only=False)
-                    take = remaining & hit
-                ok |= take
-                remaining &= ~hit
-            children = [pa.array(ok)] + [
-                pa.array(cols[k], type=pa.string()) for k in all_keys
-            ]
-            return pa.StructArray.from_arrays(
-                children, names=["__ok__"] + list(all_keys)
-            )
-
-        tmp = "__lc_grok__"
-        out = df.withColumn(tmp, extract(F.col(self.source_key)))
-        ok = F.col(f"{tmp}.__ok__")
-        for k in all_keys:
-            out = out.withColumn(k, F.col(f"{tmp}.{k}"))
-        if self.error_class_key:
-            out = out.withColumn(
-                self.error_class_key,
-                F.when(ok, F.lit("")).otherwise(F.lit("grok_parse_fail")),
-            )
-        elif not self.ignore_parse_failure:
-            out = out.filter(ok)
-        out = out.drop(tmp)
-        if not self.keep_source:
-            out = out.drop(self.source_key)
-        return out
-
-    def _call_python(self, df: DataFrame) -> DataFrame:
-        re2_pats = self._re2_patterns()
-        if re2_pats is not None:
-            return self._call_python_re2(df, re2_pats)
+    def _call_deadline(self, df: DataFrame) -> DataFrame:
+        """The per-log deadline path (processor_grok.go:47,149): one
+        Arrow-batched UDF runs each row through the ``regex`` module, whose
+        per-call timeout stands in for Go's regexp2 MatchTimeout; a row
+        that times out counts as unmatched, as in the reference. Patterns
+        compile with the ASCII flag (``\\w\\d\\s\\b`` mean what they mean on
+        the JVM path), the first matching pattern claims a row, and a
+        matched row's non-participating group is ``''``."""
         compiled = self.compiled
         all_keys = self.all_keys
-        timeout_ms = self.timeout_ms
+        tmo = self.timeout_ms / 1000.0
         max_len = self.max_source_length
         fields = [T.StructField("__ok__", T.BooleanType())] + [
             T.StructField(k, T.StringType()) for k in all_keys
@@ -541,6 +339,7 @@ class Grok(Processor):
         @F.pandas_udf(out_type)
         def extract(s):
             import pandas as pd
+            import regex as regex_mod
 
             res = pd.DataFrame(index=s.index)
             res["__ok__"] = False
@@ -550,73 +349,45 @@ class Grok(Processor):
             if max_len is not None:
                 eligible &= s.str.len().fillna(0) <= max_len
             remaining = eligible.copy()
-            if timeout_ms > 0:
-                # per-log deadline (processor_grok.go:149): the `regex`
-                # module takes a timeout per match call; timed-out rows are
-                # treated as unmatched, like the reference's regexp2 path.
-                import regex as regex_mod
-
-                tmo = timeout_ms / 1000.0
-                pats = [
-                    (regex_mod.compile(rx, flags=regex_mod.ASCII), aliases)
-                    for rx, aliases in compiled
-                ]
-                for pat, aliases in pats:
-                    if not remaining.any():
-                        break
-                    for idx in s.index[remaining]:
-                        try:
-                            m = pat.search(s[idx], timeout=tmo)
-                        except TimeoutError:
-                            m = None
-                        if m is not None:
-                            for gi, alias in enumerate(aliases):
-                                # non-participating group = "" (Go
-                                # FindStringSubmatch / JVM regexp_extract)
-                                res.at[idx, alias] = m.group(gi + 1) or ""
-                            res.at[idx, "__ok__"] = True
-                    remaining = eligible & ~res["__ok__"]
-                return res
-            for rx, aliases in compiled:
+            pats = [
+                (regex_mod.compile(rx, flags=regex_mod.ASCII), aliases)
+                for rx, aliases in compiled
+            ]
+            for pat, aliases in pats:
                 if not remaining.any():
                     break
-                sub = s[remaining]
-                # hit mask via a dedicated search (str.contains ≡ re.search,
-                # matching str.extract's semantics) — NOT via "first group
-                # non-null", which breaks when the first aliased group is
-                # optional or when the pattern has zero capture groups.
-                import warnings
-
-                with warnings.catch_warnings():
-                    warnings.simplefilter("ignore", UserWarning)
-                    hit = sub.str.contains(
-                        rx, regex=True, na=False, flags=re.ASCII
-                    )
-                hit_idx = sub.index[hit]
-                if aliases and len(hit_idx):
-                    ext = sub.str.extract(rx, flags=re.ASCII, expand=True)
-                    for gi, alias in enumerate(aliases):
-                        # matched row + non-participating optional group =
-                        # "" — parity with Go FindStringSubmatch and the
-                        # JVM engine's regexp_extract
-                        res.loc[hit_idx, alias] = ext.loc[hit_idx, gi].fillna("")
-                res.loc[hit_idx, "__ok__"] = True
+                for idx in s.index[remaining]:
+                    try:
+                        m = pat.search(s[idx], timeout=tmo)
+                    except TimeoutError:
+                        m = None
+                    if m is not None:
+                        for gi, alias in enumerate(aliases):
+                            # non-participating group = "" (Go
+                            # FindStringSubmatch / JVM regexp_extract)
+                            res.at[idx, alias] = m.group(gi + 1) or ""
+                        res.at[idx, "__ok__"] = True
                 remaining = eligible & ~res["__ok__"]
             return res
 
         tmp = "__lc_grok__"
         out = df.withColumn(tmp, extract(F.col(self.source_key)))
-        ok = F.col(f"{tmp}.__ok__")
         for k in all_keys:
             out = out.withColumn(k, F.col(f"{tmp}.{k}"))
+        return self._finish(out, F.col(f"{tmp}.__ok__"), [tmp])
+
+    def _finish(self, df: DataFrame, ok: Column, tmp_cols: list[str]) -> DataFrame:
+        """The tail both paths share: tag unmatched rows with the error
+        class, or drop them unless ``IgnoreParseFailure``; then drop the
+        path's scratch columns and, unless ``KeepSource``, the source."""
         if self.error_class_key:
-            out = out.withColumn(
+            df = df.withColumn(
                 self.error_class_key,
                 F.when(ok, F.lit("")).otherwise(F.lit("grok_parse_fail")),
             )
         elif not self.ignore_parse_failure:
-            out = out.filter(ok)
-        out = out.drop(tmp)
+            df = df.filter(ok)
+        df = df.drop(*tmp_cols)
         if not self.keep_source:
-            out = out.drop(self.source_key)
-        return out
+            df = df.drop(self.source_key)
+        return df

@@ -3,8 +3,10 @@
 Each parser re-expresses a reference processor as a declarative DataFrame
 transform. Default path is built-in ``pyspark.sql.functions`` (JVM-side,
 whole-stage-codegen'd); a pandas-UDF (Arrow-vectorized) path exists where
-the reference semantics can't be matched by built-ins (Python-regex
-dialect, exact JSON value stringification, quote-aware delimiter FSM).
+the reference semantics can't be matched by built-ins (the Go regex
+plugin's non-participating-group law, exact JSON value stringification,
+quote-aware delimiter FSM). ``processor_parse_regex_native`` runs on the
+JVM regex alone.
 No per-row Python anywhere.
 
 Reference parity targets:
@@ -152,27 +154,25 @@ class ParseRegexNative(Processor):
     """Regex with capture groups → named string columns.
 
     Full-match semantics (the reference uses boost::regex_match —
-    ProcessorParseRegexNative.cpp:186-253), so the pattern is anchored.
-    Whole-line fast path when ``Regex == '(.*)'``: the source is renamed to
-    ``Keys[0]`` with no regex evaluation (reference :68,147-151; our config
-    compiler emits a plain column alias — the analogue of that fast path).
-
-    ``Engine='jvm'`` (default) uses ``F.regexp_extract`` (Java regex,
-    codegen). ``Engine='python'`` runs ``Series.str.extract`` in one Arrow
-    batch UDF for boost/Perl dialect parity (backrefs, lookarounds).
+    ProcessorParseRegexNative.cpp:186-253), so the pattern is anchored and
+    runs as ``rlike`` + ``F.regexp_extract`` (Java regex, codegen):
+    ``\\w\\d\\s`` are ASCII classes. Whole-line fast path when
+    ``Regex == '(.*)'``: the source is renamed to ``Keys[0]`` with no regex
+    evaluation (reference :68,147-151; our config compiler emits a plain
+    column alias — the analogue of that fast path). A regex with fewer
+    capture groups than ``Keys`` fails every row, decided once at
+    construction (the law ``ProcessorRegexGo`` applies, regex.go:115-120).
     """
 
-    def __init__(
-        self,
-        SourceKey: str,
-        Regex: str,
-        Keys,
-        Engine: str = "jvm",
-        **options,
-    ) -> None:
+    def __init__(self, SourceKey: str, Regex: str, Keys, **options) -> None:
         self.regex = Regex
         self.keys = _split_keys(Keys)
-        self.engine = Engine
+        try:
+            self.too_few_groups = re.compile(Regex).groups < len(self.keys)
+        except re.error:
+            # a Java construct Python's re lacks (``(?<name>…)``,
+            # ``\p{L}``): only the JVM can count its groups
+            self.too_few_groups = False
         self.opts = ParserOptions(SourceKey=SourceKey, **options)
 
     def __call__(self, df: DataFrame) -> DataFrame:
@@ -181,45 +181,15 @@ class ParseRegexNative(Processor):
             # Whole-line fast path: pure rename, always succeeds.
             out = df.withColumn(self.keys[0], src)
             return self.opts.finalize(out, F.lit(True), [self.keys[0]])
-
-        if self.engine == "python":
-            return self._call_python(df)
-
-        anchored = f"^(?:{self.regex})$"
-        ok = src.rlike(anchored)
         out = df
+        if self.too_few_groups:
+            for k in self.keys:
+                out = out.withColumn(k, F.lit(None).cast("string"))
+            return self.opts.finalize(out, F.lit(False), self.keys)
+        anchored = f"^(?:{self.regex})$"
         for i, k in enumerate(self.keys):
             out = out.withColumn(k, F.regexp_extract(src, anchored, i + 1))
-        return self.opts.finalize(out, ok, self.keys)
-
-    def _call_python(self, df: DataFrame) -> DataFrame:
-        keys = self.keys
-        pattern = self.regex
-        fields = [T.StructField("__ok__", T.BooleanType())] + [
-            T.StructField(k, T.StringType()) for k in keys
-        ]
-        out_type = T.StructType(fields)
-
-        @F.pandas_udf(out_type)
-        def extract(s):
-            import pandas as pd
-
-            rx = re.compile(pattern)
-            ext = s.str.extract(f"^(?:{pattern})$", expand=True)
-            ngroups = rx.groups
-            res = pd.DataFrame(index=s.index)
-            res["__ok__"] = s.str.fullmatch(pattern).fillna(False)
-            for i, k in enumerate(keys):
-                res[k] = ext[i] if i < ngroups else None
-            return res
-
-        tmp = "__lc_regex_struct__"
-        out = df.withColumn(tmp, extract(F.col(self.opts.source_key)))
-        ok = F.col(f"{tmp}.__ok__")
-        for k in keys:
-            out = out.withColumn(k, F.col(f"{tmp}.{k}"))
-        out = self.opts.finalize(out, ok, keys)
-        return out.drop(tmp)
+        return self.opts.finalize(out, src.rlike(anchored), self.keys)
 
 
 def _stringify_json_value(v) -> str:

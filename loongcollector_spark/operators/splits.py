@@ -864,7 +864,14 @@ class MergeMultilineLog(Processor):
         rows, and its chunk size comes from its own count — ~2 chunks
         per core, floored so chunks stay big enough to amortize the
         per-chunk scans."""
+        from pyspark.sql import types as T
+
         n = F.count(F.lit(1))
+        if isinstance(df.schema[self.order_key].dataType, T.NumericType):
+            mn, mx = F.min(self.order_key), F.max(self.order_key)
+        else:
+            # other key types chunk a row_number ordinal: its range is 1 .. n
+            mn, mx = F.lit(1), n
         if self.chunk_rows == "auto":
             par = max(df.sparkSession.sparkContext.defaultParallelism, 1)
             least = _AUTO_MIN_GROUP
@@ -872,13 +879,12 @@ class MergeMultilineLog(Processor):
         else:
             least, C = self.chunk_rows, F.lit(self.chunk_rows)
         # one struct column: every branch reads all of it, so the stats
-        # are aggregated and broadcast once (the other reads reuse it)
+        # are aggregated and broadcast once (the other reads reuse it;
+        # a branch that read only some fields would get its own pruned
+        # aggregate and broadcast)
         big = df.groupBy(self.group_key).agg(
             F.struct(
-                n.alias("n"),
-                F.min(self.order_key).alias("mn"),
-                F.max(self.order_key).alias("mx"),
-                C.alias("C"),
+                n.alias("n"), mn.alias("mn"), mx.alias("mx"), C.alias("C"),
             ).alias("__st__")
         ).filter(F.col("__st__.n") > least)
         routed = df.join(F.broadcast(big), self.group_key, "left")
@@ -899,7 +905,7 @@ class MergeMultilineLog(Processor):
         state. So:
 
         1. chunk each group into ~``ceil(n / C)`` chunks (``df`` carries
-           the struct ``__st__``: the group's count n, OrderKey range
+           the struct ``__st__``: the group's count n, chunk key range
            mn .. mx and chunk size C); per (group, chunk)
            compute in parallel the transfer pair (state-after for entry
            False/True) + boundary counts for both entries — two
@@ -935,21 +941,22 @@ class MergeMultilineLog(Processor):
 
         # Chunk ids are monotone in OrderKey, so each chunk is a run of
         # the group's order (NULL keys sort first, into chunk 0, as on the
-        # plain path). A numeric OrderKey maps its range linearly onto
-        # ceil(n / C) chunks: no window, dense keys get chunks of at most
-        # C rows and sparse keys (byte offsets, timestamps) do not
-        # fragment a hot group into near-per-row chunks (ADVICE r4);
-        # clustered keys may put more than C rows into one chunk. Other
-        # key types chunk a per-group row_number ordinal.
-        mn, C = F.col("__st__.mn"), F.col("__st__.C")
+        # plain path). The chunk key's range mn .. mx maps linearly onto
+        # ceil(n / C) chunks. A numeric OrderKey is its own chunk key: no
+        # window, dense keys get chunks of at most C rows and sparse keys
+        # (byte offsets, timestamps) do not fragment a hot group into
+        # near-per-row chunks (ADVICE r4); clustered keys may put more
+        # than C rows into one chunk. Other key types use a per-group
+        # row_number ordinal (range 1 .. n: chunks of at most C rows).
+        n, mn, mx, C = (F.col(f"__st__.{f}") for f in ("n", "mn", "mx", "C"))
         if isinstance(in_schema[okey].dataType, T.NumericType):
-            chunk = F.floor(
-                (F.col(okey) - mn).cast("double") * F.ceil(F.col("__st__.n") / C)
-                / (F.col("__st__.mx") - mn + 1).cast("double")
-            )
+            chunk_key = F.col(okey)
         else:
-            ordinal = F.row_number().over(Window.partitionBy(gk).orderBy(okey))
-            chunk = F.floor((ordinal - 1) / C)
+            chunk_key = F.row_number().over(Window.partitionBy(gk).orderBy(okey))
+        chunk = F.floor(
+            (chunk_key - mn).cast("double") * F.ceil(n / C)
+            / (mx - mn + 1).cast("double")
+        )
         # Each chunk pass requires clustering on (group, chunk), which an
         # input already clustered by GroupKey alone satisfies: always the
         # case after the row_number window. Hash the chunks apart

@@ -21,6 +21,9 @@ sys.path.insert(0, REPO)
 from pyspark.sql import functions as F  # noqa: E402
 
 from bench_leaves import LEAVES, Inputs, plan_of  # noqa: E402
+from loongcollector_spark.operators.splits import (  # noqa: E402
+    MergeMultilineLog,
+)
 from loongcollector_spark.session import get_spark  # noqa: E402
 from loongcollector_spark.sources.transcripts import (  # noqa: E402
     transcripts_from_events,
@@ -128,34 +131,65 @@ def main() -> None:
 
     # Adaptive execution reuses the stats broadcast at run time; the
     # static plan shows the same reuse before execution.
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        p = leaf("multiline_fsm_skew_chunked")
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
-    chunk_exchanges = re.findall(
-        r"\) Exchange\nInput \[\d+\]: \[([^\]]*)\]\n"
-        r"Arguments: hashpartitioning\(conv_id#\d+, __chunk__#", p
-    )
+    def static_plan(frame) -> str:
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        try:
+            return plan_of(frame)
+        finally:
+            spark.conf.set("spark.sql.adaptive.enabled", "true")
+
+    def stats_broadcast_once(p: str) -> tuple[str, bool]:
+        return (
+            "one broadcast of the big-group stats; the plain path and both "
+            "chunk passes join it (two ReusedExchange), no pruned copy",
+            len(re.findall(r"\) BroadcastExchange\nInput \[\d+\]: "
+                           r"\[[^\]]*__st__", p)) == 1
+            and len(re.findall(r"\) ReusedExchange \[Reuses operator id: "
+                               r"\d+\]\nOutput \[\d+\]: \[[^\]]*__st__",
+                               p)) == 2
+            and "_extract_" not in p,
+        )
+
+    def chunk_flags_below_exchanges(p: str) -> tuple[str, bool]:
+        chunk_exchanges = re.findall(
+            r"\) Exchange\nInput \[\d+\]: \[([^\]]*)\]\n"
+            r"Arguments: hashpartitioning\(conv_id#\d+, __chunk__#", p
+        )
+        return (
+            "regex flags (rlike) evaluated below both (group, chunk) "
+            "exchanges", len(chunk_exchanges) == 2
+            and all("__s__" in cols for cols in chunk_exchanges),
+        )
+
+    p = static_plan(list(LEAVES["multiline_fsm_skew_chunked"](inp))[0])
     sections.append((
         "chunked multiline merge (routed inside the plan, static plan) "
         "[leaf multiline_fsm_skew_chunked]",
         p,
         [
-            ("one broadcast of the big-group stats; the plain path and "
-             "both chunk passes join it (two ReusedExchange)",
-             len(re.findall(r"\) BroadcastExchange\nInput \[\d+\]: "
-                            r"\[[^\]]*__st__", p)) == 1
-             and len(re.findall(r"\) ReusedExchange \[Reuses operator id: "
-                                r"\d+\]\nOutput \[\d+\]: \[[^\]]*__st__",
-                                p)) == 2),
-            ("regex flags (rlike) evaluated below both (group, chunk) "
-             "exchanges", len(chunk_exchanges) == 2
-             and all("__s__" in cols for cols in chunk_exchanges)),
+            stats_broadcast_once(p),
+            chunk_flags_below_exchanges(p),
             ("numeric OrderKey: chunk ids from the group's key range, no "
              "Window over (conv_id, turn_idx)",
              not re.search(r"windowspecdefinition\(conv_id#\d+, turn_idx#",
                            p)),
+        ],
+    ))
+
+    p = static_plan(MergeMultilineLog(
+        SourceKey="text", GroupKey="conv_id", OrderKey="turn_key",
+        StartPattern=r"^\{", EndPattern=r"\|", ChunkRows=262_144,
+    )(t.withColumn("turn_key", F.format_string("%08d", "turn_idx"))))
+    sections.append((
+        "chunked multiline merge, string OrderKey (static plan)",
+        p,
+        [
+            stats_broadcast_once(p),
+            chunk_flags_below_exchanges(p),
+            ("string OrderKey: chunk ids from a row_number ordinal (a "
+             "Window over (conv_id, turn_key))",
+             re.search(r"windowspecdefinition\(conv_id#\d+, turn_key#", p)
+             is not None),
         ],
     ))
 

@@ -20,6 +20,10 @@ from loongcollector_spark.operators.splits import (
 )
 from tests.conftest import rows_as_dicts
 
+# the two grok paths: the JVM plan (no deadline) and the per-log deadline
+# path, which a deadline far above any row's match time selects
+GROK_PATHS = {"jvm": {}, "deadline": {"TimeoutMilliSeconds": 60_000}}
+
 
 class TestGrokCompiler:
     def test_expansion(self):
@@ -97,8 +101,8 @@ class TestGrokProcessor:
             Match=[r"%{WORD:k}=%{INT:v}", r"%{WORD:k} %{INT:v2}"],
             IgnoreParseFailure=True,
         )
-        jvm = rows_as_dicts(Grok(Engine="jvm", **kw)(df))
-        py = rows_as_dicts(Grok(Engine="python", **kw)(df))
+        jvm = rows_as_dicts(Grok(**kw)(df))
+        py = rows_as_dicts(Grok(**GROK_PATHS["deadline"], **kw)(df))
         for a, b in zip(jvm, py):
             for key in ("k", "v", "v2"):
                 assert a[key] == b[key], (key, a, b)
@@ -124,8 +128,8 @@ class TestGrokProcessor:
             Match=[r"%{WORD:a} %{WORD:b}", r"%{DATA:whole}"],
             IgnoreParseFailure=True,
         )
-        for eng in ("jvm", "python"):
-            r = rows_as_dicts(Grok(Engine=eng, **kw)(df))[0]
+        for eng, path in GROK_PATHS.items():
+            r = rows_as_dicts(Grok(**path, **kw)(df))[0]
             assert r["a"] == "hello" and r["b"] == "world", eng
             assert r["whole"] is None, eng
 
@@ -134,7 +138,7 @@ class TestGrokProcessor:
         single-execution regexp_replace+split path. Parity across: the
         9-alias wide line, a source containing the \\x01 separator byte
         (per-row fallback to per-group extracts), a non-participating
-        optional group (''), and the python engine."""
+        optional group (''), and the deadline path."""
         wide = (
             "%{IPV4:ip} %{WORD:meth} %{URIPATH:path} %{INT:code} %{INT:size} "
             "%{QUOTEDSTRING:ref} %{QUOTEDSTRING:ua} %{NUMBER:rt}"
@@ -147,7 +151,7 @@ class TestGrokProcessor:
             "garbage",
         ]
         kw = dict(SourceKey="content", Match=[wide], IgnoreParseFailure=True)
-        jvm = rows_as_dicts(Grok(Engine="jvm", **kw)(text_df_factory(lines)))
+        jvm = rows_as_dicts(Grok(**kw)(text_df_factory(lines)))
         assert jvm[0]["ip"] == "10.0.0.1" and jvm[0]["proto"] == "http"
         assert jvm[0]["ref"] == '"r"' and jvm[0]["rt"] == "1.5"
         assert jvm[1]["ref"] == '"a\x01b"'  # fallback path sliced correctly
@@ -155,7 +159,9 @@ class TestGrokProcessor:
         assert jvm[2]["proto"] == ""  # non-participating group → ''
         assert jvm[2]["rt"] == "9.75"
         assert jvm[3]["ip"] is None
-        py = rows_as_dicts(Grok(Engine="python", **kw)(text_df_factory(lines)))
+        py = rows_as_dicts(
+            Grok(**GROK_PATHS["deadline"], **kw)(text_df_factory(lines))
+        )
         for a, b in zip(jvm, py):
             for key in ("ip", "meth", "path", "code", "size", "ref", "ua", "rt"):
                 assert a[key] == b[key], (key, a, b)
@@ -170,24 +176,26 @@ class TestGrokProcessor:
             Match=["%{OPTM}"],
             ErrorClassKey="ec",
         )
-        for eng in ("jvm", "python"):
-            rows = rows_as_dicts(Grok(Engine=eng, **kw)(df))
+        for eng, path in GROK_PATHS.items():
+            rows = rows_as_dicts(Grok(**path, **kw)(df))
             assert [r["ec"] for r in rows] == ["", ""], eng
             assert rows[1]["path"] == "/y", eng
 
     def test_python_zero_capture_groups(self, text_df_factory):
-        """A Match pattern with no aliases must not crash the python engine
-        and must mark hit rows matched."""
+        """A Match pattern with no aliases must not crash either path and
+        must mark hit rows matched."""
         df = text_df_factory(["abc123", "!!!"])
-        rows = rows_as_dicts(
-            Grok(
-                Engine="python",
-                SourceKey="content",
-                Match=[r"%{WORD}"],
-                ErrorClassKey="ec",
-            )(df)
-        )
-        assert rows[0]["ec"] == "" and rows[1]["ec"] == "grok_parse_fail"
+        for eng, path in GROK_PATHS.items():
+            rows = rows_as_dicts(
+                Grok(
+                    **path,
+                    SourceKey="content",
+                    Match=[r"%{WORD}"],
+                    ErrorClassKey="ec",
+                )(df)
+            )
+            assert rows[0]["ec"] == "", eng
+            assert rows[1]["ec"] == "grok_parse_fail", eng
 
     def test_timeout_catastrophic_pattern(self, text_df_factory):
         """Catastrophic-backtracking pattern + long non-matching row must
@@ -198,7 +206,6 @@ class TestGrokProcessor:
         evil = "a" * 40 + "b"
         df = text_df_factory([evil, "aaa"])
         proc = Grok(
-            Engine="python",
             SourceKey="content",
             CustomPatterns={"EVIL": r"(a+)+$"},
             Match=["%{EVIL:x}"],
@@ -213,7 +220,7 @@ class TestGrokProcessor:
 
     def test_max_source_length_guard(self, text_df_factory):
         """Rows longer than MaxSourceLength are treated as unmatched in
-        BOTH engines without entering the regex."""
+        BOTH paths without entering the regex."""
         long_row = "k=" + "1" * 100
         df = text_df_factory(["a=1", long_row])
         kw = dict(
@@ -222,83 +229,16 @@ class TestGrokProcessor:
             ErrorClassKey="ec",
             MaxSourceLength=16,
         )
-        for eng in ("jvm", "python"):
-            rows = rows_as_dicts(Grok(Engine=eng, **kw)(df))
+        for eng, path in GROK_PATHS.items():
+            rows = rows_as_dicts(Grok(**path, **kw)(df))
             assert rows[0]["ec"] == "" and rows[0]["v"] == "1", eng
             assert rows[1]["ec"] == "grok_parse_fail" and rows[1]["v"] is None, eng
 
-    def test_python_re2_fast_path_selection(self):
-        """r6: the python engine's RE2 fast path engages exactly when every
-        compiled pattern is RE2-expressible; lookarounds (COMBINEDAPACHELOG
-        via TIME), atomic groups (WINPATH) and a configured timeout fall
-        back to the pandas path."""
-        plain = Grok(SourceKey="c", Match=[r"%{WORD:k}=%{INT:v}"])
-        assert plain._re2_patterns() is not None
-        apache = Grok(SourceKey="c", Match=["%{COMBINEDAPACHELOG}"])
-        assert apache._re2_patterns() is None
-        winpath = Grok(SourceKey="c", Match=[r"%{WINPATH:p}"])
-        assert winpath._re2_patterns() is None
-        timed = Grok(
-            SourceKey="c", Match=[r"%{WORD:k}=%{INT:v}"],
-            TimeoutMilliSeconds=100,
-        )
-        assert timed._re2_patterns() is None
-        # one RE2-hostile pattern in the Match list poisons the whole list
-        # (first-match-wins must run every pattern under ONE engine)
-        mixed = Grok(
-            SourceKey="c",
-            Match=[r"%{WORD:k}=%{INT:v}", "%{COMBINEDAPACHELOG}"],
-        )
-        assert mixed._re2_patterns() is None
-
-    def test_python_re2_translate_semantics(self):
-        """The translation keeps python-``re``'s trailing-``$`` semantics
-        (matches before one final newline) and names groups g1..gN."""
-        from loongcollector_spark.operators.grok import _re2_translate
-
-        assert _re2_translate(r"^(a)(b)$") == "^(?P<g1>a)(?P<g2>b)(?:\n)?$"
-        # class contents pass through untouched; leading ] is escaped
-        assert _re2_translate(r"[]a]") == r"[\]a]"
-        assert _re2_translate(r"[a$(]") == r"[a$(]"
-        # silent-divergence constructs are rejected
-        assert _re2_translate(r"a$b") is None  # $ not at end
-        assert _re2_translate(r"(?=x)a") is None
-        assert _re2_translate(r"(a)\1") is None
-        assert _re2_translate(r"a\Z") is None
-
-    def test_python_re2_matches_pandas_path(self, text_df_factory):
-        """Same Grok config, fast path vs forced pandas fallback: identical
-        rows, including trailing-newline sources, non-participating
-        optional groups, NULLs and unmatched rows."""
-        wide = (
-            "%{IPV4:ip} %{WORD:meth} %{URIPATH:path} %{INT:code}"
-            "(?: %{WORD:proto})?"
-        )
-        lines = [
-            "10.0.0.1 GET /x/y 200 http",
-            "10.0.0.3 PUT /q 204",          # optional group absent -> ''
-            "10.0.0.9 GET /n 200 tls\n",    # trailing newline, $ law
-            None,
-            "garbage",
-        ]
-        kw = dict(SourceKey="content", Match=[wide], IgnoreParseFailure=True)
-        fast = Grok(Engine="python", **kw)
-        assert fast._re2_patterns() is not None
-        slow = Grok(Engine="python", **kw)
-        slow._re2_patterns = lambda: None  # force the pandas path
-        df = text_df_factory(lines)
-        a = rows_as_dicts(fast(df))
-        b = rows_as_dicts(slow(df))
-        assert a == b
-        assert a[1]["proto"] == ""  # matched + non-participating = ''
-        assert a[2]["proto"] == "tls"  # $ matched before the final \n
-        assert a[4]["ip"] is None
-
     def test_ascii_classes_on_every_engine_path(self, text_df_factory):
-        """``\\w\\d\\s`` are ASCII classes on the jvm engine, the python RE2
-        path and both pandas fallbacks (an RE2-hostile pattern in the
-        Match list, a configured timeout): non-ASCII letters, digits and
-        spaces never match, whichever path runs."""
+        """``\\w\\d\\s`` are ASCII classes on the JVM path and the deadline
+        path, with a plain Match list and with one that holds a lookahead:
+        non-ASCII letters, digits and spaces never match, whichever path
+        runs."""
         lines = ["naïve 42", "ab 12", "x ٤٢", "plain 7"]
         want = [("ve", "42"), (None, None), (None, None), ("plain", "7")]
         kw = dict(
@@ -307,21 +247,35 @@ class TestGrokProcessor:
         )
         plain = [r"%{W:w}\s%{D:n}"]
         lookahead = plain + [r"(?=zzz)%{W:z}"]
-        engines = {
-            "jvm": Grok(Engine="jvm", Match=plain, **kw),
-            "python_re2": Grok(Engine="python", Match=plain, **kw),
-            "python_lookahead": Grok(Engine="python", Match=lookahead, **kw),
-            "python_timeout": Grok(
-                Engine="python", Match=plain, TimeoutMilliSeconds=1000, **kw
-            ),
-        }
-        assert engines["python_re2"]._re2_patterns() is not None
-        assert engines["python_lookahead"]._re2_patterns() is None
-        assert engines["python_timeout"]._re2_patterns() is None
         df = text_df_factory(lines)
-        for name, g in engines.items():
-            got = [(r["w"], r["n"]) for r in rows_as_dicts(g(df))]
-            assert got == want, name
+        for eng, path in GROK_PATHS.items():
+            for name, match in (("plain", plain), ("lookahead", lookahead)):
+                g = Grok(Match=match, **path, **kw)
+                got = [(r["w"], r["n"]) for r in rows_as_dicts(g(df))]
+                assert got == want, (eng, name)
+
+    def test_deadline_selects_the_python_path(self, text_df_factory):
+        """Through the config layer, ``TimeoutMilliSeconds > 0`` plans the
+        deadline path's Python UDF (the JVM regex cannot honour a per-log
+        deadline); the same config without it plans none. ``Engine`` is
+        not a config key."""
+        from loongcollector_spark.operators.base import compile_pipeline
+
+        df = text_df_factory(["a=1", "zz"])
+        cfg = {"Type": "processor_grok", "Match": [r"%{WORD:k}=%{INT:v}"],
+               "ErrorClassKey": "ec"}
+
+        def plan(entry):
+            out = compile_pipeline([entry])(df)
+            return out._jdf.queryExecution().executedPlan().toString(), out
+
+        timed, timed_df = plan({**cfg, "TimeoutMilliSeconds": 50})
+        plain, plain_df = plan(cfg)
+        assert "ArrowEvalPython" in timed
+        assert "EvalPython" not in plain
+        assert rows_as_dicts(timed_df) == rows_as_dicts(plain_df)
+        with pytest.raises(TypeError):
+            compile_pipeline([{**cfg, "Engine": "python"}])
 
 
 class TestSplits:
@@ -732,7 +686,7 @@ class TestGrokFullLibrary:
     """The full 78-entry standard pattern set
     (processor_grok_default_patterns.go parity, re-derived for Python
     re): every entry compiles, composites extract correctly, and the
-    JVM and python engines agree on COMBINEDAPACHELOG."""
+    JVM and deadline paths agree on COMBINEDAPACHELOG."""
 
     def test_all_patterns_compile_and_names_match_reference_set(self):
         import re as _re
@@ -781,18 +735,18 @@ class TestGrokFullLibrary:
         cols = ["idx", "clientip", "auth", "verb", "request", "response",
                 "bytes", "referrer", "agent"]
         outs = {}
-        for engine in ("jvm", "python"):
-            g = Grok(Match=["%{COMBINEDAPACHELOG}"], Engine=engine,
+        for engine, path in GROK_PATHS.items():
+            g = Grok(Match=["%{COMBINEDAPACHELOG}"], **path,
                      IgnoreParseFailure=True)
             outs[engine] = sorted(
                 tuple(r[c] for c in cols)
                 for r in g(df).select(*cols).collect()
             )
-        assert outs["jvm"] == outs["python"]
+        assert outs["jvm"] == outs["deadline"]
         byidx = {r[0]: r for r in outs["jvm"]}
         assert byidx[0][1] == "1.2.3.4" and byidx[0][5] == "200"
         # '-' bytes: the alternative matched, the bytes group did not
-        # participate → '' (both engines normalize to empty string)
+        # participate → '' (both paths normalize to empty string)
         assert byidx[1][3] == "POST" and byidx[1][6] == ""
         assert byidx[2][1] is None and byidx[3][1] is None
 

@@ -82,16 +82,35 @@ class TestParseRegex:
         proc = ParseRegexNative(SourceKey="content", Regex=r"(\w+)", Keys=["k"])
         assert proc(df).count() == 0
 
-    def test_python_engine_parity(self, text_df_factory):
-        df = text_df_factory(["value1\tvalue2", "nope"])
+    def test_non_ascii_word_class(self, text_df_factory):
+        """``\\w\\d`` are ASCII classes (the JVM regex): ``naïve`` is not a
+        word, so its row fails; an ASCII row in the same frame parses."""
+        df = text_df_factory(["naïve 42", "plain 7"])
         proc = ParseRegexNative(
-            SourceKey="content",
-            Regex=r"(\w+)\t(\w+)",
-            Keys=["k1", "k2"],
-            Engine="python",
+            SourceKey="content", Regex=r"(\w+) (\d+)", Keys=["w", "n"],
+            ErrorClassKey="ec",
         )
         rows = rows_as_dicts(proc(df))
-        assert len(rows) == 1 and rows[0]["k1"] == "value1"
+        assert [(r["w"], r["n"], r["ec"]) for r in rows] == [
+            (None, None, "parse_fail"), ("plain", "7", ""),
+        ]
+
+    def test_more_keys_than_groups_fails_every_row(self, text_df_factory):
+        """A regex with fewer capture groups than Keys fails every row
+        (decided at construction, regex.go:115-120) instead of failing
+        the job in ``regexp_extract``."""
+        df = text_df_factory(["x y", "nope"])
+        proc = ParseRegexNative(
+            SourceKey="content", Regex=r"(\w+) (\w+)", Keys=["x", "y", "z"],
+            ErrorClassKey="ec",
+        )
+        rows = rows_as_dicts(proc(df))
+        assert [r["ec"] for r in rows] == ["parse_fail", "parse_fail"]
+        assert all(r[k] is None for r in rows for k in ("x", "y", "z"))
+        with pytest.raises(TypeError):
+            ParseRegexNative(
+                SourceKey="content", Regex="(a)", Keys=["k"], Engine="python"
+            )
 
 
 class TestParseJson:

@@ -72,9 +72,10 @@ class TestParseTotality:
 
 
 class TestGrokEngineParity:
-    """The grok JVM (regexp_extract) and python (pandas str) engines must
-    agree row-for-row on the common regex-dialect subset the compiled
-    pattern library uses — fuzzed over byte soup near the grammar."""
+    """The grok JVM path (regexp_extract) and the per-log deadline path
+    (the ``regex`` module) must agree row-for-row on the common
+    regex-dialect subset the compiled pattern library uses — fuzzed over
+    byte soup near the grammar."""
 
     GROK_TEXTS = st.lists(
         st.one_of(
@@ -109,11 +110,11 @@ class TestGrokEngineParity:
         cols = ("idx", "k", "v", "ip", "verb", "path", "w", "n", "f", "ec")
         jvm = sorted(
             tuple(r[c] for c in cols)
-            for r in Grok(Engine="jvm", **kw)(df).collect()
+            for r in Grok(**kw)(df).collect()
         )
         py = sorted(
             tuple(r[c] for c in cols)
-            for r in Grok(Engine="python", **kw)(df).collect()
+            for r in Grok(TimeoutMilliSeconds=60_000, **kw)(df).collect()
         )
         assert jvm == py
 

@@ -371,6 +371,37 @@ class TestHotConversationSkew:
                 for r in op(sdf).collect()
             ] == want
 
+    def test_chunked_string_orderkey_equals_plain(self, spark):
+        """A non-numeric OrderKey chunks a row_number ordinal over its
+        range 1 .. n: a 23-row group at ChunkRows=7 splits into
+        ceil(23 / 7) = 4 chunks, and every FSM mode gives the plain
+        path's output."""
+        import random
+
+        from loongcollector_spark.operators.splits import MergeMultilineLog
+
+        rng = random.Random(11)
+        df = spark.createDataFrame(
+            [("h", f"k{i:02d}", rng.choice(["S a", "c b", "E c", "x d"]))
+             for i in range(23)],
+            "src string, off string, content string",
+        )
+        for mode in (
+            dict(StartPattern=r"^S", EndPattern=r"^E"),
+            dict(StartPattern=r"^S", ContinuePattern=r"^c"),
+            dict(ContinuePattern=r"^c", EndPattern=r"^E"),
+        ):
+            kw = dict(SourceKey="content", GroupKey="src", OrderKey="off",
+                      **mode)
+            out = MergeMultilineLog(ChunkRows=7, **kw)(df)
+            rows = [(r.off, r.content, r.n_merged) for r in out.collect()]
+            want = [
+                (r.off, r.content, r.n_merged)
+                for r in MergeMultilineLog(**kw)(df).collect()
+            ]
+            assert sorted(rows) == sorted(want), mode
+            assert _pandas_rows(out, "f0") == 4, mode
+
     def test_chunked_auto_routes_by_skew(self, spark, monkeypatch):
         """ChunkRows='auto': below the hot-group threshold no row takes
         the chunk machinery; above it, auto sizes the group's chunks from
